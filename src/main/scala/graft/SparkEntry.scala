@@ -77,11 +77,11 @@ object SparkEntry {
     // all hash-checked against staged sequential gold
     "kg_mentions_bidir_slice" -> ((s, dir) => {
       val _ = KgStage.stage(s, dir)
-      Eval.sliceVariantPred(s, dir, "bidirectional")
+      Eval.sliceVariantPred(s, dir, Mentions.Variant.Bidirectional)
     }),
     "kg_mentions_ml_slice" -> ((s, dir) => {
       val _ = KgStage.stage(s, dir)
-      Eval.sliceVariantPred(s, dir, "multilabel")
+      Eval.sliceVariantPred(s, dir, Mentions.Variant.MultiLabel)
     }),
     // N12 contextual decoder: article-window grouping (one uniform shuffle)
     // + pooled document context, vs the staged sequential gold
@@ -130,12 +130,12 @@ object SparkEntry {
     "kg_mentions_bidir" -> ((s, dir) => {
       val _ = KgStage.stage(s, dir)
       Mentions.detectVariant(DocGen.docs(s, dir), modelBc(s, dir),
-        Eval.vwBc(s, ModelConfig()), "bidirectional").toDF()
+        Eval.vwBc(s, ModelConfig()), Mentions.Variant.Bidirectional).toDF()
     }),
     "kg_mentions_ml" -> ((s, dir) => {
       val _ = KgStage.stage(s, dir)
       Mentions.detectVariant(DocGen.docs(s, dir), modelBc(s, dir),
-        Eval.vwBc(s, ModelConfig()), "multilabel").toDF()
+        Eval.vwBc(s, ModelConfig()), Mentions.Variant.MultiLabel).toDF()
     }),
     "kg_dict" -> ((s, dir) => AliasDict.build(DocGen.docs(s, dir))),
     "kg_linked" -> ((s, dir) => {

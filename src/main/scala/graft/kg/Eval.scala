@@ -281,14 +281,14 @@ object Eval {
       modelBc(spark, sfDir, cfg), vwBc(spark, cfg)).toDF()
   }
 
-  /** Variant detection (N6 "bidirectional" / N18 "multilabel") over the eval
+  /** Variant detection (N6 bidirectional / N18 multi-label) over the eval
     * slice — compared by the driver gate against the staged sequential runs.
     */
-  def sliceVariantPred(spark: SparkSession, sfDir: String, mode: String,
+  def sliceVariantPred(spark: SparkSession, sfDir: String, variant: Mentions.Variant,
                        cfg: ModelConfig = ModelConfig()): DataFrame = {
     val docs = sliceDocs(spark, sfDir)
     Mentions.detectVariant(docs, modelBc(spark, sfDir, cfg),
-      vwBc(spark, cfg), mode).toDF()
+      vwBc(spark, cfg), variant).toDF()
   }
 
   /** N12 contextual decoder over the eval slice: distributed article-window

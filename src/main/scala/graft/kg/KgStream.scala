@@ -1,7 +1,5 @@
 package graft.kg
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -13,7 +11,7 @@ import graft.core.ModelConfig
   *
   * Split follows the classic ingest/compact design:
   *   - STREAMING (this file, stateless, append-mode): per-doc span assembly,
-  *     Pyramid mention detection (`mapPartitions`, broadcast model), entity
+  *     Pyramid mention detection (`Mentions.detect`, broadcast model), entity
   *     linking (stream-static broadcast join against the alias dictionary).
   *     Every stage is per-row/per-partition, so the stream needs no state
   *     store and scales like the batch mention stage.
@@ -63,29 +61,15 @@ object KgStream {
       .select($"doc_id".cast("long").as[Long]).orderBy("doc_id")
       .limit(Eval.EvalSliceDocs).collect()
 
-    // file-stream source needs a directory; stage a symlink (ops.Streaming)
-    val dir = Files.createTempDirectory("graft_kg_stream_src")
-    val link = dir.resolve("documents.parquet")
-    Files.createSymbolicLink(link, Paths.get(s"$sfDir/documents.parquet"))
-    link.toFile.deleteOnExit(); dir.toFile.deleteOnExit()
-
+    val src = graft.ops.Streaming.sourceDir("graft_kg_stream_src", s"$sfDir/documents.parquet")
     val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docsStream = spark.readStream.schema(schema).parquet(dir.toString)
+    val docsStream = spark.readStream.schema(schema).parquet(src)
       // slice filter pushed to the scan; InSet over 200 ids
       .where(col("doc_id").cast("long").isin(sliceIds.map(Long.box).toIndexedSeq: _*))
       .select($"doc_id".cast("long").as[Long], $"text".as[String])
       .map { case (id, text) => DocGen.assemble(DocGen.docIdOf(id), text) }
 
-    // Mentions.detect minus the `.rdd` partition probe (illegal on a
-    // streaming Dataset); the explicit repartition spreads each micro-batch
-    // across the executor cores before the compute-bound pyramid stage —
-    // file-source splits alone track arrival-file count, not core count
-    val mentions = docsStream.repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-        val m = bc.value
-        val inf = new graft.core.PyramidInference(m.weights, m.vocab)
-        it.flatMap(doc => Mentions.detectDoc(doc, inf, m.codec))
-      }.toDF()
+    val mentions = Mentions.detect(docsStream, bc).toDF()
 
     val q = Link.link(mentions, dict)
       .writeStream.outputMode("append")
@@ -139,19 +123,8 @@ object KgStream {
       .parquet(srcDir)
       .select($"doc_id".as[Long], $"text".as[String])
       .map { case (id, text) => DocGen.assemble(DocGen.docIdOf(id), text) }
-      // per-micro-batch parallelism otherwise equals the batch's FILE count
-      // (a handful of small arrival files → a handful of partitions), which
-      // starves the compute-bound pyramid stage on a wide executor — the
-      // streaming edition of the 1-split trap Mentions.detect repartitions
-      // around in batch. StreamBench measured 5.4x tokens/s from this one
-      // exchange (14.6k → 78.8k at amplify-32, vs 100.3k for pure batch).
-      .repartition(spark.sparkContext.defaultParallelism)
 
-    val mentions = docsStream.mapPartitions { it =>
-      val m = bc.value
-      val inf = new graft.core.PyramidInference(m.weights, m.vocab)
-      it.flatMap(doc => Mentions.detectDoc(doc, inf, m.codec))
-    }.toDF()
+    val mentions = Mentions.detect(docsStream, bc).toDF()
 
     val writer = Link.link(mentions, dict)
       .writeStream.outputMode("append")

@@ -1,17 +1,30 @@
 package graft.kg
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 
 /** Stage 1 — mention detection: `Dataset[PyramidDoc].mapPartitions(pyramid
   * inference)` → `Dataset[Mention]` (SURVEY.md §7 stage 1).
   *
+  * One operator serves every entry point, batch and streaming: a per-task
+  * [[TaskEngine]] reads the model broadcast (and the variant broadcast, when
+  * given) and builds the inference engines once per partition; each entry
+  * point supplies only its input shape and its span decoder —
+  *   - [[detect]] / [[detectVariant]]: `SparkUtil.widen`, then a per-document
+  *     decoder (base, or a sealed [[Variant]]);
+  *   - [[detectLm]] / [[detectSt]]: a doc_id join of the context table, then
+  *     the same per-document operator;
+  *   - [[detectContextual]] / [[detectContextualBucketed]]: the docs of one
+  *     article at a time (a `groupByKey` shuffle, or consecutive rows of the
+  *     article-bucketed layout), decoded by one shared routine.
+  *
   * Scale notes: the only cluster-wide state is one broadcast of (weights,
-  * vocab, codec) — a few MB, fanned out once per executor. The transform is
-  * partition-preserving (zero shuffle); per-task cost is pure fp32 compute,
-  * so throughput scales linearly with cores until the parquet scan saturates.
+  * vocab, codec) — a few MB, fanned out once per executor. Past the widening
+  * exchange the transform is partition-preserving; per-task cost is pure
+  * fp32 compute, so throughput scales linearly with cores until the parquet
+  * scan saturates.
   */
 object Mentions {
   val Kinds: Seq[String] = Seq("DNA", "RNA", "protein", "cell_line", "cell_type")
@@ -81,45 +94,68 @@ object Mentions {
     }
   }
 
-  /** The mapPartitions transform: one PyramidInference per task (scratch
-    * buffers reused across the partition's documents), streaming iterator in,
-    * streaming iterator out.
-    *
-    * The stage is CPU-bound, so parallelism = partition count. A 100 TB scan
-    * has thousands of splits, but a small/compacted input can arrive as ONE
-    * split and would serialize the whole corpus through one core — defend by
-    * widening to the cluster's parallelism when the input is narrower.
+  /** Variant decoders of [[detectVariant]] (N6 bidirectional single-label,
+    * N8/N18 sigmoid multi-label).
     */
-  def detect(docs: Dataset[PyramidDoc], bcModel: Broadcast[Model]): Dataset[Mention] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.core.SparkUtil.widen(docs).mapPartitions { it =>
-      val m = bcModel.value
-      val inf = new PyramidInference(m.weights, m.vocab)
-      it.flatMap(doc => detectDoc(doc, inf, m.codec))
-    }
+  sealed trait Variant
+  object Variant {
+    case object Bidirectional extends Variant
+    case object MultiLabel extends Variant
   }
 
-  /** Variant detection modes (N6 bidirectional single-label, N8/N18 sigmoid
-    * multi-label) as the same zero-shuffle mapPartitions transform; the
+  private def decoder(variant: Variant, vi: PyramidVariantInference,
+                      codec: LabelCodec): Array[String] => IndexedSeq[TokSpan] = variant match {
+    case Variant.Bidirectional => vi.detectBidirectional(_, codec)
+    case Variant.MultiLabel    => vi.detectMultiLabel(_, codec)
+  }
+
+  /** The per-task builder behind every distributed entry point. Only the
+    * broadcast handles are serialized; each task deserializes its own copy,
+    * so the lazy fields read the broadcasts and build the inference engines
+    * once per partition, and their scratch buffers are reused across the
+    * partition's documents. Lazy rather than built at partition start
+    * because `flatMapGroups` has no per-partition hook. `vw` and `vi` need
+    * the variant broadcast.
+    */
+  private final class TaskEngine(bcModel: Broadcast[Model], bcVar: Option[Broadcast[VariantWeights]])
+      extends Serializable {
+    @transient lazy val model: Model = bcModel.value
+    @transient lazy val inf: PyramidInference = new PyramidInference(model.weights, model.vocab)
+    @transient lazy val vw: VariantWeights = bcVar.get.value
+    @transient lazy val vi: PyramidVariantInference = new PyramidVariantInference(inf, vw)
+  }
+
+  /** The detection operator: `mapPartitions` with one [[TaskEngine]] per
+    * task; `perTask` runs once per partition and returns the per-row
+    * detection.
+    */
+  private def perDoc[T](rows: Dataset[T], bcModel: Broadcast[Model],
+                        bcVar: Option[Broadcast[VariantWeights]])(
+      perTask: TaskEngine => T => Seq[Mention]): Dataset[Mention] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val eng = new TaskEngine(bcModel, bcVar)
+    rows.mapPartitions(it => it.flatMap(perTask(eng)))
+  }
+
+  /** Stage-1 detection with the base decoder. The stage is CPU-bound, so
+    * parallelism = partition count; `SparkUtil.widen` spreads a narrow input
+    * (one split, or a streaming micro-batch) over the cluster's cores.
+    */
+  def detect(docs: Dataset[PyramidDoc], bcModel: Broadcast[Model]): Dataset[Mention] =
+    perDoc(graft.core.SparkUtil.widen(docs), bcModel, None) { e =>
+      doc => detectDoc(doc, e.inf, e.model.codec)
+    }
+
+  /** Variant detection: the same transform with the variant's decoder; the
     * variant weight bundle rides the same broadcast pattern.
     */
   def detectVariant(docs: Dataset[PyramidDoc], bcModel: Broadcast[Model],
-                    bcVar: Broadcast[VariantWeights], mode: String): Dataset[Mention] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.core.SparkUtil.widen(docs).mapPartitions { it =>
-      val m = bcModel.value
-      val inf = new PyramidInference(m.weights, m.vocab)
-      val vi = new PyramidVariantInference(inf, bcVar.value)
-      val spansOf: Array[String] => IndexedSeq[TokSpan] = mode match {
-        case "bidirectional" => toks => vi.detectBidirectional(toks, m.codec)
-        case "multilabel"    => toks => vi.detectMultiLabel(toks, m.codec)
-        case other           => throw new IllegalArgumentException(s"unknown variant mode $other")
-      }
-      it.flatMap(doc => detectDocWith(doc, spansOf))
+                    bcVar: Broadcast[VariantWeights], variant: Variant): Dataset[Mention] =
+    perDoc(graft.core.SparkUtil.widen(docs), bcModel, Some(bcVar)) { e =>
+      val decode = decoder(variant, e.vi, e.model.codec)
+      doc => detectDocWith(doc, decode)
     }
-  }
 
   // ------------------------------------------------------------------ N14
 
@@ -150,29 +186,36 @@ object Mentions {
     import spark.implicits._
     val lmPerDoc = lm.groupBy("doc_id")
       .agg(sort_array(collect_list(struct(col("pos"), col("emb")))).as("lms"))
-    val joined = docs.toDF().join(lmPerDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("spans"), col("lms"))
-      .as[LmDocRow]
-    // unconditional widen (see detectSt): no .rdd partition probe on a join
-    val wide = joined.repartition(spark.sparkContext.defaultParallelism)
-    wide.mapPartitions { it =>
-      val m = bcModel.value
-      val inf = new PyramidInference(m.weights, m.vocab)
-      val vi = new PyramidVariantInference(inf, bcVar.value)
+    perDoc(joinContext[LmDocRow](docs, lmPerDoc, "lms"), bcModel, Some(bcVar)) { e =>
       val dim = VariantWeights.LmDim
-      it.flatMap { row =>
-        val doc = PyramidDoc(row.doc_id, row.spans)
+      row => {
         val lms = if (row.lms == null) Array.empty[LmTok] else row.lms
-        detectDocWith(doc, { toks =>
+        detectDocWith(PyramidDoc(row.doc_id, row.spans), { toks =>
           val flat = new Array[Float](toks.length * dim)
           lms.foreach { t =>
             if (t.pos >= 0 && t.pos < toks.length)
               System.arraycopy(t.emb, 0, flat, t.pos * dim, dim)
           }
-          vi.detectLm(toks, flat, m.codec)
+          e.vi.detectLm(toks, flat, e.model.codec)
         })
       }
     }
+  }
+
+  /** The shared prelude of [[detectLm]] and [[detectSt]]: left-join the
+    * per-document context column `ctxCol` of `ctx` onto the docs on doc_id,
+    * then widen.
+    */
+  private def joinContext[R: Encoder](docs: Dataset[PyramidDoc], ctx: DataFrame,
+                                      ctxCol: String): Dataset[R] = {
+    val spark = docs.sparkSession
+    val joined = docs.toDF().join(ctx, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("spans"), col(ctxCol))
+      .as[R]
+    // unconditional widen: probing joined.rdd.getNumPartitions would force an
+    // extra RDD planning of the join, and the pre-AQE count is unreliable
+    // anyway; the context tables are slice-sized, so the repartition is cheap
+    joined.repartition(spark.sparkContext.defaultParallelism)
   }
 
   // ------------------------------------------------------------ N12 / N13
@@ -204,23 +247,13 @@ object Mentions {
     }
   }
 
-  /** flatMapGroups handler as a Serializable class: broadcast handles are
-    * serialized once; the inference engines are `@transient lazy` so each
-    * TASK builds them once and reuses them across its groups (a per-group
-    * allocation would churn the scratch buffers ~|articles| times).
+  /** The contextual decoder over one article: `sorted` is the article's
+    * documents in doc_id order. Shared by the shuffle and bucketed paths.
     */
-  private final class CtxGroupDetect(bcModel: Broadcast[Model], bcVar: Broadcast[VariantWeights])
-      extends ((Long, Iterator[PyramidDoc]) => Iterator[Mention]) with Serializable {
-    @transient private lazy val m = bcModel.value
-    @transient private lazy val vi =
-      new PyramidVariantInference(new PyramidInference(m.weights, m.vocab), bcVar.value)
-    def apply(aid: Long, it: Iterator[PyramidDoc]): Iterator[Mention] = {
-      val sorted = it.toIndexedSeq.sortBy(_.doc_id)
-      ctxWindows(sorted).iterator.flatMap { case (d, pre, post) =>
-        detectDocWith(d, toks => vi.detectContextual(toks, pre, post, m.codec))
-      }
+  private def articleMentions(e: TaskEngine, sorted: IndexedSeq[PyramidDoc]): Iterator[Mention] =
+    ctxWindows(sorted).iterator.flatMap { case (d, pre, post) =>
+      detectDocWith(d, toks => e.vi.detectContextual(toks, pre, post, e.model.codec))
     }
-  }
 
   /** N12 contextual detection: ONE shuffle keyed on article_id (uniform id
     * ranges — no skew; a hot key is impossible since an article is exactly
@@ -233,8 +266,9 @@ object Mentions {
                        bcVar: Broadcast[VariantWeights]): Dataset[Mention] = {
     val spark = docs.sparkSession
     import spark.implicits._
+    val eng = new TaskEngine(bcModel, Some(bcVar))
     docs.groupByKey(d => articleIdOf(d.doc_id))
-      .flatMapGroups(new CtxGroupDetect(bcModel, bcVar))
+      .flatMapGroups((_, it) => articleMentions(eng, it.toIndexedSeq.sortBy(_.doc_id)))
   }
 
   // -------------------------------------------- N12 article-bucketed layout
@@ -289,9 +323,8 @@ object Mentions {
                                bcModel: Broadcast[Model],
                                bcVar: Broadcast[VariantWeights]): Dataset[Mention] = {
     import spark.implicits._
+    val eng = new TaskEngine(bcModel, Some(bcVar))
     spark.read.parquet(path).as[PyramidDoc].mapPartitions { it =>
-      val m = bcModel.value
-      val vi = new PyramidVariantInference(new PyramidInference(m.weights, m.vocab), bcVar.value)
       // runtime guard for the one-row-group precondition, enforced at EVERY
       // row transition, not just the partition head: Spark packs multiple
       // file chunks into one read partition (size-sorted bins), so a bucket
@@ -317,15 +350,13 @@ object Mentions {
         d
       }
       val buf = guarded.buffered
-      new Iterator[Seq[Mention]] {
+      new Iterator[Iterator[Mention]] {
         def hasNext: Boolean = buf.hasNext
-        def next(): Seq[Mention] = {
+        def next(): Iterator[Mention] = {
           val aid = articleIdOf(buf.head.doc_id)
           val group = scala.collection.mutable.ArrayBuffer.empty[PyramidDoc]
           while (buf.hasNext && articleIdOf(buf.head.doc_id) == aid) group += buf.next()
-          ctxWindows(group.toIndexedSeq).flatMap { case (d, pre, post) =>
-            detectDocWith(d, toks => vi.detectContextual(toks, pre, post, m.codec))
-          }
+          articleMentions(eng, group.toIndexedSeq)
         }
       }.flatten
     }
@@ -352,22 +383,13 @@ object Mentions {
                bcVar: Broadcast[VariantWeights]): Dataset[Mention] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val joined = docs.toDF().join(st.select(col("doc_id"), col("emb").as("st")), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("spans"), col("st"))
-      .as[StDocRow]
-    // unconditional widen: probing joined.rdd.getNumPartitions would force an
-    // extra RDD planning of the join, and the pre-AQE count is unreliable
-    // anyway; the context tables are slice-sized, so the repartition is cheap
-    val wide = joined.repartition(spark.sparkContext.defaultParallelism)
-    wide.mapPartitions { it =>
-      val m = bcModel.value
-      val inf = new PyramidInference(m.weights, m.vocab)
-      val vi = new PyramidVariantInference(inf, bcVar.value)
-      val dim = bcVar.value.ctxDim
-      it.flatMap { row =>
-        val doc = PyramidDoc(row.doc_id, row.spans)
+    val stPerDoc = st.select(col("doc_id"), col("emb").as("st"))
+    perDoc(joinContext[StDocRow](docs, stPerDoc, "st"), bcModel, Some(bcVar)) { e =>
+      val dim = e.vw.ctxDim
+      row => {
         val ctx = if (row.st == null) new Array[Float](dim) else row.st
-        detectDocWith(doc, toks => vi.detectWithContext(toks, ctx, m.codec))
+        detectDocWith(PyramidDoc(row.doc_id, row.spans),
+          toks => e.vi.detectWithContext(toks, ctx, e.model.codec))
       }
     }
   }

@@ -13,6 +13,20 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object Streaming {
 
+  /** A file stream source reads a DIRECTORY: stage one in the temp dir
+    * holding a symlink to `file`, deleted at JVM exit. The JVM deletes in
+    * reverse order of registration, so the directory is registered first and
+    * the link goes before it.
+    */
+  private[graft] def sourceDir(prefix: String, file: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    dir.toFile.deleteOnExit()
+    val target = java.nio.file.Paths.get(file)
+    val link = java.nio.file.Files.createSymbolicLink(dir.resolve(target.getFileName), target)
+    link.toFile.deleteOnExit()
+    dir.toString
+  }
+
   /** shared transform: 5-minute tumbling window per event_type. */
   def windowedAgg(events: DataFrame): DataFrame =
     events
@@ -29,12 +43,8 @@ object Streaming {
     */
   def streamed(spark: SparkSession, sfDir: String, name: String = "stream_out"): DataFrame = {
     val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    // the file stream source requires a DIRECTORY; stage a symlink dir
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_src")
-    val link = dir.resolve("events.parquet")
-    java.nio.file.Files.createSymbolicLink(link, java.nio.file.Paths.get(s"$sfDir/events.parquet"))
-    link.toFile.deleteOnExit(); dir.toFile.deleteOnExit()
-    val src = spark.readStream.schema(schema).parquet(dir.toString)
+    val src = spark.readStream.schema(schema)
+      .parquet(sourceDir("graft_stream_src", s"$sfDir/events.parquet"))
       // watermarks require TIMESTAMP (LTZ); the parquet column is NTZ.
       // Session TZ is pinned to UTC so the cast is deterministic.
       .withColumn("ts", col("ts").cast("timestamp"))
@@ -74,11 +84,8 @@ object Streaming {
     val batchEvents = spark.read.parquet(s"$sfDir/events.parquet")
     val schema = batchEvents.schema
     withAdaptiveStateParts(spark, batchEvents) {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess_src")
-    val link = dir.resolve("events.parquet")
-    java.nio.file.Files.createSymbolicLink(link, java.nio.file.Paths.get(s"$sfDir/events.parquet"))
-    link.toFile.deleteOnExit(); dir.toFile.deleteOnExit()
-    val src = spark.readStream.schema(schema).parquet(dir.toString)
+    val src = spark.readStream.schema(schema)
+      .parquet(sourceDir("graft_sess_src", s"$sfDir/events.parquet"))
       .withColumn("ts", col("ts").cast("timestamp"))
       .withWatermark("ts", "10 minutes")
       .select(col("user_id").cast("long").as("user_id"), col("ts"),

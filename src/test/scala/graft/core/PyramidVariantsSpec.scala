@@ -254,13 +254,13 @@ class PyramidVariantsSpec extends AnyFunSuite {
     val bcM = spark.sparkContext.broadcast(model)
     val bcV = spark.sparkContext.broadcast(vw)
     val someDocs = docs.orderBy("doc_id").limit(120).repartition(7)
-    for (mode <- Seq("bidirectional", "multilabel")) {
+    for (mode <- Seq(Mentions.Variant.Bidirectional, Mentions.Variant.MultiLabel)) {
       val got = Mentions.detectVariant(someDocs, bcM, bcV, mode)
         .collect().groupBy(_.doc_id).map { case (k, v) => k -> v.sortBy(_.order).toSeq }
       val vi = newVi()
       val want = someDocs.collect().toSeq.map { d =>
         d.doc_id -> Mentions.detectDocWith(d, toks =>
-          if (mode == "bidirectional") vi.detectBidirectional(toks, model.codec)
+          if (mode == Mentions.Variant.Bidirectional) vi.detectBidirectional(toks, model.codec)
           else vi.detectMultiLabel(toks, model.codec)).toSeq
       }.filter(_._2.nonEmpty).toMap
       assert(got == want, s"mode $mode")

@@ -196,14 +196,14 @@ class EvalSpec extends AnyFunSuite {
   test("repeated slice invocations hold a bounded number of model broadcasts") {
     // warm the registry slots this mix of entry points uses
     Eval.slicePred(spark, sfDir)
-    Eval.sliceVariantPred(spark, sfDir, "bidirectional")
+    Eval.sliceVariantPred(spark, sfDir, Mentions.Variant.Bidirectional)
     val before = graft.core.BcRegistry.liveCount
     // a long session (Bench's interleaved passes) re-invokes these dozens of
     // times; each call must REUSE the registered broadcasts, not mint new
     // ones — the pre-registry code leaked one multi-MB broadcast per call
     (1 to 4).foreach { _ =>
       Eval.slicePred(spark, sfDir)
-      Eval.sliceVariantPred(spark, sfDir, "bidirectional")
+      Eval.sliceVariantPred(spark, sfDir, Mentions.Variant.Bidirectional)
       Eval.sliceCtxPred(spark, sfDir) // same model + vw slots as the two above
       Eval.sliceLinked(spark, sfDir)
     }
