@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.SparkUtil.SparkStringOrdering
 
 /** Stage 3 — canonicalization: connected components over candidate-entity
   * edges, via alternating large-star / small-star (Kiveris et al., "Connected
@@ -92,6 +93,8 @@ object Canonical {
     */
   final case class CcStats(edgesIn: Long, usedDriverPath: Boolean, iterations: Int)
 
+  /** Throws IllegalStateException when the star loop is still changing after
+    * `maxIter` rounds, instead of returning a partial labeling. */
   def connectedComponentsWithStats(edges0: DataFrame, maxIter: Int = 20,
                                    driverThreshold: Long = DriverCcThreshold): (DataFrame, CcStats) = {
     var edges = edges0.select("src", "dst").where(col("src") =!= col("dst")).distinct()
@@ -110,6 +113,8 @@ object Canonical {
       fp = nfp
       i += 1
     }
+    if (!converged) throw new IllegalStateException(
+      s"connected components did not converge: $nIn edges, $i star rounds (maxIter = $maxIter)")
     // star forest: edges point child -> root; roots map to themselves
     val out = edges.select(col("src").as("entity_id"), col("dst").as("canonical_id"))
       .unionAll(edges.select(col("dst").as("entity_id"), col("dst").as("canonical_id")))
@@ -119,8 +124,9 @@ object Canonical {
 
   /** small-graph fast path: collect + union-find with min-root, one job in,
     * one local DataFrame out. Same output contract as the star loop
-    * (component minimum as canonical id) — KgPipelineSpec pins both paths
-    * against GoldRef's independent union-find.
+    * (component minimum as canonical id, in Spark's string order — the order
+    * the loop's `min`/`least` use) — KgPipelineSpec pins both paths against
+    * GoldRef's independent union-find.
     */
   private def driverUnionFind(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
@@ -136,7 +142,7 @@ object Canonical {
     }
     pairs.foreach { case (a, b) =>
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      if (ra != rb) { if (SparkStringOrdering.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
     }
     val nodes = pairs.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
     nodes.iterator.map(n => (n, find(n))).toSeq.sortBy(_._1)

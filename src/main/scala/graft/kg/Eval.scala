@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{BcRegistry, Fmt, ModelConfig, VariantWeights}
+import graft.core.SparkUtil.materialize
 
 /** Evaluation surface (SURVEY.md §2.6 M3-M8, M13; §2.7 E3): distributed
   * confusion counting + the reference's exact P/R/F1 math.
@@ -69,17 +70,20 @@ object Eval {
     val spark = pred0.sparkSession
     import spark.implicits._
     // each side feeds THREE joins — persist so an expensive upstream (the
-    // pyramid-inference subtree) materializes once, not per join branch
+    // pyramid-inference subtree) materializes once, not per join branch;
+    // released afterwards only where this call did the caching
+    val owned = Seq(pred0, gold0).filter(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
     val pred = pred0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val gold = gold0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cols = pred.columns.toSeq
     val tp = pred.join(gold, cols).groupBy("kind").agg(count(lit(1)).as("tp"))
     val fp = pred.join(gold, cols, "left_anti").groupBy("kind").agg(count(lit(1)).as("fp"))
     val fn = gold.join(pred, cols, "left_anti").groupBy("kind").agg(count(lit(1)).as("fn"))
-    kinds.toDF("kind")
+    val out = kinds.toDF("kind")
       .join(tp, Seq("kind"), "left").join(fp, Seq("kind"), "left").join(fn, Seq("kind"), "left")
       .select(col("kind"), coalesce(col("tp"), lit(0L)).as("tp"),
         coalesce(col("fp"), lit(0L)).as("fp"), coalesce(col("fn"), lit(0L)).as("fn"))
+    materialize(out, owned: _*)
   }
 
   /** The reference's `calculate_metrics` (`utils/metrics.py:214-258`),
@@ -178,13 +182,14 @@ object Eval {
         !(col("a.start_tok") <= col("b.start_tok") && col("b.end_tok") <= col("a.end_tok")))
       .select(col("a.doc_id").as("doc_id"), col("a.mention_id").as("mention_id")).distinct()
       .withColumn("rel", lit("overlapping"))
-    m.select("doc_id", "mention_id")
+    val out = m.select("doc_id", "mention_id")
       .join(nested.unionByName(overlap), Seq("doc_id", "mention_id"), "left")
       .groupBy("doc_id").agg(
         count(lit(1)).as("n_mentions"),
         sum(when(col("rel") === "nested", 1).otherwise(0)).as("n_nested"),
         sum(when(col("rel") === "overlapping", 1).otherwise(0)).as("n_overlapping"),
         sum(when(col("rel").isNull, 1).otherwise(0)).as("n_flat"))
+    materialize(out, m)
   }
 
   // ---------------------------------------------------------------- E3
@@ -357,14 +362,16 @@ object Eval {
     spark.read.parquet(s"${KgStage.stage(spark, sfDir)}/gold_mentions.parquet")
 
   /** E3 (`trainer.py:150-181`): infer → decode → span-set compare → report. */
-  def spanPrf(spark: SparkSession, sfDir: String): DataFrame = {
-    val pred = slicePred(spark, sfDir)
-    metrics(confusion(spanRows(pred), spanRows(stagedGold(spark, sfDir)), Mentions.Kinds))
-  }
+  def spanPrf(spark: SparkSession, sfDir: String): DataFrame =
+    prf(spanRows(slicePred(spark, sfDir)), spanRows(stagedGold(spark, sfDir)))
 
   /** M4 path: BIOES per-token confusion → metrics. */
-  def bioesPrf(spark: SparkSession, sfDir: String): DataFrame = {
-    val pred = slicePred(spark, sfDir)
-    metrics(confusion(bioesRows(pred), bioesRows(stagedGold(spark, sfDir)), Mentions.Kinds))
+  def bioesPrf(spark: SparkSession, sfDir: String): DataFrame =
+    prf(bioesRows(slicePred(spark, sfDir)), bioesRows(stagedGold(spark, sfDir)))
+
+  /** confusion → metrics, releasing the counts once [[metrics]] collected them */
+  private def prf(pred: DataFrame, gold: DataFrame): DataFrame = {
+    val counts = confusion(pred, gold, Mentions.Kinds)
+    try metrics(counts) finally counts.unpersist()
   }
 }

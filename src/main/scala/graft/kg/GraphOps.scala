@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.SparkUtil.{adaptiveParts, materialize, SparkStringOrdering}
 
 /** Stage 5 — graph analytics over the materialized (subj, pred, obj) triple
   * table: the consumers the north rule's "graph materialize" step exists to
@@ -25,6 +26,8 @@ import org.apache.spark.sql.functions._
   *  - two-hop reach is bounded to the top-[[GraphOps.TopHubs]] hubs
   *    (deterministic tie-break), so the quadratic second hop never fans out
   *    from every node; the hub list is driver-sized and broadcast.
+  *  - partition counts, cache lifetime and the driver fast paths' string
+  *    order follow the [[graft.core.SparkUtil]] rules.
   */
 object GraphOps {
   /** PageRank damping factor (Brin & Page 1998's standard 0.85). */
@@ -40,26 +43,6 @@ object GraphOps {
   def coEdges(triples: DataFrame): DataFrame =
     triples.where(col("pred") === "co_occurs_with")
       .select(col("subj").as("src"), col("obj").as("dst"))
-
-  /** Partition count for the persisted / checkpointed loop-invariant tables
-    * of the iterative ops, derived from the INPUT SIZE ESTIMATE (guide §2:
-    * scale-adaptive partitioning, not a constant tuned for one deployment):
-    * planner stats give the byte estimate with zero extra jobs, targeting
-    * ~64 MB per partition, floored at 1 and capped at 4× the cluster
-    * parallelism. On the gate-scale graph (hundreds of edges) every
-    * iteration then runs 1-task jobs instead of 32 near-empty tasks per
-    * exchange — the explicit `repartition(col(...))`/localCheckpoint calls
-    * are the one place AQE's own coalescing cannot reach (AQE only resizes
-    * ENSURE_REQUIREMENTS exchanges, and checkpointed RDDs pin their
-    * partitioning for every later round).
-    */
-  private[kg] def adaptiveParts(df: DataFrame): Int = {
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val target = 64L * 1024 * 1024
-    val cap = df.sparkSession.sparkContext.defaultParallelism.toLong * 4
-    val p = (bytes / target).min(BigInt(cap)).max(BigInt(1))
-    p.toInt
-  }
 
   /** Per-entity degree profile over the materialized graph: co-occurrence
     * out/in degree plus document frequency (`mentioned_in` fan-out). Three
@@ -115,16 +98,7 @@ object GraphOps {
     }
     val out = ranks
       .select(col("id").as("entity_id"), round(col("rank") * n, 4).as("rank_norm"))
-      .persist()
-    // materialize the (one-row-per-node) result eagerly so the two LARGE
-    // loop-invariant caches can be released before returning — otherwise a
-    // long session that never clears the SQL cache keeps the full edge table
-    // pinned in storage memory for every later query. The caller may
-    // unpersist the returned Dataset when done (clearCache also works).
-    out.count()
-    nodes.unpersist()
-    edges.unpersist()
-    out
+    materialize(out, nodes, edges)
   }
 
   /** Distinct two-hop out-neighbor count for the top-[[TopHubs]] hubs by
@@ -156,8 +130,7 @@ object GraphOps {
     // persisted multi-use inputs (und feeds deg + the orientation join;
     // oriented feeds both wedge sides + the closing-edge probe), so each is
     // computed exactly once by construction instead of leaning on runtime
-    // exchange reuse; both are released before returning — same
-    // materialize-output-then-unpersist lifetime as [[pagerank]]
+    // exchange reuse
     val und = e.select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .where(col("a") =!= col("b")).distinct().persist()
@@ -184,11 +157,7 @@ object GraphOps {
     val out = wedges.join(closing, Seq("v", "x"))
       .select(explode(array(col("u"), col("v"), col("x"))).as("entity_id"))
       .groupBy("entity_id").agg(count(lit(1)).as("n_triangles"))
-      .persist()
-    out.count()
-    und.unpersist()
-    oriented.unpersist()
-    out
+    materialize(out, und, oriented)
   }
 
   /** Connected components of the co-occurrence graph: every node labeled
@@ -208,8 +177,7 @@ object GraphOps {
     val nodes = e.select(col("src").as("entity_id"))
       .unionAll(e.select(col("dst").as("entity_id"))).distinct()
     // labeled feeds both the size aggregate and the final join — persist so
-    // the CC map applies once; released after the (node-sized) output
-    // materializes, mirroring [[pagerank]]'s cache lifetime
+    // the CC map applies once
     val labeled = nodes.join(cc, Seq("entity_id"), "left_outer")
       .select(col("entity_id"),
         coalesce(col("canonical_id"), col("entity_id")).as("component_id"))
@@ -217,10 +185,7 @@ object GraphOps {
     val sizes = labeled.groupBy("component_id").agg(count(lit(1)).as("comp_size"))
     val out = labeled.join(sizes, "component_id")
       .select(col("entity_id"), col("component_id"), col("comp_size"))
-      .persist()
-    out.count()
-    labeled.unpersist()
-    out
+    materialize(out, labeled)
   }
 
   /** deterministic top-k hub pick shared by [[twoHop]] and [[bfsDistances]]
@@ -301,10 +266,7 @@ object GraphOps {
         col("i").as("n_common"),
         round(col("i") / (col("sa.n") + col("sb.n") - col("i")), 4).as("jaccard"))
       .where(col("jaccard") >= JaccardMinSim)
-      .persist()
-    out.count()
-    nb.unpersist()
-    out
+    materialize(out, nb)
   }
 
   /** HITS iterations for [[hits]]. */
@@ -349,11 +311,7 @@ object GraphOps {
       .select(col("id").as("entity_id"),
         coalesce(col("a"), lit(0L)).as("auth"),
         coalesce(col("h"), lit(0L)).as("hub"))
-      .persist()
-    out.count()
-    nodes.unpersist()
-    bySrc.unpersist()
-    out
+    materialize(out, nodes, bySrc)
   }
 
   /** BFS roots (top hubs) and depth bound for [[bfsDistances]]. */
@@ -418,18 +376,9 @@ object GraphOps {
     val parts = adaptiveParts(e0)
     val sym = symEdges(e0)
       .repartition(parts, col("dst")).persist()
-    // driver fast path below the CC crossover (the Canonical pattern): the
-    // synchronous rounds are a pure function of the symmetric edge set, and
-    // under ~500k edges a local loop beats 3 rounds x (join+agg+window+
-    // checkpoint) of per-job scheduling latency. Same output contract as the
-    // distributed loop (GraphOpsSpec pins both paths against each other);
-    // KB-scale graphs take the distributed loop below.
-    if (sym.count() <= driverThreshold) {
-      val out = labelPropDriver(sym).persist()
-      out.count()
-      sym.unpersist()
-      return out
-    }
+    // driver fast path below the CC crossover (see collectAdjacency);
+    // KB-scale graphs take the distributed loop below
+    if (sym.count() <= driverThreshold) return materialize(labelPropDriver(sym), sym)
     var labels = sym.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
     val w = org.apache.spark.sql.expressions.Window
@@ -455,10 +404,7 @@ object GraphOps {
     val out = labels.join(sizes, "label")
       .select(col("id").as("entity_id"), col("label").as("community"),
         col("community_size"))
-      .persist()
-    out.count()
-    sym.unpersist()
-    out
+    materialize(out, sym)
   }
 
   /** the same [[LpaIters]] synchronous rounds (most-frequent neighbor label,
@@ -468,21 +414,36 @@ object GraphOps {
   private def labelPropDriver(sym: DataFrame): DataFrame = {
     val spark = sym.sparkSession
     import spark.implicits._
-    val edges = sym.select("src", "dst").as[(String, String)].collect()
-    val nbrs = edges.groupBy(_._1).map { case (u, es) => u -> es.map(_._2) }
+    val nbrs = collectAdjacency(sym)
+    // max count, tie -> minimum label in Spark's string order (the window's
+    // c desc, label asc)
+    val byCountThenLabel = Ordering.Tuple2(Ordering.Long, SparkStringOrdering)
     var labels: Map[String, String] = nbrs.keysIterator.map(u => u -> u).toMap
     for (_ <- 1 to LpaIters) {
       labels = nbrs.map { case (u, vs) =>
         val freq = scala.collection.mutable.HashMap.empty[String, Long]
         vs.foreach(v => freq(labels(v)) = freq.getOrElse(labels(v), 0L) + 1L)
-        // max count, tie -> minimum label (the window's c desc, label asc)
-        u -> freq.toSeq.minBy { case (l, c) => (-c, l) }._1
+        u -> freq.toSeq.minBy { case (l, c) => (-c, l) }(byCountThenLabel)._1
       }
     }
     val sizes = labels.values.groupBy(identity).map { case (l, c) => l -> c.size.toLong }
     labels.toSeq.sortBy(_._1)
       .map { case (u, l) => (u, l, sizes(l)) }
       .toDF("entity_id", "community", "community_size")
+  }
+
+  /** the symmetric edge list collected into a driver adjacency map — the
+    * input of the driver fast paths ([[labelPropDriver]], [[kcoreDriver]]).
+    * Callers size-guard with the CC crossover (the Canonical pattern): the
+    * fixed synchronous rounds are a pure function of the symmetric edge set,
+    * so under ~500k edges a local loop beats the rounds' join+agg+checkpoint
+    * job latency. GraphOpsSpec pins each driver path to its distributed loop.
+    */
+  private def collectAdjacency(sym: DataFrame): Map[String, Array[String]] = {
+    val spark = sym.sparkSession
+    import spark.implicits._
+    sym.select("src", "dst").as[(String, String)].collect()
+      .groupBy(_._1).map { case (u, es) => u -> es.map(_._2) }
   }
 
   /** Pointwise mutual information between co-mentioned entities, from the
@@ -517,10 +478,7 @@ object GraphOps {
       .select(col("entity_a"), col("entity_b"), col("n_joint"),
         round(log(col("n_joint") * lit(nDocs) / (col("ca.c") * col("cb.c"))), 4)
           .as("pmi"))
-      .persist()
-    out.count()
-    mi.unpersist()
-    out
+    materialize(out, mi)
   }
 
   /** peeling threshold and fixed round budget for [[kcore]]. Six rounds
@@ -559,10 +517,7 @@ object GraphOps {
     val e0 = coEdges(triples)
     val parts = adaptiveParts(e0)
     val sym = symEdges(e0).coalesce(parts).localCheckpoint(true)
-    // driver fast path below the CC crossover (the Canonical pattern): the
-    // bounded-round peel is a pure function of the symmetric edge set; under
-    // ~500k edges a local loop beats 6 rounds of join+agg+checkpoint job
-    // latency. Identical output contract (GraphOpsSpec pins both paths).
+    // driver fast path below the CC crossover (see collectAdjacency)
     if (sym.count() <= driverThreshold) return kcoreDriver(sym)
     val deg0 = sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("sym_degree"))
       .coalesce(parts).localCheckpoint(true)
@@ -595,8 +550,7 @@ object GraphOps {
   private def kcoreDriver(sym: DataFrame): DataFrame = {
     val spark = sym.sparkSession
     import spark.implicits._
-    val edges = sym.select("src", "dst").as[(String, String)].collect()
-    val nbrs = edges.groupBy(_._1).map { case (u, es) => u -> es.map(_._2) }
+    val nbrs = collectAdjacency(sym)
     val deg0 = nbrs.map { case (u, vs) => u -> vs.length.toLong }
     var active = nbrs.keySet
     val peelRound = scala.collection.mutable.HashMap.empty[String, Int]

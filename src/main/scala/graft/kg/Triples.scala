@@ -71,7 +71,7 @@ object Triples {
 
   /** Pipeline result + the intermediate persists it holds — benchmark loops
     * call `unpersistAll()` between reps so cached copies don't accumulate.
-    */
+    * Docs the caller had already cached stay cached. */
   final case class PipelineHandle(triples: DataFrame, cached: Seq[DataFrame]) {
     def unpersistAll(): Unit = cached.foreach(_.unpersist())
   }
@@ -92,8 +92,8 @@ object Triples {
                        bc: org.apache.spark.broadcast.Broadcast[Mentions.Model]): PipelineHandle = {
     // docs feed BOTH the mention-detection subtree and the dict build — one
     // persisted assembly pass instead of re-tokenizing the corpus per
-    // consumer (a no-op when the caller, e.g. the bench headline, already
-    // cached them); released with the other intermediates via unpersistAll
+    // consumer; released by unpersistAll only if this call cached them
+    val ownDocs = docs0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val docs = docs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val mentions = Mentions.detect(docs, bc).toDF()
     // the dict subtree (scan + ngram HOFs + distinct agg) feeds BOTH the
@@ -113,7 +113,8 @@ object Triples {
     // does exactly that per bucket).
     val canon = Canonical.canonicalizeAuto(linked, canonMap)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    PipelineHandle(fromCanonical(canon), Seq(dict, canonMap, canon, docs.toDF()))
+    PipelineHandle(fromCanonical(canon),
+      Seq(dict, canonMap, canon) ++ (if (ownDocs) Seq(docs.toDF()) else Nil))
   }
 
   def pipelineFrom(docs: org.apache.spark.sql.Dataset[PyramidDoc],

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.SparkUtil.materialize
 
 /** Deduplication operators over the `documents` table — exact, MinHash+LSH,
   * SimHash (banded), n-gram Jaccard. All pure `functions._` (codegen'd, no
@@ -62,12 +63,13 @@ object Dedup {
       .where(col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("inter"))
-    inter
+    val out = inter
       .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
       .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
       .withColumn("jaccard", round(col("inter") / (col("na") + col("nb") - col("inter")), 6))
       .where(col("jaccard") >= JaccardThreshold)
       .select("doc_a", "doc_b", "jaccard")
+    materialize(out, sh)
   }
 
   /** per-doc MinHash signature: mh_k = min(md5(k || ':' || shingle)). */
@@ -199,7 +201,7 @@ object Dedup {
     val hot = bands.groupBy("band", "byte").agg(count(lit(1)).as("n"))
       .where(col("n") > MaxSimhashBucket).select("band", "byte")
     val capped = bands.join(broadcast(hot), Seq("band", "byte"), "left_anti")
-    capped.as("a").join(capped.as("b"), Seq("band", "byte"))
+    val out = capped.as("a").join(capped.as("b"), Seq("band", "byte"))
       .where(col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
@@ -207,6 +209,7 @@ object Dedup {
       // are produced instead of paying the dedup shuffle first
       .where(col("hamming") <= SimhashMaxHamming)
       .distinct()
+    materialize(out, bands)
   }
 
   /** Duplicate CLUSTERS — the end-step a real dedup pipeline runs after
@@ -238,9 +241,6 @@ object Dedup {
     val out = labeled.join(sizes, "cluster_id")
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
         (col("doc_id") === col("cluster_id")).as("is_keeper"))
-      .persist()
-    out.count()
-    labeled.unpersist()
-    out
+    materialize(out, labeled)
   }
 }

@@ -383,20 +383,12 @@ object Multimodal {
       .agg(count(lit(1)).as("n_copies"),
         countDistinct("media_ref").as("n_assets"),
         min(concat_ws("#", col("media_ref"), col("variant"))).as("keeper"))
-    // `out` is returned STILL PERSISTED (the caller's action reads the
-    // materialized copy instead of re-decoding): callers that loop queries
-    // must clear it (the bench's clearCache() between queries, or
-    // df.unpersist() once consumed) — same contract as pagerank's returned
-    // persist
     val out = decoded.join(groups, Seq("pixel_md5"))
       .select(col("media_ref"), col("variant"), col("pixel_md5"),
         col("n_copies"), col("n_assets"),
         (concat_ws("#", col("media_ref"), col("variant")) === col("keeper"))
           .cast("int").as("is_keeper"))
-      .persist()
-    out.count()
-    decoded.unpersist()
-    out
+    graft.core.SparkUtil.materialize(out, decoded)
   }
 
   /** the box side mm_resize fits into — smaller than most staged assets

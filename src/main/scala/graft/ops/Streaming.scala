@@ -181,9 +181,8 @@ object Streaming {
   private val streamSrcLocks =
     scala.collection.concurrent.TrieMap.empty[String, Object]
 
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily derived from
-    * the batch-side input's planner size estimate (~64 MB per partition,
-    * floor 1, cap 4x parallelism — the GraphOps.adaptiveParts rule). A
+  /** Run `body` with `spark.sql.shuffle.partitions` temporarily set from
+    * the batch-side input's size ([[graft.core.SparkUtil.adaptiveParts]]). A
     * stateful streaming query pins its STATE partition count to this conf at
     * query start; the session default (tuned for the wide batch queries)
     * would give every micro-batch `cpus` state-store tasks and checkpoint
@@ -193,9 +192,7 @@ object Streaming {
     */
   private[graft] def withAdaptiveStateParts[T](spark: SparkSession,
                                                sized: DataFrame)(body: => T): T = {
-    val bytes = sized.queryExecution.optimizedPlan.stats.sizeInBytes
-    val cap = spark.sparkContext.defaultParallelism.toLong * 4
-    val parts = (bytes / (64L * 1024 * 1024)).min(BigInt(cap)).max(BigInt(1)).toInt
+    val parts = graft.core.SparkUtil.adaptiveParts(sized)
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, parts.toString)

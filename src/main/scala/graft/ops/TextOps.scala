@@ -291,10 +291,7 @@ object TextOps {
       .where(col("rank") <= TfidfTopK)
       .select(col("doc_id"), col("rank"), col("term"), col("tf"),
         round(col("s6"), 4).as("tfidf"))
-      .persist()
-    out.count()
-    tf.unpersist()
-    out
+    graft.core.SparkUtil.materialize(out, tf)
   }
 
   // --------------------------------------- benchmark decontamination

@@ -260,6 +260,18 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(rows(GraphOps.kcore(tri)) == rows(GraphOps.kcore(tri, driverThreshold = -1L)))
   }
 
+  test("labelProp: driver tie-break uses Spark's string order on non-BMP labels") {
+    import spark.implicits._
+    // m's two neighbors tie on count; U+E000 sorts first in Spark (UTF-8
+    // bytes), U+1F600 first in String.compareTo (UTF-16 units)
+    val tri = Seq(("m", "\uE000"), ("m", "\uD83D\uDE00"))
+      .map { case (s, o) => (s, "co_occurs_with", o) }.toDF("subj", "pred", "obj")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val driver = rows(GraphOps.labelProp(tri))
+    assert(driver == rows(GraphOps.labelProp(tri, driverThreshold = -1L)))
+    assert(driver.contains(Seq("m", "\uE000", 1L)))
+  }
+
   test("coocPmi: ln(n_ab·N / (n_a·n_b)) at 4 dp, min-joint filter") {
     import spark.implicits._
     val mi = Seq(

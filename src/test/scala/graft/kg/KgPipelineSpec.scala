@@ -245,6 +245,20 @@ class KgPipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("PipelineHandle.unpersistAll releases only the caches the handle created") {
+    def cacheEmpty = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty
+    spark.catalog.clearCache()
+    val docs = DocGen.docs(spark, sfDir).cache()
+    Triples.pipelineHandle(docs, model).unpersistAll()
+    assert(docs.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "caller-cached docs were unpersisted")
+    docs.unpersist(blocking = true)
+    assert(cacheEmpty)
+    Triples.pipelineHandle(DocGen.docs(spark, sfDir), model).unpersistAll()
+    assert(cacheEmpty, "handle-cached docs were left behind")
+  }
+
   test("edgesFromDict connects ALL candidates of a multi-candidate alias") {
     import spark.implicits._
     // an alias with 3 candidates must form ONE component — the old
