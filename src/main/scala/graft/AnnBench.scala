@@ -63,20 +63,18 @@ object AnnBench {
     * neighbors are same-center by construction, so IVF recall against brute
     * force is a meaningful quality signal, not noise-vs-noise
     */
-  def stageCorpus(spark: SparkSession, dir: String, n: Long): Unit = {
-    val marker = Paths.get(dir, "_ANN_STAGED")
-    val sig = s"annbench-v1:n=$n:dim=$Dim:c=$PlantedCenters"
-    if (Files.exists(marker) && Files.readString(marker) == sig) return
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(centers)
-    spark.range(n).repartition(32).map { i =>
-      val c = bc.value((i % PlantedCenters).toInt)
-      (i, Array.tabulate(Dim)(d => c(d) + 0.25f * unit(i, d)))
-    }.toDF("vec_id", "embedding")
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    bc.destroy()
-    Files.writeString(marker, sig)
-  }
+  def stageCorpus(spark: SparkSession, dir: String, n: Long): Unit =
+    graft.core.Derived.ensure(Paths.get(dir, "_ANN_STAGED"),
+      s"annbench-v1:n=$n:dim=$Dim:c=$PlantedCenters") {
+      import spark.implicits._
+      val bc = spark.sparkContext.broadcast(centers)
+      spark.range(n).repartition(32).map { i =>
+        val c = bc.value((i % PlantedCenters).toInt)
+        (i, Array.tabulate(Dim)(d => c(d) + 0.25f * unit(i, d)))
+      }.toDF("vec_id", "embedding")
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      bc.destroy()
+    }
 
   private def dirBytes(p: Path): Long = {
     if (!Files.isDirectory(p)) return if (Files.exists(p)) Files.size(p) else 0L
@@ -100,17 +98,9 @@ object AnnBench {
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("GRAFT_ANN_N", "1000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = BenchSession.cpus
     val queryMod = math.max(1L, n / 50) // ~50 probe queries
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ann-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession("graft-ann-bench", cpus)
 
     val dir = s"/root/repo/target/annbench/sf_ann$n"
     Files.createDirectories(Paths.get(dir))

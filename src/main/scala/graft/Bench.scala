@@ -132,11 +132,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default matches the other bench mains (QueryBench/GraphBench/...); the
-    // driver always sets this explicitly, but a forgotten local run at
-    // local[4] produces numbers that look like a 3-8x regression on the
-    // parallel-heavy rows (see BENCH/round5i/j vs round5h)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = BenchSession.cpus
     val amplify = sys.env.getOrElse("GRAFT_AMPLIFY", "8").toInt
     // the reference's real experiment shape (GENIA: depth 8, 200-d) costs
     // ~5.6x the default per token (InferBench calibration) — bench it at a
@@ -151,14 +147,7 @@ object Bench {
     // marked failed (-1 sentinel), so worst-case battery time is bounded by
     // reps * |queries| * timeout (in practice: one timeout, then skipped).
     val timeoutSec = sys.env.getOrElse("GRAFT_BENCH_TIMEOUT_SEC", "900").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession("graft-bench", cpus)
     val selfCpus = cpus.toDouble
 
     // fixture staging (reader-format files, sequential KG goldens) is input

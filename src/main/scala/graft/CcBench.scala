@@ -57,16 +57,8 @@ object CcBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-cc-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = BenchSession.cpus
+    val spark = BenchSession("graft-cc-bench", cpus)
 
     val rows = scala.collection.mutable.ArrayBuffer.empty[Row2]
 

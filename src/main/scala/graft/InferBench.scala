@@ -11,17 +11,24 @@ import graft.core._
   * accumulation order bit-exactly). InferBenchSpec pins it at 192 sentences.
   */
 object InferBench {
-  /** The seeded engine and input: a 2000-word lexicon and `nSent` sentences
-    * of 8-47 tokens from `java.util.Random(7)`.
+  /** The seeded weights (seed 42, 8 kinds), a `vocabSize`-word lexicon and
+    * `nSent` sentences of 8-47 tokens from `java.util.Random(7)`.
     */
-  def setup(cfg: ModelConfig, nSent: Int): (PyramidInference, Array[Array[String]]) = {
-    val lex = Array.tabulate(2000)(i => s"tok$i")
+  def seeded(cfg: ModelConfig, nSent: Int,
+             vocabSize: Int): (PyramidWeights, WordVocab, Array[Array[String]]) = {
+    val lex = Array.tabulate(vocabSize)(i => s"tok$i")
     val vocab = new WordVocab(lex)
     val w = PyramidWeights.build(42L, cfg, vocab.size, 8)
     val rnd = new java.util.Random(7)
     val sents = Array.tabulate(nSent) { _ =>
       Array.tabulate(8 + rnd.nextInt(40))(_ => lex(rnd.nextInt(lex.length)))
     }
+    (w, vocab, sents)
+  }
+
+  /** The seeded engine and input over a 2000-word lexicon ([[seeded]]). */
+  def setup(cfg: ModelConfig, nSent: Int): (PyramidInference, Array[Array[String]]) = {
+    val (w, vocab, sents) = seeded(cfg, nSent, 2000)
     (new PyramidInference(w, vocab), sents)
   }
 

@@ -16,31 +16,10 @@ import graft.core._
   * is the cluster-relevant one. Both are reported; neither is hidden.
   */
 object InferCalib {
-  /** The probe must match the JOB's kernel shape: the ceiling is
-    * width-dependent through the embedding-table gather (a genia-shaped
-    * model randomly reads a ~40 MB word-embedding table — DRAM/L3-bound at
-    * 16 threads in a way the default config's 0.4 MB table never is), so a
-    * default-config ceiling would overstate what the machine offers a
-    * genia-config job. ScalingBench passes the run's cfg + the REAL model's
-    * vocab size.
-    */
-  private val setups = scala.collection.concurrent.TrieMap
-    .empty[(ModelConfig, Int), (PyramidWeights, WordVocab, Array[Array[String]])]
+  private type Input = (PyramidWeights, WordVocab, Array[Array[String]])
 
-  private def setup(cfg: ModelConfig, vocabSize: Int) =
-    setups.getOrElseUpdate((cfg, vocabSize), {
-      val lex = Array.tabulate(vocabSize)(i => s"tok$i")
-      val vocab = new WordVocab(lex)
-      val w = PyramidWeights.build(42L, cfg, vocab.size, 8)
-      val rnd = new java.util.Random(7)
-      val sents = Array.tabulate(256) { _ =>
-        Array.tabulate(8 + rnd.nextInt(40))(_ => lex(rnd.nextInt(lex.length)))
-      }
-      (w, vocab, sents)
-    })
-
-  private def burst(threads: Int, wallSec: Double, cfg: ModelConfig, vocabSize: Int): Double = {
-    val (w, vocab, sents) = setup(cfg, vocabSize)
+  private def burst(threads: Int, wallSec: Double, input: Input): Double = {
+    val (w, vocab, sents) = input
     val deadline = System.nanoTime() + (wallSec * 1e9).toLong
     val tokens = new AtomicLong
     val ts = Array.tabulate(threads) { _ =>
@@ -60,11 +39,20 @@ object InferCalib {
     tokens.get / ((System.nanoTime() - t0) / 1e9) / threads
   }
 
-  /** per-thread tokens/s at `threads` (2 s JIT warm-up burst, then measure) */
+  /** per-thread tokens/s at `threads` (2 s JIT warm-up burst, then measure)
+    * over InferBench's seeded input. The probe must match the JOB's kernel
+    * shape: the ceiling is width-dependent through the embedding-table
+    * gather (a genia-shaped model randomly reads a ~40 MB word-embedding
+    * table — DRAM/L3-bound at 16 threads in a way the default config's
+    * 0.4 MB table never is), so a default-config ceiling would overstate what
+    * the machine offers a genia-config job. ScalingBench passes the run's
+    * cfg + the REAL model's vocab size.
+    */
   def perThread(threads: Int, wallSec: Double = 8.0, cfg: ModelConfig = ModelConfig(),
                 vocabSize: Int = 2000): Double = {
-    burst(threads, 2.0, cfg, vocabSize)
-    burst(threads, wallSec, cfg, vocabSize)
+    val input = InferBench.seeded(cfg, 256, vocabSize)
+    burst(threads, 2.0, input)
+    burst(threads, wallSec, input)
   }
 
   /** standalone probe: runMain graft.InferCalib <threads>... [genia] [vocabSize] */

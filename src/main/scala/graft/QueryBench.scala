@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Targeted per-query timing: `runMain graft.QueryBench <sfDir> <query>...`
   * times only the named SparkEntry queries (one warm JVM, same forcing sink
   * as Bench) — for attributing regressions to a single operator without
@@ -11,15 +9,7 @@ object QueryBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession("graft-query-bench", BenchSession.cpus)
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
       val (_, sec) = Bench.time(Bench.force(fn(spark, sfDir)))

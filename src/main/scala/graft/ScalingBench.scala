@@ -40,15 +40,7 @@ object ScalingBench {
 
   def runLevel(cpus: Int, sfDir: String, amplify: Int, reps: Int,
                cfg: ModelConfig = ModelConfig()): Level = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scaling-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession(s"graft-scaling-$cpus", cpus)
     try {
       val docs = DocGen.amplifiedDocs(spark, sfDir, amplify).cache()
       docs.count() // materialize input outside the timed region

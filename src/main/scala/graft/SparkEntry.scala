@@ -18,20 +18,14 @@ import graft.ops._
   */
 object SparkEntry {
 
-  /** per-sfDir model cache so each kg_* query doesn't rebuild the lexicon
-    * job; keyed on the corpus file signature too (same invalidation rule as
-    * the centroid / slice-docs caches), so an in-place corpus regeneration
-    * within one JVM can't serve a stale lexicon. Superseded entries for the
-    * same sfDir are dropped on the way in.
+  /** one model per sfDir so each kg_* query doesn't rebuild the lexicon
+    * job; signed with the corpus file signature, so an in-place corpus
+    * regeneration within one JVM can't serve a stale lexicon
     */
-  private val modelCache = scala.collection.concurrent.TrieMap.empty[String, Mentions.Model]
-  private[graft] def model(spark: SparkSession, sfDir: String): Mentions.Model = {
-    val key = s"$sfDir@${graft.core.FileSig.of(s"$sfDir/documents.parquet")}"
-    modelCache.getOrElseUpdate(key, {
-      modelCache.keys.filter(_.startsWith(s"$sfDir@")).foreach(modelCache.remove)
-      Mentions.buildModel(DocGen.docs(spark, sfDir), ModelConfig())
-    })
-  }
+  private val modelCache = new graft.core.Derived.Memo[Mentions.Model](_ => ())
+  private[graft] def model(spark: SparkSession, sfDir: String): Mentions.Model =
+    modelCache.get(sfDir, graft.core.FileSig.of(s"$sfDir/documents.parquet"))(
+      Mentions.buildModel(DocGen.docs(spark, sfDir), ModelConfig()))
 
   /** full-corpus model BROADCAST through the registry — repeated query
     * invocations in one session reuse a single broadcast instead of leaking

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.{Fmt, ModelConfig}
@@ -51,19 +50,11 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = BenchSession.cpus
     val amplify = sys.env.getOrElse("GRAFT_STREAM_AMPLIFY", "32").toInt
     val nFiles = 16
     val filesPerTrigger = 4 // → 2 micro-batches per 8-file wave
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession("graft-stream-bench", cpus)
     import spark.implicits._
 
     val work = Paths.get("/root/repo/target/streambench")

@@ -4,11 +4,11 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 
 /** File-level signature (names + sizes + nanosecond mtimes + child count — no
-  * data scan) of a file or a directory's direct children, MD5-hex. The one
-  * shared implementation behind every staleness marker (IVF index
-  * `_CORPUS_SIG`, KgRunner `_RUNSIG`, centroid / eval-slice caches), so the
-  * lenient missing-path branch and directory-stream hygiene live in a single
-  * place instead of drifting across copies.
+  * data scan) of a file or a directory's direct children, MD5-hex. The
+  * corpus-file half of the staleness rule in [[Derived]]: the IVF index,
+  * the stream source copy, the KgRunner run and the in-memory model, slice,
+  * centroid, schema and broadcast slots sign their input with it (the
+  * stages derived from the document text use [[Derived.contentSig]]).
   *
   * Granularity note: mtimes are hashed at NANOSECOND resolution
   * (`FileTime.to(NANOSECONDS)`), so an in-place regeneration that reproduces
@@ -51,7 +51,7 @@ object FileSig {
 
   private val HexChars = "0123456789abcdef".toCharArray
 
-  private def hex(bytes: Array[Byte]): String = {
+  private[core] def hex(bytes: Array[Byte]): String = {
     val out = new Array[Char](bytes.length * 2)
     var i = 0
     while (i < bytes.length) {

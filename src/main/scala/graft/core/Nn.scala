@@ -8,12 +8,13 @@ package graft.core
   * `nn.Linear`, `nn.LSTM` (gate order i,f,g,o), `nn.Conv1d(kernel_size=2)`,
   * `nn.LayerNorm(eps=1e-5)` — at inference (eval mode: dropout = identity).
   */
-/** Runtime gate + transpose cache for the SIMD GEMV kernels
-  * ([[SimdKernels]]): vectorization is across OUTPUT lanes over transposed
-  * weights, so every output element's FP accumulation order is unchanged —
-  * results are bit-exact vs the scalar kernels (asserted by NnSimdSpec).
-  * Falls back to the scalar path when the jdk.incubator.vector module is
-  * absent or `-Dgraft.simd=off` is set.
+/** Runtime gate + transpose for the SIMD GEMV kernels ([[SimdKernels]]):
+  * vectorization is across OUTPUT lanes over transposed weights, so every
+  * output element's FP accumulation order is unchanged — results are
+  * bit-exact vs the scalar kernels (asserted by NnSimdSpec). Each weight
+  * holder keeps its own transpose in a `@transient lazy val`, so a transpose
+  * lives exactly as long as its weights. Falls back to the scalar path when
+  * the jdk.incubator.vector module is absent or `-Dgraft.simd=off` is set.
   */
 object Simd {
   val enabled: Boolean =
@@ -23,22 +24,21 @@ object Simd {
         !sys.env.get("GRAFT_NO_SIMD").contains("1")
     } catch { case _: Throwable => false }
 
-  /** identity-keyed transpose cache: weight arrays are broadcast-shared per
-    * JVM, so the handful of live models yields a handful of entries; the
-    * transpose itself is a pure copy (no arithmetic).
+  /** row-major [outDim × inDim] → [inDim × outDim]; a pure copy (no
+    * arithmetic)
     */
-  private val tCache = new java.util.concurrent.ConcurrentHashMap[Array[Float], Array[Float]]()
-  def transposed(w: Array[Float], inDim: Int, outDim: Int): Array[Float] =
-    tCache.computeIfAbsent(w, _ => {
-      val t = new Array[Float](inDim * outDim)
-      var o = 0
-      while (o < outDim) {
-        var i = 0
-        while (i < inDim) { t(i * outDim + o) = w(o * inDim + i); i += 1 }
-        o += 1
-      }
-      t
-    })
+  def transposed(w: Array[Float], inDim: Int, outDim: Int): Array[Float] = {
+    require(w.length == inDim * outDim,
+      s"weight length ${w.length} is not $outDim × $inDim")
+    val t = new Array[Float](inDim * outDim)
+    var o = 0
+    while (o < outDim) {
+      var i = 0
+      while (i < inDim) { t(i * outDim + o) = w(o * inDim + i); i += 1 }
+      o += 1
+    }
+    t
+  }
 }
 
 object Nn {
@@ -68,7 +68,8 @@ object Nn {
             x: Array[Float], xOff: Int, y: Array[Float], yOff: Int): Unit = {
     // SIMD path (bit-exact, see Simd): only when the output is wide enough to
     // fill vector lanes — the tiny head/remedy denses (outDim 6/10) stay on
-    // the register-blocked scalar loop below
+    // the register-blocked scalar loop below. This transposes per call; a
+    // hot path holds the transpose with its weights and calls denseT.
     if (Simd.enabled && outDim >= 16) {
       SimdKernels.gemvT(Simd.transposed(w, inDim, outDim), b, inDim, outDim, x, xOff, y, yOff)
       return
@@ -97,6 +98,15 @@ object Nn {
     }
   }
 
+  /** [[dense]] with `wT = Simd.transposed(w, inDim, outDim)` held by the
+    * caller
+    */
+  private[core] def denseT(w: Array[Float], wT: Array[Float], b: Array[Float],
+                           inDim: Int, outDim: Int,
+                           x: Array[Float], xOff: Int, y: Array[Float], yOff: Int): Unit =
+    if (Simd.enabled && outDim >= 16) SimdKernels.gemvT(wT, b, inDim, outDim, x, xOff, y, yOff)
+    else dense(w, b, inDim, outDim, x, xOff, y, yOff)
+
   /** LayerNorm over the last (feature) dim, torch defaults (eps=1e-5, affine). */
   def layerNorm(gamma: Array[Float], beta: Array[Float], dim: Int,
                 x: Array[Float], xOff: Int, y: Array[Float], yOff: Int): Unit = {
@@ -124,8 +134,8 @@ final class LstmCell(val inDim: Int, val hidden: Int,
                      val wIh: Array[Float], val wHh: Array[Float],
                      val bIh: Array[Float], val bHh: Array[Float]) extends Serializable {
   // SIMD support (bit-exact, see Simd): transposed weight copies + the
-  // precomputed bIh+bHh sum, built lazily once per JVM (thread-safe lazy val;
-  // the cell instance is broadcast-shared across tasks)
+  // precomputed bIh+bHh sum, built lazily once per cell instance (thread-safe
+  // lazy val; the cell instance is broadcast-shared across tasks)
   @transient private lazy val useSimd = Simd.enabled && 4 * hidden >= 16
   @transient private lazy val wIhT = Simd.transposed(wIh, inDim, 4 * hidden)
   @transient private lazy val wHhT = Simd.transposed(wHh, hidden, 4 * hidden)
@@ -221,7 +231,7 @@ final class BiLstm(val fwd: LstmCell, val bwd: LstmCell) extends Serializable {
 final class Conv2Tap(val inCh: Int, val outCh: Int,
                      val w0: Array[Float], val w1: Array[Float],
                      val b: Array[Float]) extends Serializable {
-  // SIMD support (bit-exact, see Simd): transposed tap copies, once per JVM
+  // SIMD support (bit-exact, see Simd): transposed tap copies, once per instance
   @transient private lazy val useSimd = Simd.enabled && outCh >= 16
   @transient private lazy val w0T = Simd.transposed(w0, inCh, outCh)
   @transient private lazy val w1T = Simd.transposed(w1, inCh, outCh)

@@ -63,7 +63,11 @@ final class PyramidWeights(
     val conv: Conv2Tap,
     val headW: Array[Float], val headB: Array[Float],       // [(C+1) × encOut]
     val remedyW: Array[Float], val remedyB: Array[Float]    // [2C × encOut]
-) extends Serializable
+) extends Serializable {
+  /** `encDenseW` transposed for the SIMD dense kernel (see Simd) */
+  @transient private[core] lazy val encDenseWT: Array[Float] =
+    Simd.transposed(encDenseW, 2 * cfg.encHidden, cfg.encOut)
+}
 
 object PyramidWeights {
   private def lstm(seed: Long, name: String, inDim: Int, hidden: Int): LstmCell =
@@ -199,7 +203,7 @@ final class PyramidInference(w: PyramidWeights, vocab: WordVocab) {
     w.encLstm.run(xIn, 0, S, encH, 0, hS, cS, gS)
     t = 0
     while (t < S) {
-      Nn.dense(w.encDenseW, w.encDenseB, 2 * cfg.encHidden, D, encH, t * 2 * cfg.encHidden, cur, t * D)
+      Nn.denseT(w.encDenseW, w.encDenseWT, w.encDenseB, 2 * cfg.encHidden, D, encH, t * 2 * cfg.encHidden, cur, t * D)
       t += 1
     }
   }
@@ -228,7 +232,7 @@ final class PyramidInference(w: PyramidWeights, vocab: WordVocab) {
     encExt.run(xEx, 0, S, encHL, 0, hS, cS, gS)
     t = 0
     while (t < S) {
-      Nn.dense(w.encDenseW, w.encDenseB, 2 * cfg.encHidden, D, encHL, t * 2 * cfg.encHidden, cur, t * D)
+      Nn.denseT(w.encDenseW, w.encDenseWT, w.encDenseB, 2 * cfg.encHidden, D, encHL, t * 2 * cfg.encHidden, cur, t * D)
       t += 1
     }
   }

@@ -37,6 +37,11 @@ final class VariantWeights(
     val lmEncLstm: BiLstm  // N14 sentence encoder over char ⊕ word ⊕ LM input
 ) extends Serializable {
   val ctxDim: Int = 3 * cfg.wordDim
+  /** the inverse-conv taps transposed for the SIMD kernels (see Simd) */
+  @transient private[core] lazy val invConvW0T: Array[Float] =
+    Simd.transposed(invConvW0, 2 * cfg.encOut, cfg.encOut)
+  @transient private[core] lazy val invConvW1T: Array[Float] =
+    Simd.transposed(invConvW1, 2 * cfg.encOut, cfg.encOut)
 }
 
 object VariantWeights {
@@ -134,8 +139,8 @@ final class PyramidVariantInference(base: PyramidInference, vw: VariantWeights) 
         // positions get only the tap that exists, like the scalar loop.
         val nx = new Array[Float]((T + 1) * D)
         if (Simd.enabled && D >= 16) {
-          val w0T = Simd.transposed(vw.invConvW0, 2 * D, D)
-          val w1T = Simd.transposed(vw.invConvW1, 2 * D, D)
+          val w0T = vw.invConvW0T
+          val w1T = vw.invConvW1T
           // o = 0: only the w1 tap (no x above position -1)
           SimdKernels.gemvT(w1T, vw.invConvB, 2 * D, D, cat, 0, nx, 0)
           var o = 1

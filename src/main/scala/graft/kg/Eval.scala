@@ -204,33 +204,26 @@ object Eval {
   /** ONE cached slice Dataset per sfDir, shared by every slice* entry point:
     * the returned DataFrames are lazy, so a per-call `.cache()` could never
     * be unpersisted without breaking the caller's plan — previously each call
-    * leaked a pinned copy in a long-lived session. The map is bounded (one
-    * entry per corpus dir). `spark.catalog.clearCache()` UNREGISTERS the plan
-    * from the CacheManager (it does not merely evict blocks), so retrieval
-    * re-calls `.cache()` every time — idempotent while registered,
-    * re-registering after a clearCache, keeping cross-query slice reuse alive
-    * in sessions (like Bench) that clear the cache between queries.
+    * leaked a pinned copy in a long-lived session. `spark.catalog.clearCache()`
+    * UNREGISTERS the plan from the CacheManager (it does not merely evict
+    * blocks), so retrieval re-calls `.cache()` every time — idempotent while
+    * registered, re-registering after a clearCache, keeping cross-query slice
+    * reuse alive in sessions (like Bench) that clear the cache between
+    * queries.
     */
   private val sliceCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.Dataset[PyramidDoc]]
+    new graft.core.Derived.Memo[org.apache.spark.sql.Dataset[PyramidDoc]](_.unpersist())
 
-  /** Key = sfDir + corpus file signature + Spark application id: an in-place
-    * corpus regeneration under the same sfDir must not serve the old 200
-    * docs (same invalidation rule as the IVF centroid cache), and a cached
-    * Dataset bound to a stopped SparkContext must not outlive its session.
-    * Superseded entries for the same sfDir are dropped (and unpersisted
-    * best-effort) on the way in, so regeneration doesn't pin dead copies.
+  /** Signed with the corpus file signature + Spark application id: an
+    * in-place corpus regeneration under the same sfDir must not serve the old
+    * 200 docs, and a cached Dataset bound to a stopped SparkContext must not
+    * outlive its session. The superseded slice is unpersisted.
     */
-  def sliceDocs(spark: SparkSession, sfDir: String): org.apache.spark.sql.Dataset[PyramidDoc] = {
-    val key = s"$sfDir@${graft.core.FileSig.of(s"$sfDir/documents.parquet")}" +
-      s"@${spark.sparkContext.applicationId}"
-    sliceCache.getOrElseUpdate(key, {
-      sliceCache.keys.filter(_.startsWith(s"$sfDir@")).foreach { k =>
-        sliceCache.remove(k).foreach(ds => scala.util.Try(ds.unpersist()))
-      }
+  def sliceDocs(spark: SparkSession, sfDir: String): org.apache.spark.sql.Dataset[PyramidDoc] =
+    sliceCache.get(sfDir, s"${graft.core.FileSig.of(s"$sfDir/documents.parquet")}" +
+      s"@${spark.sparkContext.applicationId}")(
       DocGen.docs(spark, sfDir).orderBy("doc_id").limit(EvalSliceDocs)
-    }).cache() // idempotent; re-registers after spark.catalog.clearCache()
-  }
+    ).cache() // idempotent; re-registers after spark.catalog.clearCache()
 
   /** ONE live model broadcast per (sfDir, cfg) slot — every slice entry
     * point broadcasts through the registry, so repeated invocations in a

@@ -1,11 +1,10 @@
 package graft.kg
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 import org.apache.spark.sql.SparkSession
 
-import graft.core.ModelConfig
+import graft.core.{Derived, ModelConfig}
 import graft.sources.ReaderStage
 
 /** Staged KG-side fixtures for the driver's DuckDB value-oracles.
@@ -24,8 +23,8 @@ import graft.sources.ReaderStage
   *                             hash-match it (the P=R=1.0 spec, now enforced
   *                             by the driver gate too)
   *
-  * Idempotent per corpus signature (same scheme as ReaderStage); staged under
-  * `ReaderStage.stageDir(sfDir)/kg` so the oracle SQL shares one root.
+  * Idempotent per corpus content signature ([[graft.core.Derived]]); staged
+  * under `ReaderStage.stageDir(sfDir)/kg` so the oracle SQL shares one root.
   */
 object KgStage {
 
@@ -44,24 +43,15 @@ object KgStage {
 
   def stageDir(sfDir: String): Path = ReaderStage.stageDir(sfDir).resolve("kg")
 
-  private def signature(docs: Seq[(Long, String)]): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-    d.update(Version.getBytes(StandardCharsets.UTF_8))
-    docs.foreach { case (id, text) =>
-      d.update(java.nio.ByteBuffer.allocate(8).putLong(id).array())
-      d.update(text.getBytes(StandardCharsets.UTF_8))
-    }
-    GoldRef.bytesToHex(d.digest())
+  def stage(spark: SparkSession, sfDir: String): Path = {
+    val dir = stageDir(sfDir)
+    val docs = ReaderStage.baseDocs(spark, sfDir)
+    Derived.ensure(dir.resolve("_STAGED"), Derived.contentSig(Version, docs))(
+      build(spark, dir, docs))
+    dir
   }
 
-  def stage(spark: SparkSession, sfDir: String): Path = synchronized {
-    val dir = stageDir(sfDir)
-    Files.createDirectories(dir)
-    val docs = ReaderStage.baseDocs(spark, sfDir)
-    val sig = signature(docs)
-    val marker = dir.resolve("_STAGED")
-    if (Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), StandardCharsets.UTF_8) == sig) return dir
+  private def build(spark: SparkSession, dir: Path, docs: Seq[(Long, String)]): Unit = {
     import spark.implicits._
 
     // --- docs_spans: sequential assemble, exploded
@@ -306,8 +296,5 @@ object KgStage {
         .coalesce(1).write.mode("overwrite")
         .parquet(dir.resolve("gold_full_triples.parquet").toString)
     }
-
-    Files.write(marker, sig.getBytes(StandardCharsets.UTF_8))
-    dir
   }
 }

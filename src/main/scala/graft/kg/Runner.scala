@@ -158,11 +158,6 @@ object KgRunner {
     RunReport(processed.toSeq, done.toSeq.sorted, total)
   }
 
-  /** Idempotent staged run for the driver gate: executes the bucketed
-    * checkpointed pipeline ONCE per corpus state (file-level signature of
-    * documents.parquet — an in-place regeneration invalidates it) and leaves
-    * the compacted table for `kg_triples_compacted` to read.
-    */
   /** Bump on any change to the KG pipeline or bucketing/compaction logic:
     * `_RUNSIG` encodes this + KgStage.Version + the corpus signature, so a
     * code change regenerates the staged run even when the corpus bytes are
@@ -171,23 +166,26 @@ object KgRunner {
     */
   private val RunVersion = "kgrun-v2"
 
+  /** Idempotent staged run for the driver gate: executes the bucketed
+    * checkpointed pipeline ONCE per corpus state (file-level signature of
+    * documents.parquet — an in-place regeneration invalidates it) and leaves
+    * the compacted table for `kg_triples_compacted` to read.
+    */
   def ensureRun(spark: SparkSession, sfDir: String, outDir: String,
-                buckets: Int = 4): Unit = synchronized {
-    val marker = Paths.get(outDir, "_RUNSIG")
-    val sig = s"$RunVersion:${KgStage.Version}:${corpusSig(sfDir)}"
-    if (Files.exists(marker) && Files.readString(marker) == sig) return
-    // stale or absent: rebuild from scratch (a resume against a CHANGED
-    // corpus would silently mix old and new buckets)
-    if (Files.exists(Paths.get(outDir))) {
-      val s = Files.walk(Paths.get(outDir))
-      try {
-        val it = s.sorted(java.util.Comparator.reverseOrder[Path]()).iterator()
-        while (it.hasNext) Files.deleteIfExists(it.next())
-      } finally s.close()
+                buckets: Int = 4): Unit =
+    graft.core.Derived.ensure(Paths.get(outDir, "_RUNSIG"),
+        s"$RunVersion:${KgStage.Version}:${corpusSig(sfDir)}") {
+      // stale or absent: rebuild from scratch (a resume against a CHANGED
+      // corpus would silently mix old and new buckets)
+      if (Files.exists(Paths.get(outDir))) {
+        val s = Files.walk(Paths.get(outDir))
+        try {
+          val it = s.sorted(java.util.Comparator.reverseOrder[Path]()).iterator()
+          while (it.hasNext) Files.deleteIfExists(it.next())
+        } finally s.close()
+      }
+      run(spark, sfDir, outDir, buckets)
     }
-    run(spark, sfDir, outDir, buckets)
-    Files.writeString(marker, sig)
-  }
 
   /** file-level corpus signature (names + sizes + mtimes, no scan) */
   private def corpusSig(sfDir: String): String = {

@@ -177,16 +177,15 @@ object Similarity {
     * vectors with the smallest md5(vec_id) (a seeded uniform sample),
     * averages are rounded to 6dp so partition/merge-order float noise
     * (~1e-13) can't flip an assignment, and argmax ties break on cluster id.
-    * Index-build cost amortizes across queries — cached per sfDir like the
-    * mention model.
+    * Index-build cost amortizes across queries — one live entry per
+    * (sfDir, k), replaced when the corpus signature changes.
     */
-  private val centroidCache = scala.collection.concurrent.TrieMap.empty[String, Seq[Array[Float]]]
+  private val centroidCache = new graft.core.Derived.Memo[Seq[Array[Float]]](_ => ())
 
   /** File-level corpus signature (names + sizes + mtimes of the embeddings
     * parquet — no data scan, [[graft.core.FileSig]]): an in-place
     * regeneration of the corpus under the same sfDir changes it,
-    * invalidating both the per-JVM centroid cache and the on-disk IVF index
-    * marker.
+    * superseding both the centroid slot and the on-disk IVF index marker.
     */
   private[ops] def corpusSig(sfDir: String): String =
     graft.core.FileSig.of(s"$sfDir/embeddings.parquet")
@@ -200,7 +199,7 @@ object Similarity {
 
   def kmeansCentroids(spark: SparkSession, sfDir: String,
                       k: Int = IvfClusters): Seq[Array[Float]] =
-    centroidCache.getOrElseUpdate(s"$sfDir|k=$k|${corpusSig(sfDir)}", {
+    centroidCache.get(s"$sfDir|k=$k", corpusSig(sfDir)) {
       import spark.implicits._
       val e = embDf(spark, sfDir).select("vec_id", "embedding").cache()
       var cents = e.orderBy(md5(col("vec_id").cast("string"))).limit(k)
@@ -254,7 +253,7 @@ object Similarity {
             .resolve("ivf_centroids.parquet").toString)
       }
       cents
-    })
+    }
 
   /** IVF ANN — the other scale path: vectors are ASSIGNED to their nearest
     * k-means centroid (one scan, centroids broadcast as literals), queries
@@ -316,34 +315,17 @@ object Similarity {
       .write.mode("overwrite").partitionBy("cluster").parquet(indexDir)
   }
 
-  /** per-indexDir build locks: two concurrent callers observing a stale or
-    * absent `_CORPUS_SIG` must not run overlapping `overwrite` writes into
-    * the same indexDir (the same serialize-the-builder pattern as
-    * `KgRunner.ensureRun`'s `synchronized`); distinct index dirs still build
-    * in parallel
-    */
-  private val ivfBuildLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-
-  /** Corpus-signature marker next to the index (same scheme as
-    * ReaderStage._STAGED): rebuilds are gated on marker mismatch, so an
-    * in-place corpus regeneration can never serve stale inverted lists (even
-    * within one JVM), and a fresh JVM skips the rebuild when the on-disk
-    * index already matches the corpus. Check + build are serialized per
-    * indexDir so concurrent callers can't interleave overwrite writes.
+  /** Corpus-signature marker next to the index ([[graft.core.Derived.ensure]]):
+    * an in-place corpus regeneration can never serve stale inverted lists
+    * (even within one JVM), a fresh JVM skips the rebuild when the on-disk
+    * index already matches the corpus, and concurrent callers on one
+    * indexDir never interleave overwrite writes.
     */
   def ensureIvfIndex(spark: SparkSession, sfDir: String, indexDir: String,
                      k: Int = IvfClusters, rep: Int = IvfAssignRep): Unit =
-    ivfBuildLocks.getOrElseUpdate(indexDir, new Object).synchronized {
-      val marker = java.nio.file.Paths.get(indexDir, "_CORPUS_SIG")
-      val sig = s"$IvfIndexVersion:k=$k:rep=$rep:${corpusSig(sfDir)}"
-      val fresh = java.nio.file.Files.exists(marker) &&
-        java.nio.file.Files.readString(marker) == sig
-      if (!fresh) {
-        buildIvfIndex(spark, sfDir, indexDir, k, rep)
-        java.nio.file.Files.writeString(marker, sig)
-      }
-    }
+    graft.core.Derived.ensure(java.nio.file.Paths.get(indexDir, "_CORPUS_SIG"),
+      s"$IvfIndexVersion:k=$k:rep=$rep:${corpusSig(sfDir)}")(
+      buildIvfIndex(spark, sfDir, indexDir, k, rep))
 
   /** Query path over the materialized index: probe clusters are resolved
     * first (a driver-sized set — the router step of any ANN service), the

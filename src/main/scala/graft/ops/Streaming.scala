@@ -167,20 +167,6 @@ object Streaming {
         round(sum(col("value")), 6).as("sum_value"))
   }
 
-  /** Streaming EXACT DEDUP over an incrementally-arriving document corpus —
-    * the training-pipeline ingest shape: fingerprint groups maintained as
-    * streaming aggregation state, keeper = min doc_id. Defined as an
-    * AGGREGATION (not `dropDuplicates`) so the result is independent of
-    * micro-batch arrival order — the surviving doc per group is a property
-    * of the data, and the DuckDB oracle is the SAME SQL as the batch
-    * `dedup_exact`. At unbounded scale the state would be bounded with
-    * `dropDuplicatesWithinWatermark`-style eviction; with the finite
-    * AvailableNow source complete-mode state is the whole fingerprint
-    * table, which is exactly the batch op's shuffle footprint.
-    */
-  private val streamSrcLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-
   /** Run `body` with `spark.sql.shuffle.partitions` temporarily set from
     * the batch-side input's size ([[graft.core.SparkUtil.adaptiveParts]]). A
     * stateful streaming query pins its STATE partition count to this conf at
@@ -199,29 +185,33 @@ object Streaming {
     try body finally spark.conf.set(key, prev)
   }
 
-  /** Stage the corpus as a 4-file copy ONCE per corpus signature (the
-    * `ensureIvfIndex` marker pattern: signature-gated rebuild, serialized
-    * per dir), so repeated invocations — benchmark reps, the oracle gate —
-    * neither re-pay a full corpus read+rewrite inside the timed region nor
-    * leak a fresh /tmp copy per call.
+  /** Stage the corpus as a 4-file copy ONCE per corpus signature
+    * ([[graft.core.Derived.ensure]]), so repeated invocations — benchmark
+    * reps, the oracle gate — neither re-pay a full corpus read+rewrite inside
+    * the timed region nor leak a fresh /tmp copy per call.
     */
   private def ensureStreamSrc(spark: SparkSession, sfDir: String): String = {
     val dir = graft.sources.ReaderStage.stageDir(sfDir)
       .resolve("stream_dedup_src").toString
-    streamSrcLocks.getOrElseUpdate(dir, new Object).synchronized {
-      val marker = java.nio.file.Paths.get(dir, "_CORPUS_SIG")
-      val sig = "v1:" + graft.core.FileSig.of(s"$sfDir/documents.parquet")
-      val fresh = java.nio.file.Files.exists(marker) &&
-        java.nio.file.Files.readString(marker) == sig
-      if (!fresh) {
-        spark.read.parquet(s"$sfDir/documents.parquet")
-          .repartition(4).write.mode("overwrite").parquet(dir)
-        java.nio.file.Files.writeString(marker, sig)
-      }
+    graft.core.Derived.ensure(java.nio.file.Paths.get(dir, "_CORPUS_SIG"),
+      "v1:" + graft.core.FileSig.of(s"$sfDir/documents.parquet")) {
+      spark.read.parquet(s"$sfDir/documents.parquet")
+        .repartition(4).write.mode("overwrite").parquet(dir)
     }
     dir
   }
 
+  /** Streaming EXACT DEDUP over an incrementally-arriving document corpus —
+    * the training-pipeline ingest shape: fingerprint groups maintained as
+    * streaming aggregation state, keeper = min doc_id. Defined as an
+    * AGGREGATION (not `dropDuplicates`) so the result is independent of
+    * micro-batch arrival order — the surviving doc per group is a property
+    * of the data, and the DuckDB oracle is the SAME SQL as the batch
+    * `dedup_exact`. At unbounded scale the state would be bounded with
+    * `dropDuplicatesWithinWatermark`-style eviction; with the finite
+    * AvailableNow source complete-mode state is the whole fingerprint
+    * table, which is exactly the batch op's shuffle footprint.
+    */
   def dedupExactStream(spark: SparkSession, sfDir: String,
                        name: String = "dedup_stream_out"): DataFrame = {
     // the source corpus is a single parquet file; the staged 4-file copy is

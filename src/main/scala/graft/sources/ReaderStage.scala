@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-import graft.core.{Fmt, Rng, Tok}
+import graft.core.{Derived, Fmt, Rng, Tok}
 import graft.kg.GoldRef
 
 /** Deterministic staging of the reference's on-disk input formats, derived
@@ -362,37 +362,26 @@ object ReaderStage {
     }
   }
 
-  /** Corpus signature: cheap relative to the md5-heavy format derivation;
-    * lets a re-stage over unchanged input skip generation entirely (each
-    * src_* query calls stage()).
-    */
   /** bump when the staged derivation or the staged file set changes — the
     * signature otherwise hashes only the INPUT corpus, and an old stage dir
     * would silently short-circuit the new outputs
     */
   val StageVersion = "stage-v5" // v5: + lsh_planes.csv (random-hyperplane LSH planes for approximate_nearest)
 
-  private def signature(docs: Seq[(Long, String)]): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-    d.update(StageVersion.getBytes(StandardCharsets.UTF_8))
-    docs.foreach { case (id, text) =>
-      d.update(java.nio.ByteBuffer.allocate(8).putLong(id).array())
-      d.update(text.getBytes(StandardCharsets.UTF_8))
-    }
-    GoldRef.bytesToHex(d.digest())
+  /** Stage every format; returns the stage dir. Idempotent, and a no-op when
+    * the _STAGED content signature ([[Derived.contentSig]]) matches the
+    * current corpus.
+    */
+  def stage(spark: SparkSession, sfDir: String): Path = {
+    val dir = stageDir(sfDir)
+    val docs = baseDocs(spark, sfDir)
+    Derived.ensure(dir.resolve("_STAGED"), Derived.contentSig(StageVersion, docs))(
+      build(dir, docs))
+    dir
   }
 
-  /** Stage every format; returns the stage dir. Idempotent, and a no-op when
-    * the _STAGED signature matches the current corpus.
-    */
-  def stage(spark: SparkSession, sfDir: String): Path = synchronized {
-    val dir = stageDir(sfDir)
+  private def build(dir: Path, docs: Seq[(Long, String)]): Unit = {
     Files.createDirectories(dir.resolve("wrg"))
-    val docs = baseDocs(spark, sfDir)
-    val sig = signature(docs)
-    val marker = dir.resolve("_STAGED")
-    if (Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), StandardCharsets.UTF_8) == sig) return dir
     writeIfChanged(dir.resolve("rasa.json"), rasaJson(docs))
     writeIfChanged(dir.resolve("docs.jsonl"), docsJsonl(docs))
     writeIfChanged(dir.resolve("wiki.jsonl"), wikiJsonl(docs))
@@ -428,7 +417,5 @@ object ReaderStage {
     writeIfChanged(dir.resolve("wrg_expect.jsonl"), wrgExpectJsonl(docs))
     writeIfChanged(dir.resolve("wrg_swin_expect.jsonl"), wrgSwinExpectJsonl(docs))
     writeIfChanged(dir.resolve("wrg_twin_expect.jsonl"), wrgTwinExpectJsonl(docs))
-    writeIfChanged(marker, sig)
-    dir
   }
 }

@@ -21,22 +21,22 @@ object Readers {
 
   // ------------------------------------------------------------------- S1
 
-  /** Session cache of INFERRED json schemas, keyed on (path, file
-    * signature): `spark.read.json` with no schema runs a full inference scan
-    * of the file before the real read — every invocation re-paid a complete
-    * extra parse of the input (and the src_* battery rows fluctuated with
-    * it). The schema is still derived from the data (identical StructType,
-    * inferred once per file content); only the re-derivation is skipped.
-    * Bounded: one tiny StructType per distinct staged file.
+  /** INFERRED json schemas, one per (path, multiLine) slot signed with the
+    * file signature: `spark.read.json` with no schema runs a full inference
+    * scan of the file before the real read — every invocation re-paid a
+    * complete extra parse of the input (and the src_* battery rows fluctuated
+    * with it). The schema is still derived from the data (identical
+    * StructType, inferred once per file content); only the re-derivation is
+    * skipped.
     */
   private val jsonSchemaCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
+    new graft.core.Derived.Memo[org.apache.spark.sql.types.StructType](_ => ())
 
   private def jsonCached(spark: SparkSession, path: String,
                          multiLine: Boolean = false): DataFrame = {
-    val key = s"$path@${graft.core.FileSig.of(path)}@$multiLine"
     val reader0 = spark.read.option("multiLine", multiLine.toString)
-    val schema = jsonSchemaCache.getOrElseUpdate(key, reader0.json(path).schema)
+    val schema = jsonSchemaCache.get(s"$path@$multiLine", graft.core.FileSig.of(path))(
+      reader0.json(path).schema)
     reader0.schema(schema).json(path)
   }
 
