@@ -74,11 +74,31 @@ object Canonical {
     (row.getLong(0), row.getDecimal(1).hashCode().toLong)
   }
 
-  /** Below this many edges the graph fits comfortably on the driver; an
-    * in-memory union-find beats ~6 Spark jobs per star round. The distributed
-    * loop remains the path for KB-scale graphs.
+  /** The crossover of every driver fast path (CC here, `GraphOps.labelProp`
+    * and `GraphOps.kcore`): below this many edges the graph fits comfortably
+    * on the driver, and a local loop over the collected edges beats the ~6
+    * Spark jobs each distributed round costs. It sits below the crossover
+    * CcBench measured (BENCH/CC_BENCH.md). The distributed loops remain the
+    * path for KB-scale graphs.
     */
   val DriverCcThreshold = 500000L
+
+  /** The one size guard in front of the driver fast paths: counts `edges`
+    * (one job) and collects their `(src, dst)` pairs (a second job) only
+    * when the count is at most `threshold`. Returns the count and, when they
+    * fit, the pairs. The fast paths take the collected pairs, never a
+    * DataFrame, so none can run on an unguarded graph.
+    */
+  def collectIfSmall(edges: DataFrame,
+                     threshold: Long): (Long, Option[Array[(String, String)]]) = {
+    val n = edges.count()
+    if (n > threshold) (n, None)
+    else {
+      val spark = edges.sparkSession
+      import spark.implicits._
+      (n, Some(edges.select("src", "dst").as[(String, String)].collect()))
+    }
+  }
 
   /** edges → (entity_id, canonical_id) mapping covering every node that
     * appears in an edge (isolated entities stay their own canonical id via
@@ -99,9 +119,9 @@ object Canonical {
                                    driverThreshold: Long = DriverCcThreshold): (DataFrame, CcStats) = {
     var edges = edges0.select("src", "dst").where(col("src") =!= col("dst")).distinct()
       .localCheckpoint(true)
-    val nIn = edges.count()
-    if (nIn <= driverThreshold)
-      return (driverUnionFind(edges), CcStats(nIn, usedDriverPath = true, 0))
+    val (nIn, small) = collectIfSmall(edges, driverThreshold)
+    if (small.isDefined) return (driverUnionFind(edges.sparkSession, small.get),
+      CcStats(nIn, usedDriverPath = true, 0))
     var fp = fingerprint(edges)
     var i = 0
     var converged = false
@@ -122,16 +142,14 @@ object Canonical {
     (out, CcStats(nIn, usedDriverPath = false, i))
   }
 
-  /** small-graph fast path: collect + union-find with min-root, one job in,
-    * one local DataFrame out. Same output contract as the star loop
+  /** small-graph fast path: union-find with min-root over the collected
+    * edges, one local DataFrame out. Same output contract as the star loop
     * (component minimum as canonical id, in Spark's string order — the order
     * the loop's `min`/`least` use) — KgPipelineSpec pins both paths against
     * GoldRef's independent union-find.
     */
-  private def driverUnionFind(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
+  private def driverUnionFind(spark: SparkSession, pairs: Array[(String, String)]): DataFrame = {
     import spark.implicits._
-    val pairs = edges.as[(String, String)].collect()
     val parent = scala.collection.mutable.HashMap.empty[String, String]
     def find(x: String): String = {
       var r = x

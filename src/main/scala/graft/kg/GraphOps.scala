@@ -12,8 +12,8 @@ import graft.core.SparkUtil.{adaptiveParts, materialize, SparkStringOrdering}
   * first-class, oracle-gated operators here.
   *
   * Scale notes (100 TB / billions of triples):
-  *  - the triple table is distinct by construction (salted two-phase
-  *    distinct in [[Triples.fromCanonical]]), so `co_occurs_with` rows ARE a
+  *  - the triple table is distinct by construction (one distinct over the
+  *    four families in [[Triples.fromCanonical]]), so `co_occurs_with` rows ARE a
   *    deduplicated edge list — no re-distinct here.
   *  - degree profiles are pure two-phase hash aggregations (map-side partial
   *    combine bounds what a hot entity ships across the exchange).
@@ -376,9 +376,11 @@ object GraphOps {
     val parts = adaptiveParts(e0)
     val sym = symEdges(e0)
       .repartition(parts, col("dst")).persist()
-    // driver fast path below the CC crossover (see collectAdjacency);
-    // KB-scale graphs take the distributed loop below
-    if (sym.count() <= driverThreshold) return materialize(labelPropDriver(sym), sym)
+    // driver fast path below the CC crossover; KB-scale graphs take the
+    // distributed loop below
+    val (_, small) = Canonical.collectIfSmall(sym, driverThreshold)
+    if (small.isDefined)
+      return materialize(labelPropDriver(sym.sparkSession, small.get), sym)
     var labels = sym.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
     val w = org.apache.spark.sql.expressions.Window
@@ -409,12 +411,11 @@ object GraphOps {
 
   /** the same [[LpaIters]] synchronous rounds (most-frequent neighbor label,
     * ties to the MINIMUM label) as a driver loop over the collected symmetric
-    * edge list — exact semantics, small graphs only (callers size-guard).
+    * edge list — exact semantics.
     */
-  private def labelPropDriver(sym: DataFrame): DataFrame = {
-    val spark = sym.sparkSession
+  private def labelPropDriver(spark: SparkSession, sym: Array[(String, String)]): DataFrame = {
     import spark.implicits._
-    val nbrs = collectAdjacency(sym)
+    val nbrs = adjacency(sym)
     // max count, tie -> minimum label in Spark's string order (the window's
     // c desc, label asc)
     val byCountThenLabel = Ordering.Tuple2(Ordering.Long, SparkStringOrdering)
@@ -432,19 +433,14 @@ object GraphOps {
       .toDF("entity_id", "community", "community_size")
   }
 
-  /** the symmetric edge list collected into a driver adjacency map — the
-    * input of the driver fast paths ([[labelPropDriver]], [[kcoreDriver]]).
-    * Callers size-guard with the CC crossover (the Canonical pattern): the
-    * fixed synchronous rounds are a pure function of the symmetric edge set,
-    * so under ~500k edges a local loop beats the rounds' join+agg+checkpoint
-    * job latency. GraphOpsSpec pins each driver path to its distributed loop.
+  /** the collected symmetric edge list ([[Canonical.collectIfSmall]]) as a
+    * driver adjacency map — the input of the driver fast paths
+    * ([[labelPropDriver]], [[kcoreDriver]]). The fixed synchronous rounds are
+    * a pure function of the symmetric edge set, so the local loops give the
+    * distributed loops' result; GraphOpsSpec pins each pair.
     */
-  private def collectAdjacency(sym: DataFrame): Map[String, Array[String]] = {
-    val spark = sym.sparkSession
-    import spark.implicits._
-    sym.select("src", "dst").as[(String, String)].collect()
-      .groupBy(_._1).map { case (u, es) => u -> es.map(_._2) }
-  }
+  private def adjacency(sym: Array[(String, String)]): Map[String, Array[String]] =
+    sym.groupBy(_._1).map { case (u, es) => u -> es.map(_._2) }
 
   /** Pointwise mutual information between co-mentioned entities, from the
     * `mentioned_in` predicate: for entity pairs mentioned together in
@@ -517,8 +513,9 @@ object GraphOps {
     val e0 = coEdges(triples)
     val parts = adaptiveParts(e0)
     val sym = symEdges(e0).coalesce(parts).localCheckpoint(true)
-    // driver fast path below the CC crossover (see collectAdjacency)
-    if (sym.count() <= driverThreshold) return kcoreDriver(sym)
+    // driver fast path below the CC crossover
+    val (_, small) = Canonical.collectIfSmall(sym, driverThreshold)
+    if (small.isDefined) return kcoreDriver(sym.sparkSession, small.get)
     val deg0 = sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("sym_degree"))
       .coalesce(parts).localCheckpoint(true)
     var active = deg0.select(col("id"))
@@ -545,12 +542,11 @@ object GraphOps {
 
   /** the same [[KcoreIters]] synchronous peel rounds (remove active nodes
     * whose active-degree < [[KcoreK]]) as a driver loop over the collected
-    * symmetric edge list — exact semantics, small graphs only.
+    * symmetric edge list — exact semantics.
     */
-  private def kcoreDriver(sym: DataFrame): DataFrame = {
-    val spark = sym.sparkSession
+  private def kcoreDriver(spark: SparkSession, sym: Array[(String, String)]): DataFrame = {
     import spark.implicits._
-    val nbrs = collectAdjacency(sym)
+    val nbrs = adjacency(sym)
     val deg0 = nbrs.map { case (u, vs) => u -> vs.length.toLong }
     var active = nbrs.keySet
     val peelRound = scala.collection.mutable.HashMap.empty[String, Int]

@@ -12,61 +12,33 @@ import org.apache.spark.sql.expressions.Window
   *   depicted_in     canonical entity → attached media_ref (interleaved media)
   *   co_occurs_with  consecutive linked mentions within a doc (decode order)
   *
-  * Skew: co-occurrence and instance_of dedup group by entity keys — hot
-  * entities ("the U.S." aliases) would pile into single reducers. Both aggs
-  * run TWO-PHASE with an explicit salt (hash(doc_id) % SaltBuckets) before
-  * the final combine (SURVEY.md §4 item 1); AQE skew-join is the backstop,
-  * not the plan.
+  * Each family is a plain projection of `canon`, and one distinct over their
+  * union de-duplicates all four: `pred` is a different literal per family, so
+  * no triple of one family can collapse into another's. The distinct
+  * shuffles on the whole triple, not on the entity, and its map-side partial
+  * aggregate folds a hot entity's repeats before the exchange.
   */
 object Triples {
-  val SaltBuckets = 32
-
-  /** distinct (subj, pred, obj) via salted two-phase aggregation. The input
-    * must carry a `salt` column derived from NON-key columns (doc_id/order):
-    * a salt that is a function of the key would send every row of a hot key
-    * to the same reducer and split nothing. With a non-key salt, phase 1
-    * (groupBy key+salt) collapses a hot key's row set to ≤ SaltBuckets rows,
-    * so no phase-2 reducer ever owns a hot entity's full duplicate stream.
-    * Map-side partial aggregation still combines within tasks — the salt
-    * bounds what survives the exchange.
-    */
-  private def saltedDistinct(df: DataFrame): DataFrame = {
-    val cols = df.columns.filter(_ != "salt").map(col)
-    df.groupBy((cols :+ col("salt")).toIndexedSeq: _*).agg(count(lit(1)).as("_c"))
-      .groupBy(cols.toIndexedSeq: _*).agg(count(lit(1)).as("_c2"))
-      .select(cols.toIndexedSeq: _*)
-  }
-
   def fromCanonical(canon: DataFrame): DataFrame = {
-    // salt from (doc_id, order): never part of any triple key, uniform
-    val base = canon.select(
-      col("doc_id"), col("order"), col("canonical_id"),
-      col("dict_kind"), col("media_ref"),
-      pmod(xxhash64(col("doc_id"), col("order")), lit(SaltBuckets)).as("salt"))
+    val instanceOf = canon.select(col("canonical_id").as("subj"),
+      lit("instance_of").as("pred"), col("dict_kind").as("obj"))
 
-    val instanceOf = saltedDistinct(
-      base.select(col("canonical_id").as("subj"), lit("instance_of").as("pred"),
-        col("dict_kind").as("obj"), col("salt")))
+    val mentionedIn = canon.select(col("canonical_id").as("subj"),
+      lit("mentioned_in").as("pred"), col("doc_id").as("obj"))
 
-    val mentionedIn = saltedDistinct(
-      base.select(col("canonical_id").as("subj"), lit("mentioned_in").as("pred"),
-        col("doc_id").as("obj"), col("salt")))
-
-    val depictedIn = saltedDistinct(
-      base.where(col("media_ref") =!= "")
-        .select(col("canonical_id").as("subj"), lit("depicted_in").as("pred"),
-          col("media_ref").as("obj"), col("salt")))
+    val depictedIn = canon.where(col("media_ref") =!= "")
+      .select(col("canonical_id").as("subj"), lit("depicted_in").as("pred"),
+        col("media_ref").as("obj"))
 
     // consecutive mentions in reference decode order within a doc; the
     // window shuffle is keyed by doc_id (uniform), not by entity (skewed)
     val w = Window.partitionBy("doc_id").orderBy(col("order"), col("canonical_id"))
-    val coOccurs = saltedDistinct(
-      base.withColumn("next_id", lead(col("canonical_id"), 1).over(w))
-        .where(col("next_id").isNotNull && col("next_id") =!= col("canonical_id"))
-        .select(col("canonical_id").as("subj"), lit("co_occurs_with").as("pred"),
-          col("next_id").as("obj"), col("salt")))
+    val coOccurs = canon.withColumn("next_id", lead(col("canonical_id"), 1).over(w))
+      .where(col("next_id").isNotNull && col("next_id") =!= col("canonical_id"))
+      .select(col("canonical_id").as("subj"), lit("co_occurs_with").as("pred"),
+        col("next_id").as("obj"))
 
-    instanceOf.unionAll(mentionedIn).unionAll(depictedIn).unionAll(coOccurs)
+    instanceOf.unionAll(mentionedIn).unionAll(depictedIn).unionAll(coOccurs).distinct()
   }
 
   /** Pipeline result + the intermediate persists it holds — benchmark loops
@@ -106,9 +78,9 @@ object Triples {
     val linked = Link.linkAuto(mentions, dict)
     val canonMap = Canonical.connectedComponents(Canonical.edgesFromDict(dict))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // fromCanonical fans out into four triple families; without a persist the
-    // pyramid-inference subtree would be recomputed once PER FAMILY (the
-    // exchanges differ, so Catalyst cannot reuse them). At cluster scale this
+    // fromCanonical's union reads canon once PER FAMILY (four different
+    // projections, so Catalyst cannot reuse one scan); without a persist the
+    // pyramid-inference subtree would be recomputed four times. At cluster scale this
     // is the stage boundary you'd materialize to a staging table (KgRunner
     // does exactly that per bucket).
     val canon = Canonical.canonicalizeAuto(linked, canonMap)

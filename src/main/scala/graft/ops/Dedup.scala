@@ -13,8 +13,7 @@ import graft.core.SparkUtil.materialize
   *    never by O(n²) pairs; candidate pairs only materialize inside a bucket
   *    (LSH band / simhash byte / shared shingle with a DF cap);
   *  - the `MaxShingleDf` frequency cap kills the hot-shingle skew ("the the
-  *    the") that would otherwise square inside the shingle join — same
-  *    motivation as the salted aggregations in graft.kg.Triples.
+  *    the") that would otherwise square inside the shingle join.
   */
 object Dedup {
   val ShingleLen = 3

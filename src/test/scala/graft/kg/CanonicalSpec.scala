@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Connected components: the driver union-find and the distributed star loop
   * agree on ids that Spark's string order and `String.compareTo` order
-  * differently, and the star loop fails loudly when it runs out of rounds.
+  * differently, the star loop fails loudly when it runs out of rounds, and
+  * the driver size guard collects only the graphs that fit.
   */
 class CanonicalSpec extends AnyFunSuite {
   private lazy val spark: SparkSession = SparkSession.builder()
@@ -37,6 +38,14 @@ class CanonicalSpec extends AnyFunSuite {
     val driver = ccMap(edges, Canonical.DriverCcThreshold)
     assert(driver == ccMap(edges, driverThreshold = 0L))
     assert(driver(astral) == bmp && driver(bmp) == bmp && driver("b") == "a")
+  }
+
+  test("the driver size guard collects the edges only when they fit") {
+    import spark.implicits._
+    val edges = Seq(("b", "a"), ("c", "b"), ("d", "c")).toDF("src", "dst")
+    val (n, fits) = Canonical.collectIfSmall(edges, threshold = 3L)
+    assert(n == 3 && fits.map(_.toSet).contains(Set(("b", "a"), ("c", "b"), ("d", "c"))))
+    assert(Canonical.collectIfSmall(edges, threshold = 2L) == ((3L, None)))
   }
 
   test("star loop throws when it has not converged after maxIter rounds") {

@@ -69,6 +69,20 @@ class OpsSpec extends AnyFunSuite {
     assert(batch.nonEmpty)
   }
 
+  test("adaptive state partitions leave the caller's session conf unchanged") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    val sized = spark.range(3).toDF()
+    val parts = graft.core.SparkUtil.adaptiveParts(sized).toString
+    assert(parts != before, "precondition: the adaptive count differs from the session's")
+    val (callerInside, stateInside) = Streaming.withAdaptiveStateParts(spark, sized) { state =>
+      (spark.conf.get(key), state.conf.get(key))
+    }
+    assert(callerInside == before)
+    assert(stateInside == parts)
+    assert(spark.conf.get(key) == before)
+  }
+
   test("flatMapGroupsWithState sessionization == batch sessions") {
     // a session is emitted either when a later event closes it in-batch, or
     // when the event-time timeout fires once the final watermark
@@ -190,22 +204,28 @@ class OpsSpec extends AnyFunSuite {
         Files.copy(p, dst.resolve(p.getFileName.toString), StandardCopyOption.COPY_ATTRIBUTES))
     } else Files.copy(src, dst, StandardCopyOption.COPY_ATTRIBUTES)
     val idx = Files.createTempDirectory("graft_ivf_guard").toString
-    Similarity.ensureIvfIndex(spark, tmpSf.toString, idx)
-    val marker = Paths.get(idx, "_CORPUS_SIG")
-    assert(Files.exists(marker))
-    val sig1 = Files.readString(marker)
-    val t1 = Files.getLastModifiedTime(marker)
-    Similarity.ensureIvfIndex(spark, tmpSf.toString, idx)
-    assert(Files.getLastModifiedTime(marker) == t1, "unchanged corpus must not rebuild")
-    // in-place regeneration = same path, new file mtime
-    val dataFile =
-      if (Files.isDirectory(dst))
-        Files.list(dst).filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
-      else dst
-    Files.setLastModifiedTime(dataFile, java.nio.file.attribute.FileTime.fromMillis(
-      Files.getLastModifiedTime(dataFile).toMillis + 5000))
-    Similarity.ensureIvfIndex(spark, tmpSf.toString, idx)
-    assert(Files.readString(marker) != sig1, "regenerated corpus must rebuild the index")
+    try {
+      Similarity.ensureIvfIndex(spark, tmpSf.toString, idx)
+      val marker = Paths.get(idx, "_CORPUS_SIG")
+      assert(Files.exists(marker))
+      val sig1 = Files.readString(marker)
+      val t1 = Files.getLastModifiedTime(marker)
+      Similarity.ensureIvfIndex(spark, tmpSf.toString, idx)
+      assert(Files.getLastModifiedTime(marker) == t1, "unchanged corpus must not rebuild")
+      // in-place regeneration = same path, new file mtime
+      val dataFile =
+        if (Files.isDirectory(dst))
+          Files.list(dst).filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
+        else dst
+      Files.setLastModifiedTime(dataFile, java.nio.file.attribute.FileTime.fromMillis(
+        Files.getLastModifiedTime(dataFile).toMillis + 5000))
+      Similarity.ensureIvfIndex(spark, tmpSf.toString, idx)
+      assert(Files.readString(marker) != sig1, "regenerated corpus must rebuild the index")
+    } finally {
+      // the centroids land in the stage dir named after the temp corpus
+      Seq(graft.sources.ReaderStage.stageDir(tmpSf.toString), tmpSf, Paths.get(idx))
+        .foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
+    }
   }
 
   test("loop centroid scoring (scan path) == literal-expression scoring, ordered") {
