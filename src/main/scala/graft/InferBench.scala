@@ -6,9 +6,11 @@ import graft.core._
   * (usage: runMain graft.InferBench [reps] [sentences] [cfg: default|genia]).
   *
   * Prints tokens/s per rep plus a decode checksum — the checksum must be
-  * invariant across kernel-level optimizations (the Nn GEMV kernels are
-  * register-blocked over OUTPUT rows only, which preserves each row's FP
-  * accumulation order bit-exactly). InferBenchSpec pins it at 192 sentences.
+  * invariant across kernel-level optimizations (the kernels block over
+  * output rows and tokens, never inside one row's sum, which preserves each
+  * row's FP accumulation order bit-exactly). InferBenchSpec pins it at 192
+  * sentences. Compare the median of the later reps: the blocked SIMD
+  * kernels need about 10 reps to reach steady state.
   */
 object InferBench {
   /** The seeded weights (seed 42, 8 kinds), a `vocabSize`-word lexicon and

@@ -66,14 +66,6 @@ object Nn {
     */
   def dense(w: Array[Float], b: Array[Float], inDim: Int, outDim: Int,
             x: Array[Float], xOff: Int, y: Array[Float], yOff: Int): Unit = {
-    // SIMD path (bit-exact, see Simd): only when the output is wide enough to
-    // fill vector lanes — the tiny head/remedy denses (outDim 6/10) stay on
-    // the register-blocked scalar loop below. This transposes per call; a
-    // hot path holds the transpose with its weights and calls denseT.
-    if (Simd.enabled && outDim >= 16) {
-      SimdKernels.gemvT(Simd.transposed(w, inDim, outDim), b, inDim, outDim, x, xOff, y, yOff)
-      return
-    }
     var o = 0
     while (o + 4 <= outDim) {
       var a0 = b(o); var a1 = b(o + 1); var a2 = b(o + 2); var a3 = b(o + 3)
@@ -98,14 +90,24 @@ object Nn {
     }
   }
 
-  /** [[dense]] with `wT = Simd.transposed(w, inDim, outDim)` held by the
-    * caller
+  /** [[dense]] over `n` consecutive rows (x stride inDim, y stride outDim),
+    * with `wT = Simd.transposed(w, inDim, outDim)` held by the caller. The
+    * SIMD path (bit-exact, see Simd) runs only when the output is wide enough
+    * to fill vector lanes: one GEMV for a single row, else one token-blocked
+    * GEMM. The narrow production heads (outDim 6/10) stay on the
+    * register-blocked scalar loop.
     */
   private[core] def denseT(w: Array[Float], wT: Array[Float], b: Array[Float],
                            inDim: Int, outDim: Int,
-                           x: Array[Float], xOff: Int, y: Array[Float], yOff: Int): Unit =
-    if (Simd.enabled && outDim >= 16) SimdKernels.gemvT(wT, b, inDim, outDim, x, xOff, y, yOff)
-    else dense(w, b, inDim, outDim, x, xOff, y, yOff)
+                           x: Array[Float], xOff: Int, y: Array[Float], yOff: Int,
+                           n: Int = 1): Unit =
+    if (Simd.enabled && outDim >= 16) {
+      if (n == 1) SimdKernels.gemvT(wT, b, 0, inDim, outDim, x, xOff, y, yOff)
+      else SimdKernels.gemmT(wT, b, inDim, outDim, n, x, xOff, inDim, y, yOff, outDim)
+    } else {
+      var t = 0
+      while (t < n) { dense(w, b, inDim, outDim, x, xOff + t * inDim, y, yOff + t * outDim); t += 1 }
+    }
 
   /** LayerNorm over the last (feature) dim, torch defaults (eps=1e-5, affine). */
   def layerNorm(gamma: Array[Float], beta: Array[Float], dim: Int,
@@ -124,6 +126,24 @@ object Nn {
       y(yOff + i) = ((x(xOff + i) - mean).toFloat * inv) * gamma(i) + beta(i)
       i += 1
     }
+  }
+}
+
+/** Scratch for [[LstmCell.run]] on cells of up to `maxHidden` units: the
+  * state h and c, one step's gate pre-activations, and the SIMD path's
+  * hoisted input projection P (len × 4H), which grows on demand. One per
+  * engine, like the engine's other buffers; never shared between threads.
+  */
+final class LstmScratch(maxHidden: Int) {
+  val h = new Array[Float](maxHidden)
+  val c = new Array[Float](maxHidden)
+  val gates = new Array[Float](4 * maxHidden)
+  private var p = new Array[Float](0)
+
+  /** P with room for at least `n` floats */
+  private[core] def proj(n: Int): Array[Float] = {
+    if (p.length < n) p = new Array[Float](math.max(n, 2 * p.length))
+    p
   }
 }
 
@@ -148,27 +168,33 @@ final class LstmCell(val inDim: Int, val hidden: Int,
 
   /** Runs the sequence x[t] (t = 0..len-1 over stride inDim starting xOff),
     * direction +1 or -1, writing h_t into out at (outOff + t*outStride + lane).
-    * Scratch arrays (h, c, gates) must be sized hidden/hidden/4*hidden.
+    * `s` must hold at least `hidden` units.
     */
   def run(x: Array[Float], xOff: Int, len: Int, reverse: Boolean,
           out: Array[Float], outOff: Int, outStride: Int, lane: Int,
-          h: Array[Float], c: Array[Float], gates: Array[Float]): Unit = {
+          s: LstmScratch): Unit = {
+    val h = s.h
+    val c = s.c
+    val gates = s.gates
     java.util.Arrays.fill(h, 0f)
     java.util.Arrays.fill(c, 0f)
     val H = hidden
     val simd = useSimd
+    // SIMD (bit-exact, see Simd): P_t = bIh + bHh + wIh·x_t for every t in one
+    // token-blocked GEMM, before the recurrence; each step then adds wHh·h
+    val p = if (simd) s.proj(len * 4 * H) else null
+    if (simd) SimdKernels.gemmT(wIhT, bSum, inDim, 4 * H, len, x, xOff, inDim, p, 0, 4 * H)
     var step = 0
     while (step < len) {
       val t = if (reverse) len - 1 - step else step
-      val xo = xOff + t * inDim
-      // gates = bIh + bHh + wIh·x_t + wHh·h — SIMD across gate lanes when
-      // available (per-gate FP order unchanged, see Simd), else
+      // gates = bIh + bHh + wIh·x_t + wHh·h. The scalar path is
       // register-blocked 4 gate rows at a time (4H is always a multiple of 4,
       // so no remainder): each x/h load feeds 4 independent accumulators;
       // per-row FP order unchanged (bit-exact vs the row-at-a-time loop, see
       // Nn.dense). An 8-row block measured slower here (register pressure).
-      if (simd) SimdKernels.lstmGates(wIhT, wHhT, bSum, inDim, H, x, xo, h, gates)
+      if (simd) SimdKernels.gemvT(wHhT, p, t * 4 * H, H, 4 * H, h, 0, gates, 0)
       else {
+      val xo = xOff + t * inDim
       var j = 0
       while (j < 4 * H) {
         var a0 = bIh(j) + bHh(j); var a1 = bIh(j + 1) + bHh(j + 1)
@@ -217,10 +243,9 @@ final class BiLstm(val fwd: LstmCell, val bwd: LstmCell) extends Serializable {
   val hidden: Int = fwd.hidden
   val outDim: Int = 2 * fwd.hidden
   def run(x: Array[Float], xOff: Int, len: Int,
-          out: Array[Float], outOff: Int,
-          h: Array[Float], c: Array[Float], gates: Array[Float]): Unit = {
-    fwd.run(x, xOff, len, reverse = false, out, outOff, outDim, 0, h, c, gates)
-    bwd.run(x, xOff, len, reverse = true, out, outOff, outDim, hidden, h, c, gates)
+          out: Array[Float], outOff: Int, s: LstmScratch): Unit = {
+    fwd.run(x, xOff, len, reverse = false, out, outOff, outDim, 0, s)
+    bwd.run(x, xOff, len, reverse = true, out, outOff, outDim, hidden, s)
   }
 }
 
@@ -238,12 +263,7 @@ final class Conv2Tap(val inCh: Int, val outCh: Int,
 
   def run(x: Array[Float], xOff: Int, len: Int, y: Array[Float], yOff: Int): Unit = {
     if (useSimd) {
-      var t = 0
-      while (t < len - 1) {
-        val x0 = xOff + t * inCh
-        SimdKernels.conv2(w0T, w1T, b, inCh, outCh, x, x0, x0 + inCh, y, yOff + t * outCh)
-        t += 1
-      }
+      SimdKernels.conv2T(w0T, w1T, b, inCh, outCh, len - 1, x, xOff, y, yOff)
       return
     }
     var t = 0

@@ -64,9 +64,13 @@ final class PyramidWeights(
     val headW: Array[Float], val headB: Array[Float],       // [(C+1) × encOut]
     val remedyW: Array[Float], val remedyB: Array[Float]    // [2C × encOut]
 ) extends Serializable {
-  /** `encDenseW` transposed for the SIMD dense kernel (see Simd) */
+  /** the dense weights transposed for the SIMD kernels (see Simd) */
   @transient private[core] lazy val encDenseWT: Array[Float] =
     Simd.transposed(encDenseW, 2 * cfg.encHidden, cfg.encOut)
+  @transient private[core] lazy val headWT: Array[Float] =
+    Simd.transposed(headW, cfg.encOut, numClasses)
+  @transient private[core] lazy val remedyWT: Array[Float] =
+    Simd.transposed(remedyW, cfg.encOut, 2 * (numClasses - 1))
 }
 
 object PyramidWeights {
@@ -128,9 +132,7 @@ final class PyramidInference(w: PyramidWeights, vocab: WordVocab) {
   private var charBuf: Array[Float] = _ // maxWordLen × charH
   private var charOut: Array[Float] = _ // maxWordLen × 2*charH
   private var charCap = 0
-  private val hS = new Array[Float](math.max(math.max(cfg.encHidden, cfg.decHidden), charH))
-  private val cS = new Array[Float](hS.length)
-  private val gS = new Array[Float](4 * hS.length)
+  private val lstmS = new LstmScratch(math.max(math.max(cfg.encHidden, cfg.decHidden), charH))
   private val logits = new Array[Float](math.max(w.numClasses, 2 * (w.numClasses - 1)))
 
   private def ensure(s: Int): Unit = if (s > cap) {
@@ -176,7 +178,7 @@ final class PyramidInference(w: PyramidWeights, vocab: WordVocab) {
         System.arraycopy(w.charEmb, cid * charH, charBuf, i * charH, charH)
         i += 1
       }
-      w.charLstm.run(charBuf, 0, L, charOut, 0, hS, cS, gS)
+      w.charLstm.run(charBuf, 0, L, charOut, 0, lstmS)
       cv = new Array[Float](cfg.charDim)
       System.arraycopy(charOut, (L - 1) * 2 * charH, cv, 0, charH)
       System.arraycopy(charOut, charH, cv, charH, charH)
@@ -200,12 +202,8 @@ final class PyramidInference(w: PyramidWeights, vocab: WordVocab) {
       t += 1
     }
     // 2. sentence encoder: BiLSTM → dense
-    w.encLstm.run(xIn, 0, S, encH, 0, hS, cS, gS)
-    t = 0
-    while (t < S) {
-      Nn.denseT(w.encDenseW, w.encDenseWT, w.encDenseB, 2 * cfg.encHidden, D, encH, t * 2 * cfg.encHidden, cur, t * D)
-      t += 1
-    }
+    w.encLstm.run(xIn, 0, S, encH, 0, lstmS)
+    Nn.denseT(w.encDenseW, w.encDenseWT, w.encDenseB, 2 * cfg.encHidden, D, encH, 0, cur, 0, S)
   }
 
   /** Extended encoder (N14, ref `transformer_embeddings.py:8-132`): an extra
@@ -229,12 +227,8 @@ final class PyramidInference(w: PyramidWeights, vocab: WordVocab) {
       t += 1
     }
     val encHL = new Array[Float](S * 2 * cfg.encHidden)
-    encExt.run(xEx, 0, S, encHL, 0, hS, cS, gS)
-    t = 0
-    while (t < S) {
-      Nn.denseT(w.encDenseW, w.encDenseWT, w.encDenseB, 2 * cfg.encHidden, D, encHL, t * 2 * cfg.encHidden, cur, t * D)
-      t += 1
-    }
+    encExt.run(xEx, 0, S, encHL, 0, lstmS)
+    Nn.denseT(w.encDenseW, w.encDenseWT, w.encDenseB, 2 * cfg.encHidden, D, encHL, 0, cur, 0, S)
   }
 
   /** Forward pass for one document's tokens. */
@@ -267,12 +261,12 @@ final class PyramidInference(w: PyramidWeights, vocab: WordVocab) {
     while (l <= cfg.maxDepth && continue) {
       t = 0
       while (t < T) { Nn.layerNorm(w.lnGamma, w.lnBeta, D, cur, t * D, nrm, t * D); t += 1 }
-      w.decLstm.run(nrm, 0, T, dec, 0, hS, cS, gS)
+      w.decLstm.run(nrm, 0, T, dec, 0, lstmS)
       if (l < cfg.maxDepth) {
         val ids = new Array[Int](T)
         t = 0
         while (t < T) {
-          Nn.dense(w.headW, w.headB, D, C1, dec, t * D, logits, 0)
+          Nn.denseT(w.headW, w.headWT, w.headB, D, C1, dec, t * D, logits, 0)
           var best = 0; var bv = logits(0); var c = 1
           while (c < C1) { if (logits(c) > bv) { bv = logits(c); best = c }; c += 1 }
           ids(t) = best
@@ -283,7 +277,7 @@ final class PyramidInference(w: PyramidWeights, vocab: WordVocab) {
         val bits = new Array[Long](T)
         t = 0
         while (t < T) {
-          Nn.dense(w.remedyW, w.remedyB, D, 2 * C, dec, t * D, logits, 0)
+          Nn.denseT(w.remedyW, w.remedyWT, w.remedyB, D, 2 * C, dec, t * D, logits, 0)
           var mask = 0L
           var c = 0
           while (c < 2 * C) { if (logits(c) > 0f) mask |= (1L << c); c += 1 }
@@ -318,7 +312,7 @@ final class PyramidInference(w: PyramidWeights, vocab: WordVocab) {
     while (l <= cfg.maxDepth && continue) {
       var t = 0
       while (t < T) { Nn.layerNorm(w.lnGamma, w.lnBeta, D, cur, t * D, nrm, t * D); t += 1 }
-      w.decLstm.run(nrm, 0, T, dec, 0, hS, cS, gS)
+      w.decLstm.run(nrm, 0, T, dec, 0, lstmS)
       layers += java.util.Arrays.copyOfRange(dec, 0, T * D)
       if (T > 1) {
         w.conv.run(dec, 0, T, nxt, 0)
@@ -333,7 +327,7 @@ final class PyramidInference(w: PyramidWeights, vocab: WordVocab) {
   private[core] def dim: Int = D
   private[core] def config: ModelConfig = cfg
   private[core] def weights: PyramidWeights = w
-  private[core] def scratch: (Array[Float], Array[Float], Array[Float]) = (hS, cS, gS)
+  private[core] def scratch: LstmScratch = lstmS
   private[core] def wordVec(token: String, out: Array[Float], off: Int): Unit =
     System.arraycopy(w.wordEmb, vocab.id(token) * cfg.wordDim, out, off, cfg.wordDim)
 

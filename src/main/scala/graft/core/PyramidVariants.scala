@@ -42,6 +42,19 @@ final class VariantWeights(
     Simd.transposed(invConvW0, 2 * cfg.encOut, cfg.encOut)
   @transient private[core] lazy val invConvW1T: Array[Float] =
     Simd.transposed(invConvW1, 2 * cfg.encOut, cfg.encOut)
+  /** the head weights transposed for the SIMD dense kernel (see Simd) */
+  @transient private[core] lazy val biHeadWT: Array[Float] =
+    Simd.transposed(biHeadW, 2 * cfg.encOut, numClasses)
+  @transient private[core] lazy val biRemedyWT: Array[Float] =
+    Simd.transposed(biRemedyW, 2 * cfg.encOut, 2 * (numClasses - 1))
+  @transient private[core] lazy val mlHeadWT: Array[Float] =
+    Simd.transposed(mlHeadW, cfg.encOut, numClasses - 1)
+  @transient private[core] lazy val mlRemedyWT: Array[Float] =
+    Simd.transposed(mlRemedyW, cfg.encOut, 2 * (numClasses - 1))
+  @transient private[core] lazy val ctxHeadWT: Array[Float] =
+    Simd.transposed(ctxHeadW, cfg.encOut + ctxDim, numClasses - 1)
+  @transient private[core] lazy val ctxRemedyWT: Array[Float] =
+    Simd.transposed(ctxRemedyW, cfg.encOut + ctxDim, 2 * (numClasses - 1))
 }
 
 object VariantWeights {
@@ -110,7 +123,7 @@ final class PyramidVariantInference(base: PyramidInference, vw: VariantWeights) 
     */
   private def inversePass(h: IndexedSeq[Array[Float]]): IndexedSeq[Array[Float]] = {
     val w = base.weights
-    val (hS, cS, gS) = base.scratch
+    val scratch = base.scratch
     val L = h.length
     val out = new Array[Array[Float]](L)
     var x = new Array[Float](h(L - 1).length) // zeros, sized like the top layer
@@ -122,7 +135,7 @@ final class PyramidVariantInference(base: PyramidInference, vw: VariantWeights) 
       val T = hl.length / D
       var t = 0
       while (t < T) { Nn.layerNorm(w.lnGamma, w.lnBeta, D, hl, t * D, a, t * D); t += 1 }
-      w.decLstm.run(a, 0, T, r, 0, hS, cS, gS)
+      w.decLstm.run(a, 0, T, r, 0, scratch)
       val cat = new Array[Float](T * 2 * D)
       t = 0
       while (t < T) {
@@ -142,15 +155,15 @@ final class PyramidVariantInference(base: PyramidInference, vw: VariantWeights) 
           val w0T = vw.invConvW0T
           val w1T = vw.invConvW1T
           // o = 0: only the w1 tap (no x above position -1)
-          SimdKernels.gemvT(w1T, vw.invConvB, 2 * D, D, cat, 0, nx, 0)
+          SimdKernels.gemvT(w1T, vw.invConvB, 0, 2 * D, D, cat, 0, nx, 0)
           var o = 1
           while (o < T) {
-            SimdKernels.gemvT(w0T, vw.invConvB, 2 * D, D, cat, (o - 1) * 2 * D, nx, o * D)
+            SimdKernels.gemvT(w0T, vw.invConvB, 0, 2 * D, D, cat, (o - 1) * 2 * D, nx, o * D)
             SimdKernels.gemvAccT(w1T, 2 * D, D, cat, o * 2 * D, nx, o * D)
             o += 1
           }
           // o = T: only the w0 tap
-          SimdKernels.gemvT(w0T, vw.invConvB, 2 * D, D, cat, (T - 1) * 2 * D, nx, T * D)
+          SimdKernels.gemvT(w0T, vw.invConvB, 0, 2 * D, D, cat, (T - 1) * 2 * D, nx, T * D)
         } else {
           var o = 0
           while (o <= T) {
@@ -196,7 +209,7 @@ final class PyramidVariantInference(base: PyramidInference, vw: VariantWeights) 
       val ids = new Array[Int](T)
       var t = 0
       while (t < T) {
-        Nn.dense(vw.biHeadW, vw.biHeadB, 2 * D, C1, cat, t * 2 * D, logits, 0)
+        Nn.denseT(vw.biHeadW, vw.biHeadWT, vw.biHeadB, 2 * D, C1, cat, t * 2 * D, logits, 0)
         var best = 0; var bv = logits(0); var c = 1
         while (c < C1) { if (logits(c) > bv) { bv = logits(c); best = c }; c += 1 }
         ids(t) = best
@@ -210,7 +223,7 @@ final class PyramidVariantInference(base: PyramidInference, vw: VariantWeights) 
       val bits = new Array[Long](T)
       var t = 0
       while (t < T) {
-        Nn.dense(vw.biRemedyW, vw.biRemedyB, 2 * D, 2 * C, cat, t * 2 * D, logits, 0)
+        Nn.denseT(vw.biRemedyW, vw.biRemedyWT, vw.biRemedyB, 2 * D, 2 * C, cat, t * 2 * D, logits, 0)
         var mask = 0L
         var c = 0
         while (c < 2 * C) { if (logits(c) > 0f) mask |= (1L << c); c += 1 }
@@ -241,19 +254,20 @@ final class PyramidVariantInference(base: PyramidInference, vw: VariantWeights) 
     val dc = if (ctx == null) 0 else vw.ctxDim
     val in = D + dc
     val row = new Array[Float](in)
-    val (hw, hb, rw, rb) =
-      if (ctx == null) (vw.mlHeadW, vw.mlHeadB, vw.mlRemedyW, vw.mlRemedyB)
-      else (vw.ctxHeadW, vw.ctxHeadB, vw.ctxRemedyW, vw.ctxRemedyB)
+    val (hw, hwT, hb, rw, rwT, rb) =
+      if (ctx == null) (vw.mlHeadW, vw.mlHeadWT, vw.mlHeadB, vw.mlRemedyW, vw.mlRemedyWT, vw.mlRemedyB)
+      else (vw.ctxHeadW, vw.ctxHeadWT, vw.ctxHeadB, vw.ctxRemedyW, vw.ctxRemedyWT, vw.ctxRemedyB)
     if (ctx != null) System.arraycopy(ctx, 0, row, D, dc)
     val hasRemedy = h.length > cfg.maxDepth
     val nLayers = if (hasRemedy) h.length - 1 else h.length
-    def bitsOf(hl: Array[Float], w: Array[Float], b: Array[Float], nOut: Int): Array[Long] = {
+    def bitsOf(hl: Array[Float], w: Array[Float], wT: Array[Float], b: Array[Float],
+               nOut: Int): Array[Long] = {
       val T = hl.length / D
       val out = new Array[Long](T)
       var t = 0
       while (t < T) {
         System.arraycopy(hl, t * D, row, 0, D)
-        Nn.dense(w, b, in, nOut, row, 0, logits, 0)
+        Nn.denseT(w, wT, b, in, nOut, row, 0, logits, 0)
         var mask = 0L
         var c = 0
         while (c < nOut) { if (logits(c) > 0f) mask |= (1L << c); c += 1 }
@@ -262,8 +276,8 @@ final class PyramidVariantInference(base: PyramidInference, vw: VariantWeights) 
       }
       out
     }
-    val layers = (0 until nLayers).map(l => bitsOf(h(l), hw, hb, C))
-    val remedy = if (hasRemedy) Some(bitsOf(h.last, rw, rb, 2 * C)) else None
+    val layers = (0 until nLayers).map(l => bitsOf(h(l), hw, hwT, hb, C))
+    val remedy = if (hasRemedy) Some(bitsOf(h.last, rw, rwT, rb, 2 * C)) else None
     (layers, remedy)
   }
 
@@ -320,9 +334,7 @@ final class PyramidVariantInference(base: PyramidInference, vw: VariantWeights) 
   // ------------------------------------------------------------------ N13
 
   private val ctxH = vw.ctxDim / 2
-  private lazy val ctxHS = new Array[Float](ctxH)
-  private lazy val ctxCS = new Array[Float](ctxH)
-  private lazy val ctxGS = new Array[Float](4 * ctxH)
+  private lazy val ctxS = new LstmScratch(ctxH)
 
   /** Doc-RNN context encoder (N13, `contextual_encoder.py:10-181` /
     * `document_embeddings.py:14-336` doc-RNN variant): a seeded BiLSTM runs
@@ -343,7 +355,7 @@ final class PyramidVariantInference(base: PyramidInference, vw: VariantWeights) 
       i += 1
     }
     val rnn = new Array[Float](n * 2 * ctxH)
-    vw.docLstm.run(emb, 0, n, rnn, 0, ctxHS, ctxCS, ctxGS)
+    vw.docLstm.run(emb, 0, n, rnn, 0, ctxS)
     System.arraycopy(rnn, (n - 1) * 2 * ctxH, out, 0, ctxH)
     System.arraycopy(rnn, ctxH, out, ctxH, ctxH)
     out

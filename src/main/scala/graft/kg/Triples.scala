@@ -64,9 +64,11 @@ object Triples {
                        bc: org.apache.spark.broadcast.Broadcast[Mentions.Model]): PipelineHandle = {
     // docs feed BOTH the mention-detection subtree and the dict build — one
     // persisted assembly pass instead of re-tokenizing the corpus per
-    // consumer; released by unpersistAll only if this call cached them
+    // consumer; cached and released by unpersistAll only if the caller has
+    // not cached them already
     val ownDocs = docs0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val docs = docs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docs = if (ownDocs) docs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+               else docs0
     val mentions = Mentions.detect(docs, bc).toDF()
     // the dict subtree (scan + ngram HOFs + distinct agg) feeds BOTH the
     // broadcast link join and the CC edge derivation — persist or compute 2×

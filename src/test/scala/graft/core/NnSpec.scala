@@ -55,11 +55,10 @@ class NnSpec extends AnyFunSuite {
     val x = rnd(5, 3 * inDim)
     val out = new Array[Float](3 * 2 * h)
     val naive = new Array[Float](3 * 2 * h)
-    val (hs, cs, gs) = (new Array[Float](h), new Array[Float](h), new Array[Float](4 * h))
-    cell.run(x, 0, 3, reverse = false, out, 0, 2 * h, 0, hs, cs, gs)
+    cell.run(x, 0, 3, reverse = false, out, 0, 2 * h, 0, new LstmScratch(h))
 
     // naive re-run: single-accumulator gates, same cell math
-    java.util.Arrays.fill(hs, 0f); java.util.Arrays.fill(cs, 0f)
+    val (hs, cs) = (new Array[Float](h), new Array[Float](h))
     for (t <- 0 until 3) {
       val gates = new Array[Float](4 * h)
       for (j <- 0 until 4 * h) {

@@ -70,8 +70,7 @@ class PyramidInferenceSpec extends AnyFunSuite {
     val cell = new LstmCell(2, 3, new Array[Float](4 * 3 * 2), new Array[Float](4 * 3 * 3),
       new Array[Float](12), new Array[Float](12))
     val out = new Array[Float](5 * 3)
-    cell.run(Array.fill(10)(1f), 0, 5, reverse = false, out, 0, 3, 0,
-      new Array[Float](3), new Array[Float](3), new Array[Float](12))
+    cell.run(Array.fill(10)(1f), 0, 5, reverse = false, out, 0, 3, 0, new LstmScratch(3))
     assert(out.forall(_ == 0f)) // i=f=o=0.5, g=0 ⇒ c=0 ⇒ h=0
   }
 

@@ -4,11 +4,18 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.storage.StorageLevel
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.ModelConfig
 
 /** The triple stage's physical plan and rows on a hand-built canon frame:
   * one de-duplication exchange for all four families, and the same triple
-  * set as a distinct per family.
+  * set as a distinct per family. Also: the pipeline leaves a caller's cache
+  * of its docs alone.
   */
 class TriplesSpec extends AnyFunSuite {
   private lazy val spark: SparkSession = SparkSession.builder()
@@ -73,5 +80,39 @@ class TriplesSpec extends AnyFunSuite {
     assert(got.length == got.toSet.size, "triples must be distinct")
     assert(got.toSet == want)
     assert(coOccurs.nonEmpty && depictedIn.nonEmpty)
+  }
+
+  /** The messages `CacheManager` logs while `body` runs. */
+  private def cacheManagerLog(body: => Unit): Seq[String] = {
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val logger = ctx.getLogger("org.apache.spark.sql.execution.CacheManager").asInstanceOf[Logger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("triples-spec-cache-log", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    logger.addAppender(appender)
+    try body
+    finally { logger.removeAppender(appender); appender.stop() }
+    scala.jdk.CollectionConverters.CollectionHasAsScala(seen).asScala.toSeq
+  }
+
+  test("pipelineHandleBc does not cache again the docs its caller cached") {
+    import spark.implicits._
+    val words = Seq("Alice", "met", "Bob", "in", "Paris", "and", "Acme", "Corp", "hired", "Carol")
+    val docs = Seq.tabulate(24) { d =>
+      DocGen.assemble(DocGen.docIdOf(d), Seq.tabulate(12)(i => words((d * 7 + i * 3) % words.size)).mkString(" "))
+    }.toDS().cache()
+    docs.count()
+    val model = Mentions.buildModel(docs, ModelConfig.tiny)
+    val log = cacheManagerLog {
+      val handle = Triples.pipelineHandleBc(docs, spark.sparkContext.broadcast(model))
+      handle.triples.count()
+      handle.unpersistAll()
+    }
+    assert(!log.exists(_.contains("Asked to cache already cached data")), log.mkString("\n"))
+    assert(docs.storageLevel != StorageLevel.NONE, "the caller's cache of the docs was released")
+    docs.unpersist()
   }
 }
