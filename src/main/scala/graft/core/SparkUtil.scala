@@ -1,12 +1,14 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared Spark plumbing: the partition-count rules ([[widen]],
   * [[adaptiveParts]]), the cache-lifetime rule ([[materialize]]) and the
-  * string order of the driver fast paths ([[SparkStringOrdering]]), so no
-  * operator decides them locally.
+  * string and double orders of the driver fast paths
+  * ([[SparkStringOrdering]], [[SparkDoubleOrdering]]), so no operator decides
+  * them locally.
   */
 object SparkUtil {
 
@@ -66,5 +68,12 @@ object SparkUtil {
   object SparkStringOrdering extends Ordering[String] {
     def compare(a: String, b: String): Int =
       UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
+  }
+
+  /** Spark SQL's double order (`SQLOrderingUtil.compareDoubles`): NaN is
+    * equal to NaN and above every other value, and -0.0 equals 0.0.
+    */
+  object SparkDoubleOrdering extends Ordering[Double] {
+    def compare(a: Double, b: Double): Int = SQLOrderingUtil.compareDoubles(a, b)
   }
 }

@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.SparkUtil.SparkStringOrdering
 
@@ -27,7 +27,8 @@ object Canonical {
   /** candidate edges from the dictionary: an alias carrying k candidate
     * entities connects ALL of them pairwise (shared-alias ambiguity,
     * SURVEY.md §7 stage 3) — a (min, max)-only derivation would silently
-    * split components when an alias has ≥3 candidates.
+    * split components when an alias has ≥3 candidates. Its driver twin is
+    * [[edgesFromRows]].
     */
   def edgesFromDict(dict: DataFrame): DataFrame =
     dict.groupBy("alias")
@@ -38,6 +39,18 @@ object Canonical {
           "y -> struct(x as src, y as dst))))")).as("e"))
       .select(col("e.src"), col("e.dst"))
       .distinct()
+
+  /** The driver twin of [[edgesFromDict]] over collected dictionary rows: per
+    * alias the sorted distinct entity ids (Spark's string order, as
+    * `sort_array` sorts), the first [[MaxCandidatesPerAlias]] of them, and
+    * every pair of them as (lower, higher), de-duplicated. CanonicalSpec pins
+    * the two equal.
+    */
+  def edgesFromRows(rows: Array[AliasRow]): Array[(String, String)] =
+    rows.groupMap(_.alias)(_.entity_id).valuesIterator.flatMap { ids =>
+      val es = ids.distinct.sorted(SparkStringOrdering).take(MaxCandidatesPerAlias)
+      es.indices.iterator.flatMap(i => es.iterator.drop(i + 1).map(es(i) -> _))
+    }.toArray.distinct
 
   private def largeStar(edges: DataFrame): DataFrame = {
     val sym = edges.select(col("src").as("u"), col("dst").as("v"))
@@ -74,31 +87,43 @@ object Canonical {
     (row.getLong(0), row.getDecimal(1).hashCode().toLong)
   }
 
-  /** The crossover of every driver fast path (CC here, `GraphOps.labelProp`
-    * and `GraphOps.kcore`): below this many edges the graph fits comfortably
-    * on the driver, and a local loop over the collected edges beats the ~6
-    * Spark jobs each distributed round costs. It sits below the crossover
-    * CcBench measured (BENCH/CC_BENCH.md). The distributed loops remain the
-    * path for KB-scale graphs.
+  /** The crossover of every driver fast path: below this many rows the input
+    * fits comfortably on the driver, and a local loop over the collected rows
+    * beats the chain of small Spark jobs the distributed path costs (about 6
+    * per star round). The rows are edges for CC here, `GraphOps.labelProp`
+    * and `GraphOps.kcore`, and alias-dictionary rows for the pipeline's
+    * dictionary side (`Triples.pipelineHandleBc`). It sits below the crossover
+    * CcBench measured (BENCH/CC_BENCH.md). The distributed loops and the
+    * relational dictionary side remain the path for KB-scale inputs.
     */
   val DriverCcThreshold = 500000L
 
-  /** The one size guard in front of the driver fast paths: counts `edges`
-    * (one job) and collects their `(src, dst)` pairs (a second job) only
-    * when the count is at most `threshold`. Returns the count and, when they
-    * fit, the pairs. The fast paths take the collected pairs, never a
-    * DataFrame, so none can run on an unguarded graph.
+  /** The one size guard in front of the driver fast paths: a single bounded
+    * action, `limit(threshold + 1)` then collect. Returns the rows when there
+    * are at most `threshold` of them, and `None` otherwise; above the
+    * threshold it does not know the exact count. The fast paths take the
+    * collected rows, never a DataFrame, so none can run on unguarded input.
+    *
+    * The collect scans partitions incrementally (`executeTake`): one
+    * partition, then up to 4× the partitions scanned so far while fewer than
+    * `threshold + 1` rows have arrived (Spark's default
+    * `spark.sql.limit.initialNumPartitions` 1 and `scaleUpFactor` 4). On an
+    * input of P partitions with no exchange that is at most 1 + ⌈log₅ P⌉ jobs
+    * (2 for P ≤ 5); an exchange below adds its map-stage job, and AQE usually
+    * coalesces the small post-shuffle side to one partition. A negative
+    * threshold returns `None` without a job; one of `Int.MaxValue` or more
+    * collects every row, as no array holds more.
     */
-  def collectIfSmall(edges: DataFrame,
-                     threshold: Long): (Long, Option[Array[(String, String)]]) = {
-    val n = edges.count()
-    if (n > threshold) (n, None)
+  def collectIfSmall[T](rows: Dataset[T], threshold: Long): Option[Array[T]] =
+    if (threshold < 0) None
     else {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      (n, Some(edges.select("src", "dst").as[(String, String)].collect()))
+      val got = rows.limit((math.min(threshold, Int.MaxValue - 1L) + 1).toInt).collect()
+      if (got.length > threshold) None else Some(got)
     }
-  }
+
+  /** `(src, dst)` of an edge frame as the typed input of [[collectIfSmall]]. */
+  def edgePairs(edges: DataFrame): Dataset[(String, String)] =
+    edges.select("src", "dst").as(Encoders.tuple(Encoders.STRING, Encoders.STRING))
 
   /** edges → (entity_id, canonical_id) mapping covering every node that
     * appears in an edge (isolated entities stay their own canonical id via
@@ -114,15 +139,29 @@ object Canonical {
   final case class CcStats(edgesIn: Long, usedDriverPath: Boolean, iterations: Int)
 
   /** Throws IllegalStateException when the star loop is still changing after
-    * `maxIter` rounds, instead of returning a partial labeling. */
+    * `maxIter` rounds, instead of returning a partial labeling.
+    *
+    * The size guard runs on the distinct edges before anything is
+    * checkpointed, so the driver path costs only the guard's bounded collect.
+    * The star-loop path then computes the distinct edges a second time for
+    * its `localCheckpoint`: once for the guard, once for the loop. `edgesIn`
+    * is the number of collected pairs on the driver path and the first
+    * fingerprint's count on the star-loop path.
+    */
   def connectedComponentsWithStats(edges0: DataFrame, maxIter: Int = 20,
                                    driverThreshold: Long = DriverCcThreshold): (DataFrame, CcStats) = {
-    var edges = edges0.select("src", "dst").where(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(true)
-    val (nIn, small) = collectIfSmall(edges, driverThreshold)
-    if (small.isDefined) return (driverUnionFind(edges.sparkSession, small.get),
-      CcStats(nIn, usedDriverPath = true, 0))
+    val distinctEdges = edges0.select("src", "dst").where(col("src") =!= col("dst")).distinct()
+    collectIfSmall(edgePairs(distinctEdges), driverThreshold) match {
+      case Some(pairs) => (driverUnionFind(edges0.sparkSession, pairs),
+        CcStats(pairs.length.toLong, usedDriverPath = true, 0))
+      case None => starLoop(distinctEdges, maxIter)
+    }
+  }
+
+  private def starLoop(distinctEdges: DataFrame, maxIter: Int): (DataFrame, CcStats) = {
+    var edges = distinctEdges.localCheckpoint(true)
     var fp = fingerprint(edges)
+    val nIn = fp._1
     var i = 0
     var converged = false
     while (i < maxIter && !converged) {
@@ -148,7 +187,7 @@ object Canonical {
     * the loop's `min`/`least` use) — KgPipelineSpec pins both paths against
     * GoldRef's independent union-find.
     */
-  private def driverUnionFind(spark: SparkSession, pairs: Array[(String, String)]): DataFrame = {
+  private[kg] def driverUnionFind(spark: SparkSession, pairs: Array[(String, String)]): DataFrame = {
     import spark.implicits._
     val parent = scala.collection.mutable.HashMap.empty[String, String]
     def find(x: String): String = {

@@ -378,7 +378,7 @@ object GraphOps {
       .repartition(parts, col("dst")).persist()
     // driver fast path below the CC crossover; KB-scale graphs take the
     // distributed loop below
-    val (_, small) = Canonical.collectIfSmall(sym, driverThreshold)
+    val small = Canonical.collectIfSmall(Canonical.edgePairs(sym), driverThreshold)
     if (small.isDefined)
       return materialize(labelPropDriver(sym.sparkSession, small.get), sym)
     var labels = sym.select(col("src").as("id")).distinct()
@@ -514,7 +514,7 @@ object GraphOps {
     val parts = adaptiveParts(e0)
     val sym = symEdges(e0).coalesce(parts).localCheckpoint(true)
     // driver fast path below the CC crossover
-    val (_, small) = Canonical.collectIfSmall(sym, driverThreshold)
+    val small = Canonical.collectIfSmall(Canonical.edgePairs(sym), driverThreshold)
     if (small.isDefined) return kcoreDriver(sym.sparkSession, small.get)
     val deg0 = sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("sym_degree"))
       .coalesce(parts).localCheckpoint(true)

@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.SparkUtil.{SparkDoubleOrdering, SparkStringOrdering}
 
 /** Stage 2 — entity linking: mentions ⋈ broadcast(alias dictionary).
   *
@@ -14,7 +15,8 @@ import org.apache.spark.sql.functions._
   */
 object Link {
 
-  /** alias → (best entity, kind, prior) — tiny, evaluated once, broadcast. */
+  /** alias → (best entity, kind, prior) — tiny, evaluated once, broadcast.
+    * Its driver twin is [[bestCandidatesLocal]]. */
   def bestCandidates(dict: DataFrame): DataFrame =
     dict.groupBy("alias").agg(
       max_by(
@@ -23,13 +25,20 @@ object Link {
       .select(col("alias"), col("best.entity_id"), col("best.kind").as("dict_kind"),
         col("best.prior"))
 
-  /** mentions (stage-1 output) → linked mentions. Inner join: unlinkable
-    * mentions drop out here (NIL in KB terms).
-    *
-    * `useBroadcast = false` switches to a shuffle hash/sort-merge join for
-    * KB-scale dictionaries (10⁸ aliases would OOM the driver broadcast) —
-    * same escape hatch as Canonical.canonicalize.
+  /** The driver twin of [[bestCandidates]] over collected dictionary rows, as
+    * a local frame with the same columns: per alias the row with the largest
+    * (prior, entity_id), in Spark's double order and string order (the order
+    * `max_by` compares the struct in). CanonicalSpec pins the two equal.
     */
+  def bestCandidatesLocal(spark: SparkSession, rows: Array[AliasRow]): DataFrame = {
+    import spark.implicits._
+    val byPriorThenId = Ordering.Tuple2(SparkDoubleOrdering, SparkStringOrdering)
+    rows.groupBy(_.alias).valuesIterator
+      .map(_.maxBy(r => (r.prior, r.entity_id))(byPriorThenId))
+      .map(r => (r.alias, r.entity_id, r.kind, r.prior)).toSeq
+      .toDF("alias", "entity_id", "dict_kind", "prior")
+  }
+
   /** dict rows above which the pre-aggregated candidate table stops being
     * broadcastable: ~100 B per alias row → ~100 MB at this threshold, the
     * upper edge of comfortable executor broadcast. A corpus-derived dict
@@ -46,8 +55,18 @@ object Link {
                maxBroadcastRows: Long = BroadcastMaxAliases): DataFrame =
     link(mentions, dict, useBroadcast = dict.count() <= maxBroadcastRows)
 
-  def link(mentions: DataFrame, dict: DataFrame, useBroadcast: Boolean = true): DataFrame = {
-    val best0 = bestCandidates(dict)
+  /** mentions (stage-1 output) → linked mentions. Inner join: unlinkable
+    * mentions drop out here (NIL in KB terms).
+    *
+    * `useBroadcast = false` switches to a shuffle hash/sort-merge join for
+    * KB-scale dictionaries (10⁸ aliases would OOM the driver broadcast) —
+    * same escape hatch as Canonical.canonicalize.
+    */
+  def link(mentions: DataFrame, dict: DataFrame, useBroadcast: Boolean = true): DataFrame =
+    linkBest(mentions, bestCandidates(dict), useBroadcast)
+
+  /** [[link]] against an already reduced best-candidate table. */
+  def linkBest(mentions: DataFrame, best0: DataFrame, useBroadcast: Boolean): DataFrame = {
     val best = if (useBroadcast) broadcast(best0) else best0
     mentions
       .withColumn("norm_text", lower(col("text")))

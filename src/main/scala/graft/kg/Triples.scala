@@ -59,6 +59,11 @@ object Triples {
     * invocations in one session (SparkEntry's kg_triples via the BcRegistry
     * model broadcast) skip both the lexicon rebuild job and a per-call
     * broadcast leak.
+    *
+    * When the dictionary fits the guard, the only action it runs before it
+    * returns is the guard's bounded collect (2 jobs with AQE); detection,
+    * link, canonicalize and the triples all run in the caller's action. A
+    * larger dictionary adds the relational side's probes and CC jobs.
     */
   def pipelineHandleBc(docs0: org.apache.spark.sql.Dataset[PyramidDoc],
                        bc: org.apache.spark.broadcast.Broadcast[Mentions.Model]): PipelineHandle = {
@@ -70,25 +75,44 @@ object Triples {
     val docs = if (ownDocs) docs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
                else docs0
     val mentions = Mentions.detect(docs, bc).toDF()
-    // the dict subtree (scan + ngram HOFs + distinct agg) feeds BOTH the
-    // broadcast link join and the CC edge derivation — persist or compute 2×
-    val dict = AliasDict.build(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // size-guarded joins: the dict/canon-map row-count probes (cheap on the
-    // persisted frames) pick broadcast vs shuffle automatically, so a
-    // KB-scale dictionary flips the plan without a config change
-    val linked = Link.linkAuto(mentions, dict)
-    val canonMap = Canonical.connectedComponents(Canonical.edgesFromDict(dict))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val dict0 = AliasDict.build(docs)
+    val spark = docs.sparkSession
+    import spark.implicits._
+    // the dictionary guard: one bounded collect. A dictionary that fits the
+    // driver gets its best candidates and canonical map computed locally; a
+    // KB-scale one keeps the relational side, where the row-count probes
+    // pick broadcast vs shuffle without a config change
+    val (canon0, dictCached) =
+      Canonical.collectIfSmall(dict0.as[AliasRow], Canonical.DriverCcThreshold) match {
+        case Some(rows) =>
+          // both local frames broadcast without a probe and are not
+          // persisted: the best table has at most as many rows as the dict
+          // (≤ DriverCcThreshold = 500k < Link.BroadcastMaxAliases), the map
+          // at most as many as there are distinct entity ids (≤ 500k <
+          // Canonical.BroadcastMaxMapRows)
+          val best = Link.bestCandidatesLocal(spark, rows)
+          val canonMap = Canonical.driverUnionFind(spark, Canonical.edgesFromRows(rows))
+          (Canonical.canonicalize(Link.linkBest(mentions, best, useBroadcast = true),
+            canonMap, useBroadcast = true), Nil)
+        case None =>
+          // the dict subtree (scan + ngram HOFs + distinct agg) feeds BOTH
+          // the link join and the CC edge derivation — persist or compute 2×.
+          // The guard's collect does not fill this cache, so above the guard
+          // the dict is computed once more than below it
+          val dict = dict0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val canonMap = Canonical.connectedComponents(Canonical.edgesFromDict(dict))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          (Canonical.canonicalizeAuto(Link.linkAuto(mentions, dict), canonMap),
+            Seq(dict, canonMap))
+      }
     // fromCanonical's union reads canon once PER FAMILY (four different
     // projections, so Catalyst cannot reuse one scan); without a persist the
     // pyramid-inference subtree would be recomputed four times. At cluster scale this
     // is the stage boundary you'd materialize to a staging table (KgRunner
     // does exactly that per bucket).
-    val canon = Canonical.canonicalizeAuto(linked, canonMap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val canon = canon0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     PipelineHandle(fromCanonical(canon),
-      Seq(dict, canonMap, canon) ++ (if (ownDocs) Seq(docs.toDF()) else Nil))
+      dictCached ++ Seq(canon) ++ (if (ownDocs) Seq(docs.toDF()) else Nil))
   }
 
   def pipelineFrom(docs: org.apache.spark.sql.Dataset[PyramidDoc],

@@ -259,6 +259,18 @@ class KgPipelineSpec extends AnyFunSuite {
     assert(cacheEmpty, "handle-cached docs were left behind")
   }
 
+  test("pipelineHandleBc runs only the dictionary's bounded collect before it returns") {
+    val docs = DocGen.docs(spark, sfDir).cache()
+    docs.count()
+    val bc = spark.sparkContext.broadcast(model)
+    // the sf0.001 dictionary fits the driver guard: one bounded collect (its
+    // distinct's map stage and the collect, 2 jobs with AQE) and no probe,
+    // checkpoint or count of the link and canonicalization stages
+    val (handle, jobs) = graft.JobCount.during(spark.sparkContext)(Triples.pipelineHandleBc(docs, bc))
+    try assert(jobs.size <= 2, jobs.mkString("\n"))
+    finally { handle.unpersistAll(); docs.unpersist() }
+  }
+
   test("edgesFromDict connects ALL candidates of a multi-candidate alias") {
     import spark.implicits._
     // an alias with 3 candidates must form ONE component — the old

@@ -12,10 +12,13 @@ JVM run to the next do not count as differences:
   - plan ids            `[plan_id=241]`           -> `[plan_id=N]`
   - lambda class names  `Foo$$Lambda$12/0x..@ab`  -> `Foo$$Lambda`
                         `<function2>`             -> `<function>`
+  - HOF variable names  `lambda x_11`             -> `lambda x_N`
   - codegen stage ids   `[codegen id : 3]`        -> `[codegen id : N]`
   - AQE query stage ids the `Arguments: 15` line of a `...QueryStage` node
 
-AQE numbers query stages and codegen stages in the order they materialize,
+Spark numbers higher-order-function variables from one JVM-wide counter, so
+their suffix follows how many such functions the JVM built before. AQE
+numbers query stages and codegen stages in the order they materialize,
 which varies between runs of the same plan; a bare `Arguments: <int>` of any
 other node (a Coalesce or Limit count) is compared as it is.
 
@@ -33,6 +36,7 @@ NORMALIZERS = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"\$\$Lambda[$/\w]*(?:@[0-9a-f]+)?"), "$$Lambda"),
     (re.compile(r"<function\d+>"), "<function>"),
+    (re.compile(r"(lambda [a-z]+)_\d+"), r"\1_N"),
     (re.compile(r"\[codegen id : \d+\]"), "[codegen id : N]"),
 ]
 MAX_LINES = 8
