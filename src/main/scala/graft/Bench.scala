@@ -32,7 +32,7 @@ object Bench {
   }
 
   // external-contention instrumentation lives in graft.core.LoadProbe
-  // (shared with ScalingBench/GraphBench) + graft.core.StealProbe
+  // (shared with ScalingBench) + graft.core.StealProbe
   private def externalLoad(selfCpus: Double): Double =
     graft.core.LoadProbe.externalLoad(selfCpus)
   private type LoadSampler = graft.core.LoadProbe.Sampler
@@ -130,6 +130,19 @@ object Bench {
         s""""toks":${if (secOrSentinel > 0) tokens / secOrSentinel else -1.0}}"""
   }
 
+  /** Fixture staging (reader-format files, sequential KG goldens and the
+    * bucketed checkpointed run behind kg_triples_compacted), each guarded by
+    * its signature. It is input prep, not operator cost: the bench mains run
+    * it once before any timed region, so the first query to touch a cold
+    * stage dir does not absorb a one-time ~60 s.
+    */
+  def stage(spark: SparkSession, sfDir: String): Unit = {
+    graft.sources.ReaderStage.stage(spark, sfDir)
+    graft.kg.KgStage.stage(spark, sfDir)
+    graft.kg.KgRunner.ensureRun(spark, sfDir,
+      graft.sources.ReaderStage.stageDir(sfDir).resolve("kgrun").toString)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = BenchSession.cpus
@@ -150,17 +163,7 @@ object Bench {
     val spark = BenchSession("graft-bench", cpus)
     val selfCpus = cpus.toDouble
 
-    // fixture staging (reader-format files, sequential KG goldens) is input
-    // prep, not operator cost — run it OUTSIDE the timed region so the first
-    // query to touch a cold stage dir doesn't absorb a one-time ~60 s
-    val (_, stageSec) = time {
-      graft.sources.ReaderStage.stage(spark, sfDir)
-      graft.kg.KgStage.stage(spark, sfDir)
-      // the bucketed checkpointed run behind kg_triples_compacted is also
-      // one-time staging (signature-guarded) — pay it here, not in rep 1
-      graft.kg.KgRunner.ensureRun(spark, sfDir,
-        graft.sources.ReaderStage.stageDir(sfDir).resolve("kgrun").toString)
-    }
+    val (_, stageSec) = time(stage(spark, sfDir))
 
     // failures are reported EXPLICITLY (failed list + negative sentinel time)
     // — a swallowed exception must not masquerade as a plausible duration.
@@ -177,20 +180,8 @@ object Bench {
     require(reps >= 1, s"GRAFT_BENCH_REPS must be >= 1, got $reps")
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
-    // local-iteration filter (mirrors Verify's GRAFT_VERIFY_ONLY): run a
-    // subset of the battery for perf triage; the driver never sets it.
-    // Validated up front — a typo'd or empty filter would otherwise pay
-    // full staging + both headlines and record zero queries, silently
-    val only = sys.env.get("GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { ns =>
-      val unknown = ns.diff(SparkEntry.queries.keySet)
-      require(ns.nonEmpty && unknown.isEmpty,
-        s"GRAFT_BENCH_ONLY names not in SparkEntry.queries: " +
-          s"${unknown.toSeq.sorted.mkString(",")} (filter was: $ns)")
-    }
+    // the full battery, always (QueryBench times a subset)
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     // per query: (best sec, ext_load of the best rep)
     // name -> (best sec, ext load at best, steal% at best)
     val best = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double, Double)]
@@ -340,12 +331,8 @@ object Bench {
           s""""timeout_sec":$timeoutSec,"kg":${primary.jsonFull(cfgName)},""" +
           s""""kg2":${secondary.jsonFull(secondaryName)},""" +
           s""""ext_load":$fullLoads,"steal":$fullSteal,"queries":$fullQs}"""
-      // a GRAFT_BENCH_ONLY triage run must not clobber the full-battery record
-      val defaultOut =
-        if (only.isDefined) "BENCH/last_bench_filtered.json"
-        else "BENCH/last_bench_full.json"
       val out = java.nio.file.Paths.get(
-        sys.env.getOrElse("GRAFT_BENCH_FULL_OUT", defaultOut))
+        sys.env.getOrElse("GRAFT_BENCH_FULL_OUT", "BENCH/last_bench_full.json"))
       if (out.getParent != null) java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.writeString(out, full + "\n")
     } catch {

@@ -8,7 +8,8 @@ import java.nio.file.{Files, Path, Paths}
   * corpus-file half of the staleness rule in [[Derived]]: the IVF index,
   * the stream source copy, the KgRunner run and the in-memory model, slice,
   * centroid, schema and broadcast slots sign their input with it (the
-  * stages derived from the document text use [[Derived.contentSig]]).
+  * stages derived from the document text use [[Derived.contentSig]], which
+  * `ReaderStage.corpusSig` recomputes only when this signature flips).
   *
   * Granularity note: mtimes are hashed at NANOSECOND resolution
   * (`FileTime.to(NANOSECONDS)`), so an in-place regeneration that reproduces

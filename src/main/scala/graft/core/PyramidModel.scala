@@ -23,9 +23,14 @@ final case class ModelConfig(
     encHidden: Int = 50,
     decHidden: Int = 50,   // encOut = 2*decHidden (conv output feeds next layer's rnn)
     maxDepth: Int = 4,
-    // Calibrated on the seeded tiny model (see BENCH notes): ~2.5% of ngrams
-    // fire, remedy fires occasionally, most docs non-empty — realistic
-    // mention density for the synthetic corpus.
+    // Head biases, calibrated per config shape by a sweep on the seeded
+    // model over the first 80 docs (by doc_id) of sf0.001: oBias in {0.9,
+    // 1.0, 1.1, 1.15, 1.2, 1.4} x remedyBias in {-1.0, -2.0}, density =
+    // detected spans / n-gram positions (per doc of T tokens, the sum of
+    // T - l over layers l = 0 .. min(maxDepth, T - 1)). For this 50-d shape
+    // (1.4, -1.0) fires on ~2.5% of n-grams, remedy spans occasionally and
+    // leaves most docs non-empty — a realistic mention density for the
+    // synthetic corpus.
     oBias: Float = 1.4f,   // class-0 head bias: sparsifies detections
     remedyBias: Float = -1.0f
 ) {
@@ -36,11 +41,13 @@ final case class ModelConfig(
 object ModelConfig {
   /** GENIA-paper-shaped config (BASELINE.md rows 1-2; ref
     * `run_nne_sigmoid.py:163-191`): 200-d words, 60-d chars, hidden 100,
-    * depth 8. Head biases are recalibrated for this shape (CalibMain `base`
-    * sweep): logit spread grows with input dims, so the 50-d default's
-    * oBias=1.4 starved detection to 0.6% of ngrams / 29-of-80 empty docs;
-    * oBias=1.15 restores the ~2.5% GENIA-like density (remedy density is
-    * dominated by the bias sign and stays at the default).
+    * depth 8. Head biases are recalibrated for this shape by the same
+    * sweep as the defaults (grid and density metric at [[ModelConfig]]'s
+    * oBias): logit spread grows with input dims, so the 50-d default's
+    * oBias=1.4 starved detection to 0.62% of n-grams / 29-of-80 empty docs;
+    * oBias=1.15 restores 2.52%, the ~2.5% GENIA-like density (remedy
+    * density is dominated by the bias sign, so remedyBias stays at -1.0;
+    * BENCH/ROUND3.md).
     */
   val genia: ModelConfig = ModelConfig(wordDim = 200, charDim = 60,
     encHidden = 100, decHidden = 100, maxDepth = 8, oBias = 1.15f)

@@ -58,10 +58,13 @@ final class VariantWeights(
 }
 
 object VariantWeights {
-  /** Sigmoid-head bias for the multi-label / contextual heads, calibrated on
-    * the seeded model (CalibMain): −0.6 yields ~0.3-0.6 spans/token with a
-    * small share of multi-kind positions — GENIA-like nested density. The
-    * bidirectional heads reuse the base oBias/remedyBias calibration.
+  /** Sigmoid-head bias for the multi-label / contextual heads, chosen by a
+    * sweep of {−0.55, −0.6, −0.7, −0.8} on the seeded tiny and default
+    * models over the first 80 docs (by doc_id) of sf0.001, counting the
+    * spans per text token and the (start, length) positions that carry more
+    * than one kind: −0.6 yields ~0.3-0.6 spans/token with a small share of
+    * multi-kind positions — GENIA-like nested density. The bidirectional
+    * heads reuse the base oBias/remedyBias calibration ([[ModelConfig]]).
     */
   val MlBias: Float = -0.6f
 

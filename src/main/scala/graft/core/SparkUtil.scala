@@ -23,8 +23,8 @@ object SparkUtil {
     *
     * A streaming Dataset is always widened: `.rdd` is illegal on it, and a
     * micro-batch's partition count tracks its arrival-file count, not the
-    * core count (StreamBench measured 5.4x detection tokens/s from this one
-    * exchange, 14.6k → 78.8k at amplify-32).
+    * core count (BENCH/ROUND5_STREAM.md: 5.4x detection tokens/s from this
+    * one exchange, 14.6k → 78.8k at amplify-32).
     */
   def widen[T](ds: Dataset[T]): Dataset[T] = {
     val par = ds.sparkSession.sparkContext.defaultParallelism

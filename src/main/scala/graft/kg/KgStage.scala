@@ -45,8 +45,8 @@ object KgStage {
 
   def stage(spark: SparkSession, sfDir: String): Path = {
     val dir = stageDir(sfDir)
-    val docs = ReaderStage.baseDocs(spark, sfDir)
-    Derived.ensure(dir.resolve("_STAGED"), Derived.contentSig(Version, docs))(
+    lazy val docs = ReaderStage.baseDocs(spark, sfDir)
+    Derived.ensure(dir.resolve("_STAGED"), ReaderStage.corpusSig(Version, sfDir)(docs))(
       build(spark, dir, docs))
     dir
   }

@@ -30,8 +30,9 @@ import graft.core.ModelConfig
   */
 object KgStream {
 
-  // memory-sink query names must be unique within a JVM (QueryBench repeats
-  // queries in one session; a finished query's name stays registered)
+  // memory-sink query names must be unique within a JVM (QueryBench and
+  // Bench's passes repeat queries in one session; a finished query's name
+  // stays registered)
   private val runSeq = new java.util.concurrent.atomic.AtomicInteger
 
   /** Streaming mention detection + linking over the eval slice of

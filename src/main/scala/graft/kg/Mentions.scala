@@ -393,12 +393,4 @@ object Mentions {
       }
     }
   }
-
-  /** Convenience: full stage-1 dataframe for SparkEntry.queries. */
-  def mentionsDf(spark: SparkSession, sfDir: String, cfg: ModelConfig = ModelConfig()): DataFrame = {
-    val docs = DocGen.docs(spark, sfDir)
-    val model = buildModel(docs, cfg)
-    val bc = spark.sparkContext.broadcast(model)
-    detect(docs, bc).toDF()
-  }
 }

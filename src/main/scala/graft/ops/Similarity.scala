@@ -349,11 +349,6 @@ object Similarity {
       .as[(Long, Array[Float], Int)].collect()
   }
 
-  /** the distinct probed cluster ids (AnnBench's pruned-bytes accounting) */
-  def annIvfProbedClusters(spark: SparkSession, sfDir: String, k: Int = IvfClusters,
-                           probes: Int = IvfProbes, queryMod: Long = QueryMod): Seq[Int] =
-    probeRows(spark, sfDir, k, probes, queryMod).map(_._3).distinct.toSeq
-
   def annIvfIndexed(spark: SparkSession, sfDir: String, indexDir: String,
                     k: Int = IvfClusters, probes: Int = IvfProbes,
                     queryMod: Long = QueryMod): DataFrame = {

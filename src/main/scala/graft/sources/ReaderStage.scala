@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-import graft.core.{Derived, Fmt, Rng, Tok}
+import graft.core.{Derived, FileSig, Fmt, Rng, Tok}
 import graft.kg.GoldRef
 
 /** Deterministic staging of the reference's on-disk input formats, derived
@@ -368,14 +368,25 @@ object ReaderStage {
     */
   val StageVersion = "stage-v5" // v5: + lsh_planes.csv (random-hyperplane LSH planes for approximate_nearest)
 
+  private val contentSigs = new Derived.Memo[String](_ => ())
+
+  /** [[Derived.contentSig]] of `version` over `sfDir`'s corpus, kept in one
+    * slot per (version, sfDir) and signed with the [[FileSig]] of
+    * documents.parquet: while the corpus file is unchanged, a staleness check
+    * costs a file stat instead of a collect. `docs` is evaluated only when
+    * the slot is empty or the corpus file changed.
+    */
+  def corpusSig(version: String, sfDir: String)(docs: => Seq[(Long, String)]): String =
+    contentSigs.get(s"$version@$sfDir", FileSig.of(s"$sfDir/documents.parquet"))(
+      Derived.contentSig(version, docs))
+
   /** Stage every format; returns the stage dir. Idempotent, and a no-op when
-    * the _STAGED content signature ([[Derived.contentSig]]) matches the
-    * current corpus.
+    * the _STAGED content signature ([[corpusSig]]) matches the current corpus.
     */
   def stage(spark: SparkSession, sfDir: String): Path = {
     val dir = stageDir(sfDir)
-    val docs = baseDocs(spark, sfDir)
-    Derived.ensure(dir.resolve("_STAGED"), Derived.contentSig(StageVersion, docs))(
+    lazy val docs = baseDocs(spark, sfDir)
+    Derived.ensure(dir.resolve("_STAGED"), corpusSig(StageVersion, sfDir)(docs))(
       build(dir, docs))
     dir
   }

@@ -193,6 +193,17 @@ class EvalSpec extends AnyFunSuite {
     assert(ds2.count() == ds1.count(), "same data content regardless of cache identity")
   }
 
+  test("sliceDocs caches the slice once and caches it again after clearCache") {
+    val log = graft.CacheLog.during {
+      Eval.sliceDocs(spark, sfDir)
+      Eval.sliceDocs(spark, sfDir)
+    }
+    assert(!log.exists(_.contains("Asked to cache already cached data")), log.mkString("\n"))
+    spark.catalog.clearCache()
+    assert(Eval.sliceDocs(spark, sfDir).storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "the slice must be cached again after clearCache")
+  }
+
   test("repeated slice invocations hold a bounded number of model broadcasts") {
     // warm the registry slots this mix of entry points uses
     Eval.slicePred(spark, sfDir)

@@ -272,6 +272,60 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(driver.contains(Seq("m", "\uE000", 1L)))
   }
 
+  test("closed forms on a ring+chord and a hub star: pagerank, hits, kcore") {
+    import spark.implicits._
+    def co(es: Seq[(String, String)]) =
+      es.map { case (s, o) => (s, "co_occurs_with", o) }.toDF("subj", "pred", "obj")
+    // ring + a +7 chord: in- and out-degree 2 everywhere, 4 distinct
+    // symmetric neighbors (±1, ±7) per node
+    val n = 64
+    val ring = co((0 until n).flatMap(i => Seq(i -> (i + 1) % n, i -> (i + 7) % n))
+      .map { case (a, b) => (f"n$a%03d", f"n$b%03d") })
+    // hub ↔ each of m spokes: by symmetry every spoke scores alike, so each
+    // op reduces to two scalars; the hub's m in-edges are the partial-agg
+    // skew, its m out-edges the join skew
+    val m = 32
+    val star = co((1 to m).flatMap(i => Seq((f"s$i%03d", "hub"), ("hub", f"s$i%03d"))))
+    def byEntity(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => r.getString(0) -> r).toMap
+
+    // pagerank: uniform on the ring, exactly 1.0 after rank·N rounding
+    val ringPr = byEntity(GraphOps.pagerank(ring))
+    assert(ringPr.size == n && ringPr.values.forall(_.getDouble(1) == 1.0), ringPr.values.mkString(","))
+    // pagerank on the star: the two-variable recurrence (hub, spoke)
+    val nd = (m + 1).toDouble
+    var (h, sp) = (1.0 / nd, 1.0 / nd)
+    for (_ <- 1 to GraphOps.PrIters) {
+      val h2 = (1 - GraphOps.Damping) / nd + GraphOps.Damping * m * sp
+      sp = (1 - GraphOps.Damping) / nd + GraphOps.Damping * h / m
+      h = h2
+    }
+    val starPr = byEntity(GraphOps.pagerank(star)).view.mapValues(_.getDouble(1)).toMap
+    assert(starPr.size == m + 1)
+    assert(math.abs(starPr("hub") - h * nd) <= 1.01e-4, s"hub ${starPr("hub")} vs ${h * nd}")
+    starPr.removed("hub").values.foreach(r => assert(math.abs(r - sp * nd) <= 1.01e-4, s"spoke $r vs ${sp * nd}"))
+
+    // hits: 2-regular ring gives auth = 2^(2T-1), hub = 2^(2T) everywhere;
+    // the star gives powers of m: hub (m^T, m^T), spokes (m^(T-1), m^T)
+    val t = GraphOps.HitsIters
+    val ringHits = byEntity(GraphOps.hits(ring)).values.map(r => (r.getLong(1), r.getLong(2))).toSet
+    assert(ringHits == Set((1L << (2 * t - 1), 1L << (2 * t))))
+    val mT = BigInt(m).pow(t).toLong
+    val starHits = byEntity(GraphOps.hits(star)).view.mapValues(r => (r.getLong(1), r.getLong(2))).toMap
+    assert(starHits("hub") == ((mT, mT)))
+    assert(starHits.removed("hub").values.toSet == Set((BigInt(m).pow(t - 1).toLong, mT)))
+
+    // kcore on the distributed loop: the ring's symmetric degree 4 >= k, so
+    // no node peels; on the star every spoke (degree 1) peels in round 1,
+    // which isolates the hub, peeled in round 2
+    val ringCore = byEntity(GraphOps.kcore(ring, driverThreshold = -1L)).values
+      .map(r => (r.getLong(1), r.getInt(2), r.getInt(3))).toSeq
+    assert(ringCore.size == n && ringCore.toSet == Set((4L, 0, 1)))
+    val starCore = byEntity(GraphOps.kcore(star, driverThreshold = -1L)).view
+      .mapValues(r => (r.getLong(1), r.getInt(2), r.getInt(3))).toMap
+    assert(starCore("hub") == ((m.toLong, 2, 0)))
+    assert(starCore.size == m + 1 && starCore.removed("hub").values.toSet == Set((1L, 1, 0)))
+  }
+
   test("coocPmi: ln(n_ab·N / (n_a·n_b)) at 4 dp, min-joint filter") {
     import spark.implicits._
     val mi = Seq(

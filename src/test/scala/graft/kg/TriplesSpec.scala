@@ -5,10 +5,6 @@ import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.storage.StorageLevel
-import org.apache.logging.log4j.LogManager
-import org.apache.logging.log4j.core.{LogEvent, Logger, LoggerContext}
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.Property
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.ModelConfig
 
@@ -82,22 +78,6 @@ class TriplesSpec extends AnyFunSuite {
     assert(coOccurs.nonEmpty && depictedIn.nonEmpty)
   }
 
-  /** The messages `CacheManager` logs while `body` runs. */
-  private def cacheManagerLog(body: => Unit): Seq[String] = {
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val logger = ctx.getLogger("org.apache.spark.sql.execution.CacheManager").asInstanceOf[Logger]
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("triples-spec-cache-log", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
-    }
-    appender.start()
-    logger.addAppender(appender)
-    try body
-    finally { logger.removeAppender(appender); appender.stop() }
-    scala.jdk.CollectionConverters.CollectionHasAsScala(seen).asScala.toSeq
-  }
-
   test("pipelineHandleBc does not cache again the docs its caller cached") {
     import spark.implicits._
     val words = Seq("Alice", "met", "Bob", "in", "Paris", "and", "Acme", "Corp", "hired", "Carol")
@@ -106,7 +86,7 @@ class TriplesSpec extends AnyFunSuite {
     }.toDS().cache()
     docs.count()
     val model = Mentions.buildModel(docs, ModelConfig.tiny)
-    val log = cacheManagerLog {
+    val log = graft.CacheLog.during {
       val handle = Triples.pipelineHandleBc(docs, spark.sparkContext.broadcast(model))
       handle.triples.count()
       handle.unpersistAll()

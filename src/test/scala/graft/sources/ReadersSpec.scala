@@ -46,6 +46,44 @@ class ReadersSpec extends AnyFunSuite {
     assert(java.util.Arrays.equals(a, b))
   }
 
+  test("a fresh stage check starts no Spark job") {
+    graft.kg.KgStage.stage(spark, sfDir)
+    ReaderStage.stage(spark, sfDir)
+    val (_, jobs) = graft.JobCount.during(spark.sparkContext) {
+      graft.kg.KgStage.stage(spark, sfDir)
+      ReaderStage.stage(spark, sfDir)
+    }
+    assert(jobs.isEmpty, jobs.mkString("\n"))
+  }
+
+  test("a corpus rewritten in place restages") {
+    import java.nio.file.{Files, StandardCopyOption}
+    val tmpSf = Files.createTempDirectory("graft_restage_sf")
+    val corpus = tmpSf.resolve("documents.parquet")
+    Files.copy(java.nio.file.Paths.get(s"$sfDir/documents.parquet"), corpus)
+    val marker = ReaderStage.stage(spark, tmpSf.toString).resolve("_STAGED")
+    try {
+      val before = Files.readString(marker)
+      // the same path, now holding the first 5 docs
+      val small = Files.createTempDirectory("graft_restage_small").resolve("docs")
+      spark.read.parquet(s"$sfDir/documents.parquet").orderBy("doc_id").limit(5)
+        .coalesce(1).write.parquet(small.toString)
+      val part = Files.list(small).filter(_.getFileName.toString.endsWith(".parquet"))
+        .findFirst().get()
+      Files.copy(part, corpus, StandardCopyOption.REPLACE_EXISTING)
+      ReaderStage.stage(spark, tmpSf.toString)
+      val want = graft.core.Derived.contentSig(ReaderStage.StageVersion,
+        ReaderStage.baseDocs(spark, tmpSf.toString))
+      assert(want != before)
+      assert(Files.readString(marker) == want)
+    } finally {
+      val s = Files.walk(marker.getParent)
+      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally s.close()
+    }
+  }
+
   // ------------------------------------------------------------------- S1
 
   test("rasa reader recovers exactly the staged examples (S1)") {
