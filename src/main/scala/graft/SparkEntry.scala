@@ -15,8 +15,28 @@ import graft.ops._
   * cross-check (identical column names/aliases on both sides). Neural /
   * non-SQL stages (kg_*, ann, multimodal) get rows-only checks and are
   * verified against the sequential GoldRef re-derivation in `sbt test`.
+  *
+  * Mains stage, builders read paths: a main that runs `queries` calls
+  * [[stage]] once before its first query, and a builder only reads the
+  * fixture paths it needs. A main that skips [[stage]] fails on a missing
+  * path instead of staging inside a timed query.
   */
 object SparkEntry {
+
+  /** Fixture staging (reader-format files, sequential KG goldens and the
+    * bucketed checkpointed run behind kg_triples_compacted and the graph
+    * analytics), each guarded by its signature ([[graft.core.Derived]]). It
+    * is input prep, not operator cost: every main that runs [[queries]] calls
+    * it once before any query, so no query absorbs a one-time cold stage.
+    */
+  def stage(spark: SparkSession, sfDir: String): Unit = {
+    graft.sources.ReaderStage.stage(spark, sfDir)
+    KgStage.stage(spark, sfDir)
+    KgRunner.ensureRun(spark, sfDir, kgRunDir(sfDir))
+  }
+
+  private def kgRunDir(sfDir: String): String =
+    graft.sources.ReaderStage.stageDir(sfDir).resolve("kgrun").toString
 
   /** one model per sfDir so each kg_* query doesn't rebuild the lexicon
     * job; signed with the corpus file signature, so an in-place corpus
@@ -51,89 +71,54 @@ object SparkEntry {
     * KgPipelineSpec (per-row span equality, triples P=R=1.0 vs GoldRef).
     */
   private def kgQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "kg_docs" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir) // oracle reads the sequential staging
+    "kg_docs" -> ((s, dir) =>
       DocGen.docs(s, dir).toDF()
         .select(col("doc_id"), explode(col("spans")).as("s"))
-        .select(col("doc_id"), col("s.kind"), col("s.text"), col("s.media_ref"), col("s.offset"))
-    }),
+        .select(col("doc_id"), col("s.kind"), col("s.text"), col("s.media_ref"), col("s.offset"))),
     // distributed detect over the eval slice vs the STAGED GoldRef mentions:
     // the driver's DuckDB hash gate enforces per-row equality of the neural
     // stage (the P=R=1.0 spec assertion, now driver-checked)
-    "kg_mentions_slice" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir)
-      Eval.slicePred(s, dir)
-    }),
+    "kg_mentions_slice" -> ((s, dir) => Eval.slicePred(s, dir)),
     // N14: LM-embedding variant — precomputed lm parquet joined into the
     // encoder; gold is the sequential run with the same staged table
     "kg_mentions_lm" -> ((s, dir) => Eval.sliceLmPred(s, dir)),
     // variant decoders, linking, and the FLAGSHIP pipeline over the slice —
     // all hash-checked against staged sequential gold
-    "kg_mentions_bidir_slice" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir)
-      Eval.sliceVariantPred(s, dir, Mentions.Variant.Bidirectional)
-    }),
-    "kg_mentions_ml_slice" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir)
-      Eval.sliceVariantPred(s, dir, Mentions.Variant.MultiLabel)
-    }),
+    "kg_mentions_bidir_slice" -> ((s, dir) =>
+      Eval.sliceVariantPred(s, dir, Mentions.Variant.Bidirectional)),
+    "kg_mentions_ml_slice" -> ((s, dir) =>
+      Eval.sliceVariantPred(s, dir, Mentions.Variant.MultiLabel)),
     // N12 contextual decoder: article-window grouping (one uniform shuffle)
     // + pooled document context, vs the staged sequential gold
-    "kg_mentions_ctx_slice" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir)
-      Eval.sliceCtxPred(s, dir)
-    }),
+    "kg_mentions_ctx_slice" -> ((s, dir) => Eval.sliceCtxPred(s, dir)),
     // N12 over the article-bucketed STORAGE layout: same decoder + gold as
     // kg_mentions_ctx_slice but shuffle-free (the exchange was paid once at
     // materialization — KgPipelineSpec asserts the plan has no Exchange)
-    "kg_mentions_ctx_bucketed" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir)
-      Eval.sliceCtxBucketedPred(s, dir)
-    }),
+    "kg_mentions_ctx_bucketed" -> ((s, dir) => Eval.sliceCtxBucketedPred(s, dir)),
     // N13 third context encoder: PRECOMPUTED sentence-transformer-style
     // document vectors joined in from the staged table
     "kg_mentions_st" -> ((s, dir) => Eval.sliceStPred(s, dir)),
     // GENIA-shaped config (depth 8, 200-d, calibrated oBias): the reference's
     // real experiment size, hash-checked like the default-config slice
-    "kg_mentions_genia_slice" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir)
-      Eval.slicePred(s, dir, ModelConfig.genia)
-    }),
-    "kg_linked_slice" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir)
-      Eval.sliceLinked(s, dir)
-    }),
-    "kg_triples_slice" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir)
-      Eval.sliceTriples(s, dir)
-    }),
+    "kg_mentions_genia_slice" -> ((s, dir) => Eval.slicePred(s, dir, ModelConfig.genia)),
+    "kg_linked_slice" -> ((s, dir) => Eval.sliceLinked(s, dir)),
+    "kg_triples_slice" -> ((s, dir) => Eval.sliceTriples(s, dir)),
     // incremental ingest: streaming detect + stream-static link over the
     // same slice, value-checked against the SAME staged GoldRef linking as
     // the batch slice query — batch, stream, and sequential must all agree
-    "kg_stream_linked" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir)
-      KgStream.linkedStream(s, dir)
-    }),
+    "kg_stream_linked" -> ((s, dir) => KgStream.linkedStream(s, dir)),
     // full-corpus runs: value-checked against the staged FULL-corpus
     // sequential golds (KgStage stages them at the gate's small SF; at
     // large SFs the oracle still reads the sf0.01 staging)
-    "kg_mentions" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir)
-      Mentions.detect(DocGen.docs(s, dir), modelBc(s, dir)).toDF()
-    }),
-    "kg_mentions_bidir" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir)
+    "kg_mentions" -> ((s, dir) => Mentions.detect(DocGen.docs(s, dir), modelBc(s, dir)).toDF()),
+    "kg_mentions_bidir" -> ((s, dir) =>
       Mentions.detectVariant(DocGen.docs(s, dir), modelBc(s, dir),
-        Eval.vwBc(s, ModelConfig()), Mentions.Variant.Bidirectional).toDF()
-    }),
-    "kg_mentions_ml" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir)
+        Eval.vwBc(s), Mentions.Variant.Bidirectional).toDF()),
+    "kg_mentions_ml" -> ((s, dir) =>
       Mentions.detectVariant(DocGen.docs(s, dir), modelBc(s, dir),
-        Eval.vwBc(s, ModelConfig()), Mentions.Variant.MultiLabel).toDF()
-    }),
+        Eval.vwBc(s), Mentions.Variant.MultiLabel).toDF()),
     "kg_dict" -> ((s, dir) => AliasDict.build(DocGen.docs(s, dir))),
     "kg_linked" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir)
       // one persisted docs assembly shared by the detect and dict subtrees
       // (the pipelineHandleBc pattern); the bench clears the SQL cache
       // between queries, so nothing leaks across invocations
@@ -145,7 +130,6 @@ object SparkEntry {
     "kg_canonical_map" -> ((s, dir) =>
       Canonical.connectedComponents(Canonical.edgesFromDict(AliasDict.build(DocGen.docs(s, dir))))),
     "kg_triples" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir)
       // shared session model broadcast (same BcRegistry slot as kg_mentions/
       // kg_linked) instead of Triples.pipeline's fresh buildModel: skips a
       // redundant lexicon aggregation job per invocation; the model is a pure
@@ -173,14 +157,10 @@ object SparkEntry {
     "kg_kcore" -> ((s, dir) => GraphOps.kcore(compactedTriples(s, dir))),
   )
 
-  /** the checkpointed bucketed run's global compaction output (staged once
-    * per corpus signature; see KgRunner.ensureRun). */
-  private def compactedTriples(s: SparkSession, dir: String): DataFrame = {
-    val _ = KgStage.stage(s, dir)
-    val out = graft.sources.ReaderStage.stageDir(dir).resolve("kgrun").toString
-    KgRunner.ensureRun(s, dir, out)
-    s.read.parquet(s"$out/triples_compacted")
-  }
+  /** the checkpointed bucketed run's global compaction output, staged by
+    * [[stage]] */
+  private def compactedTriples(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(s"${kgRunDir(dir)}/triples_compacted")
 
   // ---------------------------------------------------------- relational
 
@@ -344,47 +324,47 @@ object SparkEntry {
     * json-format ones are DuckDB-verifiable straight off the staged files;
     * the wrg text format is not SQL-parseable → rows-only + ReadersSpec.
     */
-  private def stagePath(s: SparkSession, dir: String): String =
-    graft.sources.ReaderStage.stage(s, dir).toString
+  private def stagePath(dir: String): String =
+    graft.sources.ReaderStage.stageDir(dir).toString
 
   private def sourceQueries: Map[String, (SparkSession, String) => DataFrame] = {
     import graft.sources.Readers
     Map(
       "src_rasa" -> ((s, dir) =>
-        Readers.rasa(s, s"${stagePath(s, dir)}/rasa.json")
+        Readers.rasa(s, s"${stagePath(dir)}/rasa.json")
           .select(col("text"), explode(col("entities")).as("e"))
           .select(col("text"), col("e.kind").as("kind"), col("e.value").as("value"),
             col("e.start_c").as("start_c"), col("e.end_c").as("end_c"))),
       "src_jsonl" -> ((s, dir) =>
-        Readers.jsonl(s, s"${stagePath(s, dir)}/docs.jsonl", dropEntities = Seq("DNA"))
+        Readers.jsonl(s, s"${stagePath(dir)}/docs.jsonl", dropEntities = Seq("DNA"))
           .select(col("doc_id"), explode(col("entities")).as("e"))
           .select(col("doc_id"), col("e.kind").as("kind"), col("e.value").as("value"),
             col("e.start_c").as("start_c"), col("e.end_c").as("end_c"))),
       "src_wiki" -> ((s, dir) =>
-        Readers.wikipedia(s, s"${stagePath(s, dir)}/wiki.jsonl")),
+        Readers.wikipedia(s, s"${stagePath(dir)}/wiki.jsonl")),
       "src_wrg" -> ((s, dir) =>
-        Readers.wrg(s, s"${stagePath(s, dir)}/wrg").toDF()
+        Readers.wrg(s, s"${stagePath(dir)}/wrg").toDF()
           .select(col("file"), col("idx"), col("text"), explode_outer(col("entities")).as("e"))
           .select(col("file"), col("idx"), col("text"), col("e.kind").as("kind"),
             col("e.value").as("value"), col("e.start_c").as("start_c"),
             col("e.end_c").as("end_c"))),
       "src_wrg_swin" -> ((s, dir) =>
-        Readers.wrgSentenceWindow(s, s"${stagePath(s, dir)}/wrg", windowSize = 3)
+        Readers.wrgSentenceWindow(s, s"${stagePath(dir)}/wrg", windowSize = 3)
           .select(col("file"), col("idx"), col("text"),
             size(col("pre_texts")).as("n_pre"), size(col("post_texts")).as("n_post"),
             coalesce(try_element_at(col("pre_texts"), lit(-1)), lit("")).as("prev_text"),
             coalesce(try_element_at(col("post_texts"), lit(1)), lit("")).as("next_text"))),
       "src_wrg_twin" -> ((s, dir) =>
-        Readers.wrgTokenWindow(s, s"${stagePath(s, dir)}/wrg", windowSize = 16)
+        Readers.wrgTokenWindow(s, s"${stagePath(dir)}/wrg", windowSize = 16)
           .select(col("file"), col("idx"), col("text"), col("pre_ctx"), col("post_ctx"))),
       "src_iob2" -> ((s, dir) =>
-        Readers.iob2(s, s"${stagePath(s, dir)}/iob2").toDF()
+        Readers.iob2(s, s"${stagePath(dir)}/iob2").toDF()
           .select(col("file"), col("idx"), col("text"), explode_outer(col("entities")).as("e"))
           .select(col("file"), col("idx"), col("text"), col("e.kind").as("kind"),
             col("e.value").as("value"), col("e.start_c").as("start_c"),
             col("e.end_c").as("end_c"))),
       "src_wordvec" -> ((s, dir) => {
-        val wv = Readers.loadWordVectors(s, s"${stagePath(s, dir)}/glove.csv")
+        val wv = Readers.loadWordVectors(s, s"${stagePath(dir)}/glove.csv")
         import s.implicits._
         wv.lexicon.toSeq.zipWithIndex.map { case (w, i) =>
           val v = wv.matrix(i + 1).map(x => math.rint(x.toDouble * 1e6) / 1e6)
@@ -393,14 +373,14 @@ object SparkEntry {
       }),
       // wvlib normalize (ref wvlib.py:404): distributed unit-normalization
       "src_wordvec_norm" -> ((s, dir) =>
-        Readers.wordVectorNorm(s, s"${stagePath(s, dir)}/glove.csv")),
+        Readers.wordVectorNorm(s, s"${stagePath(dir)}/glove.csv")),
       // wvlib nearest (ref wvlib.py:304): top-10 cosine neighbors per probe
       "src_wordvec_nearest" -> ((s, dir) =>
-        Readers.wordVectorNearest(s, s"${stagePath(s, dir)}/glove.csv")),
+        Readers.wordVectorNearest(s, s"${stagePath(dir)}/glove.csv")),
       // wvlib approximate_nearest (ref wvlib.py:331): hyperplane-LSH
       // signatures, Hamming-ball candidates, exact cosine re-rank
       "src_wordvec_ann" -> ((s, dir) => {
-        val sp = stagePath(s, dir)
+        val sp = stagePath(dir)
         Readers.wordVectorAnnLsh(s, s"$sp/glove.csv", s"$sp/lsh_planes.csv")
       }),
     )
@@ -411,24 +391,13 @@ object SparkEntry {
     * rows-only here; the P=R=1.0 assertion lives in EvalSpec.
     */
   private def evalQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "eval_span_prf" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir) // oracle derives the table from staged gold
-      Eval.spanPrf(s, dir)
-    }),
-    "eval_bioes_prf" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir)
-      Eval.bioesPrf(s, dir)
-    }),
+    "eval_span_prf" -> ((s, dir) => Eval.spanPrf(s, dir)),
+    "eval_bioes_prf" -> ((s, dir) => Eval.bioesPrf(s, dir)),
     // per-layer/nesting aggregations over the eval slice so the DuckDB oracle
     // can re-derive them relationally from the staged GoldRef mentions
-    "eval_layers" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir)
-      Eval.perLayer(Eval.slicePred(s, dir), ModelConfig().maxDepth)
-    }),
-    "eval_nesting" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir)
-      Eval.nesting(Eval.slicePred(s, dir))
-    }),
+    "eval_layers" -> ((s, dir) =>
+      Eval.perLayer(Eval.slicePred(s, dir), ModelConfig().maxDepth)),
+    "eval_nesting" -> ((s, dir) => Eval.nesting(Eval.slicePred(s, dir))),
   )
 
   private def opsQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -472,41 +441,28 @@ object SparkEntry {
     // codec work, not stub math. Driver projections flatten the feature
     // array to scalar columns (the driver's pandas hasher can't hash array
     // cells); the API functions keep the array columns.
-    "mm_media_features" -> ((s, dir) => {
-      val stage = KgStage.stage(s, dir)
-      Multimodal.tiffFeatures(s, dir, s"$stage/media_tiff.parquet").select(
+    "mm_media_features" -> ((s, dir) =>
+      Multimodal.tiffFeatures(s, dir, s"${KgStage.stageDir(dir)}/media_tiff.parquet").select(
         Seq(col("doc_id"), col("media_ref"), col("width"), col("height"), col("n_frames")) ++
-          (0 until 8).map(i => col("feature")(i).cast("double").as(s"f$i")): _*)
-    }),
-    "mm_resize" -> ((s, dir) => {
-      val stage = KgStage.stage(s, dir)
-      Multimodal.resizePng(s, dir, s"$stage/media_png.parquet")
-    }),
-    "mm_frame_sample" -> ((s, dir) => {
-      val stage = KgStage.stage(s, dir)
-      Multimodal.sampleTiffFrames(s, dir, s"$stage/media_tiff.parquet")
-    }),
+          (0 until 8).map(i => col("feature")(i).cast("double").as(s"f$i")): _*)),
+    "mm_resize" -> ((s, dir) =>
+      Multimodal.resizePng(s, dir, s"${KgStage.stageDir(dir)}/media_png.parquet")),
+    "mm_frame_sample" -> ((s, dir) =>
+      Multimodal.sampleTiffFrames(s, dir, s"${KgStage.stageDir(dir)}/media_tiff.parquet")),
     // REAL decode: distributed ImageIO.read over staged PNG payloads; the
     // oracle reads the stage-time PRE-ENCODE (width, height, pixel_md5), so
     // the hash passes only if actual pixel decoding is correct
-    "mm_decode_png" -> ((s, dir) => {
-      val stage = KgStage.stage(s, dir)
-      Multimodal.decodePng(s, s"$stage/media_png.parquet")
-    }),
+    "mm_decode_png" -> ((s, dir) =>
+      Multimodal.decodePng(s, s"${KgStage.stageDir(dir)}/media_png.parquet")),
     // pixel-level dedup across byte-different lossless encodings: the hash
     // passes only if distributed decoding maps BOTH containers of every
     // asset (and the cross-asset pixel copies) onto the stage-time
     // pre-encode digests
-    "mm_dedup_pixels" -> ((s, dir) => {
-      val stage = KgStage.stage(s, dir)
-      Multimodal.dedupPixels(s, s"$stage/media_variants.parquet")
-    }),
+    "mm_dedup_pixels" -> ((s, dir) =>
+      Multimodal.dedupPixels(s, s"${KgStage.stageDir(dir)}/media_variants.parquet")),
     // interleaved-sequence token budgets (media expands to ImgTokens patch
     // tokens); the oracle re-derives them from the staged span table
-    "mm_interleave" -> ((s, dir) => {
-      val _ = KgStage.stage(s, dir)
-      Multimodal.interleaveBudget(s, dir)
-    }),
+    "mm_interleave" -> ((s, dir) => Multimodal.interleaveBudget(s, dir)),
   )
 
   // -------------------------------------------------------------- oracle

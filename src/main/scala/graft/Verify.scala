@@ -2,7 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. The fixtures the
+  * oracle reads are staged once (`SparkEntry.stage`) before the first query. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -27,6 +28,7 @@ object Verify {
         s"GRAFT_VERIFY_ONLY names not in SparkEntry.queries: " +
           s"${unknown.toSeq.sorted.mkString(",")} (filter was: $names)")
     }
+    SparkEntry.stage(spark, sfDir)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

@@ -14,14 +14,13 @@ package graft.core
   * bit-exact vs the scalar kernels (asserted by NnSimdSpec). Each weight
   * holder keeps its own transpose in a `@transient lazy val`, so a transpose
   * lives exactly as long as its weights. Falls back to the scalar path when
-  * the jdk.incubator.vector module is absent or `-Dgraft.simd=off` is set.
+  * the jdk.incubator.vector module is absent or `GRAFT_NO_SIMD=1` is set.
   */
 object Simd {
   val enabled: Boolean =
     try {
       SimdKernels.probe()
-      !sys.props.get("graft.simd").contains("off") &&
-        !sys.env.get("GRAFT_NO_SIMD").contains("1")
+      !sys.env.get("GRAFT_NO_SIMD").contains("1")
     } catch { case _: Throwable => false }
 
   /** row-major [outDim × inDim] → [inDim × outDim]; a pure copy (no

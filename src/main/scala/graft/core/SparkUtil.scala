@@ -2,10 +2,12 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, BroadcastQueryStageExec}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared Spark plumbing: the partition-count rules ([[widen]],
-  * [[adaptiveParts]]), the cache-lifetime rule ([[materialize]]) and the
+  * [[adaptiveParts]]), the cache- and broadcast-lifetime rules
+  * ([[materialize]], [[releaseBroadcasts]]) and the
   * string and double orders of the driver fast paths
   * ([[SparkStringOrdering]], [[SparkDoubleOrdering]]), so no operator decides
   * them locally.
@@ -59,6 +61,21 @@ object SparkUtil {
     release.foreach(_.unpersist())
     out
   }
+
+  /** Destroy the broadcast relations built by `ds`'s plan, once an action on
+    * `ds` has returned and nothing will run that plan again. Spark frees them
+    * only after a garbage collection finds the plan unreachable, and a hash
+    * relation on a string key holds a whole memory page however few rows it
+    * has (`spark.buffer.pageSize`: 16 MiB for a 3 GiB heap on 4 cores), so
+    * until that collection happens to run the heap holds a page per such
+    * join. Only the plan's materialized adaptive broadcast stages
+    * are destroyed; cached tables are not entered, as their plans keep their
+    * own broadcasts.
+    */
+  def releaseBroadcasts(ds: Dataset[_]): Unit =
+    new AdaptiveSparkPlanHelper {}.collect(ds.queryExecution.executedPlan) {
+      case s: BroadcastQueryStageExec if s.isMaterialized => s.executeBroadcast[Any]()
+    }.distinct.foreach(_.destroy())
 
   /** Spark's default string collation: UTF8String binary order, which is
     * Unicode code-point order. Scala's `String` order compares UTF-16 code

@@ -2,7 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.SparkUtil.SparkStringOrdering
+import graft.core.SparkUtil.{SparkStringOrdering, releaseBroadcasts}
 
 /** Stage 3 — canonicalization: connected components over candidate-entity
   * edges, via alternating large-star / small-star (Kiveris et al., "Connected
@@ -112,12 +112,16 @@ object Canonical {
     * (2 for P ≤ 5); an exchange below adds its map-stage job, and AQE usually
     * coalesces the small post-shuffle side to one partition. A negative
     * threshold returns `None` without a job; one of `Int.MaxValue` or more
-    * collects every row, as no array holds more.
+    * collects every row, as no array holds more. The collect's broadcast
+    * relations are released as soon as it returns
+    * ([[graft.core.SparkUtil.releaseBroadcasts]]).
     */
   def collectIfSmall[T](rows: Dataset[T], threshold: Long): Option[Array[T]] =
     if (threshold < 0) None
     else {
-      val got = rows.limit((math.min(threshold, Int.MaxValue - 1L) + 1).toInt).collect()
+      val bounded = rows.limit((math.min(threshold, Int.MaxValue - 1L) + 1).toInt)
+      val got = bounded.collect()
+      releaseBroadcasts(bounded)
       if (got.length > threshold) None else Some(got)
     }
 

@@ -238,18 +238,20 @@ object Eval {
       graft.core.FileSig.of(s"$sfDir/documents.parquet"))(
       Mentions.buildModel(sliceDocs(spark, sfDir), cfg))
 
-  /** variant weights are deterministic in (seed, cfg) — one broadcast per
-    * cfg per session, shared with SparkEntry's full-corpus variant queries
+  /** variant weights are deterministic in the seed and the default config
+    * (the config of every staged variant gold) — one broadcast per session,
+    * shared with SparkEntry's full-corpus variant queries
     */
-  private[graft] def vwBc(spark: SparkSession, cfg: ModelConfig): Broadcast[VariantWeights] =
+  private[graft] def vwBc(spark: SparkSession): Broadcast[VariantWeights] = {
+    val cfg = ModelConfig()
     BcRegistry.of(spark, s"vw:$cfg", "static")(
       VariantWeights.build(Mentions.ModelSeed, cfg, Mentions.Kinds.length))
+  }
 
-  def evalSlice(spark: SparkSession, sfDir: String,
-                cfg: ModelConfig = ModelConfig()): (DataFrame, DataFrame, Mentions.Model) = {
+  def evalSlice(spark: SparkSession, sfDir: String): (DataFrame, DataFrame, Mentions.Model) = {
     import spark.implicits._
     val docs = sliceDocs(spark, sfDir)
-    val bc = modelBc(spark, sfDir, cfg)
+    val bc = modelBc(spark, sfDir, ModelConfig())
     val pred = Mentions.detect(docs, bc).toDF()
     val gold = spark.createDataset(GoldRef.mentions(docs.collect().toSeq, bc.value)).toDF()
     (pred, gold, bc.value)
@@ -271,76 +273,60 @@ object Eval {
     * precomputed lm_embeddings.parquet joined in; the driver gate compares
     * against the sequentially-derived gold_lm_mentions.parquet.
     */
-  def sliceLmPred(spark: SparkSession, sfDir: String,
-                  cfg: ModelConfig = ModelConfig()): DataFrame = {
-    val stage = KgStage.stage(spark, sfDir)
-    val docs = sliceDocs(spark, sfDir)
-    val lm = spark.read.parquet(s"$stage/lm_embeddings.parquet")
-    Mentions.detectLm(docs, lm,
-      modelBc(spark, sfDir, cfg), vwBc(spark, cfg)).toDF()
+  def sliceLmPred(spark: SparkSession, sfDir: String): DataFrame = {
+    val lm = spark.read.parquet(s"${KgStage.stageDir(sfDir)}/lm_embeddings.parquet")
+    Mentions.detectLm(sliceDocs(spark, sfDir), lm,
+      modelBc(spark, sfDir, ModelConfig()), vwBc(spark)).toDF()
   }
 
   /** Variant detection (N6 bidirectional / N18 multi-label) over the eval
     * slice — compared by the driver gate against the staged sequential runs.
     */
-  def sliceVariantPred(spark: SparkSession, sfDir: String, variant: Mentions.Variant,
-                       cfg: ModelConfig = ModelConfig()): DataFrame = {
-    val docs = sliceDocs(spark, sfDir)
-    Mentions.detectVariant(docs, modelBc(spark, sfDir, cfg),
-      vwBc(spark, cfg), variant).toDF()
-  }
+  def sliceVariantPred(spark: SparkSession, sfDir: String, variant: Mentions.Variant): DataFrame =
+    Mentions.detectVariant(sliceDocs(spark, sfDir), modelBc(spark, sfDir, ModelConfig()),
+      vwBc(spark), variant).toDF()
 
   /** N12 contextual decoder over the eval slice: distributed article-window
     * grouping + pooled-context inference, driver-gated against the staged
     * sequential gold (gold_ctx_mentions.parquet).
     */
-  def sliceCtxPred(spark: SparkSession, sfDir: String,
-                   cfg: ModelConfig = ModelConfig()): DataFrame = {
-    val docs = sliceDocs(spark, sfDir)
-    Mentions.detectContextual(docs, modelBc(spark, sfDir, cfg),
-      vwBc(spark, cfg)).toDF()
-  }
+  def sliceCtxPred(spark: SparkSession, sfDir: String): DataFrame =
+    Mentions.detectContextual(sliceDocs(spark, sfDir), modelBc(spark, sfDir, ModelConfig()),
+      vwBc(spark)).toDF()
 
   /** N12 over the ARTICLE-BUCKETED staged layout (ctx_docs_bucketed.parquet):
     * shuffle-free contextual detection — same model, same gold oracle as
     * sliceCtxPred, but reading the clustered-at-rest table instead of paying
     * the groupByKey exchange.
     */
-  def sliceCtxBucketedPred(spark: SparkSession, sfDir: String,
-                           cfg: ModelConfig = ModelConfig()): DataFrame = {
-    val stage = KgStage.stage(spark, sfDir)
-    Mentions.detectContextualBucketed(spark, s"$stage/ctx_docs_bucketed.parquet",
-      modelBc(spark, sfDir, cfg), vwBc(spark, cfg)).toDF()
-  }
+  def sliceCtxBucketedPred(spark: SparkSession, sfDir: String): DataFrame =
+    Mentions.detectContextualBucketed(spark,
+      s"${KgStage.stageDir(sfDir)}/ctx_docs_bucketed.parquet",
+      modelBc(spark, sfDir, ModelConfig()), vwBc(spark)).toDF()
 
   /** N13 precomputed-ST-context detection over the eval slice, with the
     * staged st_embeddings.parquet joined in; gold is the sequential run with
     * the same staged vectors.
     */
-  def sliceStPred(spark: SparkSession, sfDir: String,
-                  cfg: ModelConfig = ModelConfig()): DataFrame = {
-    val stage = KgStage.stage(spark, sfDir)
-    val docs = sliceDocs(spark, sfDir)
-    val st = spark.read.parquet(s"$stage/st_embeddings.parquet")
-    Mentions.detectSt(docs, st,
-      modelBc(spark, sfDir, cfg), vwBc(spark, cfg)).toDF()
+  def sliceStPred(spark: SparkSession, sfDir: String): DataFrame = {
+    val st = spark.read.parquet(s"${KgStage.stageDir(sfDir)}/st_embeddings.parquet")
+    Mentions.detectSt(sliceDocs(spark, sfDir), st,
+      modelBc(spark, sfDir, ModelConfig()), vwBc(spark)).toDF()
   }
 
   /** Stage-2 linking over the eval slice (mentions ⋈ slice dict). */
-  def sliceLinked(spark: SparkSession, sfDir: String,
-                  cfg: ModelConfig = ModelConfig()): DataFrame = {
+  def sliceLinked(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = sliceDocs(spark, sfDir)
-    val mentions = Mentions.detect(docs, modelBc(spark, sfDir, cfg)).toDF()
+    val mentions = Mentions.detect(docs, modelBc(spark, sfDir, ModelConfig())).toDF()
     Link.link(mentions, AliasDict.build(docs))
   }
 
   /** Full pipeline over the eval slice — the flagship, driver-value-checked
     * against GoldRef.triples.
     */
-  def sliceTriples(spark: SparkSession, sfDir: String,
-                   cfg: ModelConfig = ModelConfig()): DataFrame = {
+  def sliceTriples(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = sliceDocs(spark, sfDir)
-    Triples.pipelineFrom(docs, Mentions.buildModel(docs, cfg))
+    Triples.pipelineFrom(docs, Mentions.buildModel(docs, ModelConfig()))
       .select("subj", "pred", "obj")
   }
 
@@ -353,7 +339,7 @@ object Eval {
     * timed path without changing a single gold row.
     */
   private def stagedGold(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${KgStage.stage(spark, sfDir)}/gold_mentions.parquet")
+    spark.read.parquet(s"${KgStage.stageDir(sfDir)}/gold_mentions.parquet")
 
   /** E3 (`trainer.py:150-181`): infer → decode → span-set compare → report. */
   def spanPrf(spark: SparkSession, sfDir: String): DataFrame =

@@ -2,7 +2,7 @@ package graft.kg
 
 import java.nio.file.Path
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.{Derived, ModelConfig}
 import graft.sources.ReaderStage
@@ -54,15 +54,18 @@ object KgStage {
   private def build(spark: SparkSession, dir: Path, docs: Seq[(Long, String)]): Unit = {
     import spark.implicits._
 
+    def write(name: String, df: DataFrame): Unit =
+      df.coalesce(1).write.mode("overwrite").parquet(dir.resolve(name).toString)
+    def writeMentions(name: String, ms: Seq[Mention]): Unit =
+      write(name, spark.createDataset(ms).toDF())
+
     // --- docs_spans: sequential assemble, exploded
     val spanRows = docs.flatMap { case (id, text) =>
       val d = DocGen.assemble(DocGen.docIdOf(id), text)
       d.spans.map(s => (d.doc_id, s.kind, s.text, s.media_ref, s.offset))
     }
-    spark.createDataset(spanRows)
-      .toDF("doc_id", "kind", "text", "media_ref", "offset")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(dir.resolve("docs_spans.parquet").toString)
+    write("docs_spans.parquet", spark.createDataset(spanRows)
+      .toDF("doc_id", "kind", "text", "media_ref", "offset"))
 
     // --- media_png: REAL PNG payloads for the ImageIO decode path — one tiny
     //     deterministic image per distinct media ref, encoded with
@@ -87,10 +90,8 @@ object KgStage {
       (ref, graft.ops.Multimodal.ImageCodec.pngBytes(img),
         img.getWidth, img.getHeight, graft.ops.Multimodal.ImageCodec.pixelMd5(img))
     }
-    spark.createDataset(pngRows)
-      .toDF("media_ref", "png", "width", "height", "pixel_md5")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(dir.resolve("media_png.parquet").toString)
+    write("media_png.parquet", spark.createDataset(pngRows)
+      .toDF("media_ref", "png", "width", "height", "pixel_md5"))
 
     // --- media_resize: PRE-ENCODE resize expectations — fitBox + the shared
     //     nearest-neighbor resample on the raw pixels, digest recorded BEFORE
@@ -104,11 +105,9 @@ object KgStage {
       (ref, img.getWidth, img.getHeight, ow, oh, scale,
         codec.pixelMd5(codec.resampleNearest(img, ow, oh)))
     }
-    spark.createDataset(resizeRows)
+    write("media_resize.parquet", spark.createDataset(resizeRows)
       .toDF("media_ref", "width", "height", "out_width", "out_height", "scale",
-        "resized_md5")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(dir.resolve("media_resize.parquet").toString)
+        "resized_md5"))
 
     // --- media_tiff + media_frames: REAL multi-frame payloads (multi-page
     //     TIFF, JDK ImageIO sequence writer, lossless) with per-asset
@@ -122,15 +121,12 @@ object KgStage {
       (ref, tiff, f0.getWidth, f0.getHeight, frames.length,
         graft.ops.Multimodal.featureOf(f0).map(_.toDouble), frameMd5)
     }
-    spark.createDataset(tiffGen.map(t => (t._1, t._2, t._3, t._4, t._5, t._6)))
-      .toDF("media_ref", "tiff", "width", "height", "n_frames", "feature")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(dir.resolve("media_tiff.parquet").toString)
-    spark.createDataset(tiffGen.flatMap { t =>
+    write("media_tiff.parquet",
+      spark.createDataset(tiffGen.map(t => (t._1, t._2, t._3, t._4, t._5, t._6)))
+        .toDF("media_ref", "tiff", "width", "height", "n_frames", "feature"))
+    write("media_frames.parquet", spark.createDataset(tiffGen.flatMap { t =>
       t._7.zipWithIndex.map { case (md5, i) => (t._1, t._5, i, md5) }
-    }).toDF("media_ref", "n_frames", "frame_idx", "frame_md5")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(dir.resolve("media_frames.parquet").toString)
+    }).toDF("media_ref", "n_frames", "frame_idx", "frame_md5"))
 
     // --- media_variants + media_dedup: pixel-dedup fixtures. Every asset is
     //     encoded TWICE losslessly (PNG and single-frame TIFF — byte-
@@ -149,14 +145,10 @@ object KgStage {
       Seq((ref, "png", codec.pngBytes(img), md5),
         (ref, "tiff", graft.ops.Multimodal.FrameCodec.tiffBytes(Seq(img)), md5))
     }.flatten
-    spark.createDataset(variantGen.map(v => (v._1, v._2, v._3)))
-      .toDF("media_ref", "variant", "payload")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(dir.resolve("media_variants.parquet").toString)
-    spark.createDataset(variantGen.map(v => (v._1, v._2, v._4)))
-      .toDF("media_ref", "variant", "pixel_md5")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(dir.resolve("media_dedup.parquet").toString)
+    write("media_variants.parquet", spark.createDataset(variantGen.map(v => (v._1, v._2, v._3)))
+      .toDF("media_ref", "variant", "payload"))
+    write("media_dedup.parquet", spark.createDataset(variantGen.map(v => (v._1, v._2, v._4)))
+      .toDF("media_ref", "variant", "pixel_md5"))
 
     // --- gold_mentions: GoldRef over the eval slice (first EvalSliceDocs by
     //     doc_id), model built on the slice exactly like Eval.evalSlice
@@ -164,9 +156,7 @@ object KgStage {
       .map { case (id, text) => DocGen.assemble(DocGen.docIdOf(id), text) }
     val model = Mentions.buildModel(spark.createDataset(slice), ModelConfig())
     val gold = GoldRef.mentions(slice, model)
-    spark.createDataset(gold).toDF()
-      .coalesce(1).write.mode("overwrite")
-      .parquet(dir.resolve("gold_mentions.parquet").toString)
+    writeMentions("gold_mentions.parquet", gold)
 
     // --- lm_embeddings: the "precomputed LM output" table (N14) — one row
     //     per (doc, token position) of the eval slice, deterministic
@@ -174,9 +164,7 @@ object KgStage {
       val toks = d.spans.filter(_.kind == "text").sortBy(_.offset).map(_.text)
       toks.zipWithIndex.map { case (tok, p) => (d.doc_id, p, Mentions.lmVec(d.doc_id, p, tok)) }
     }
-    spark.createDataset(lmRows).toDF("doc_id", "pos", "emb")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(dir.resolve("lm_embeddings.parquet").toString)
+    write("lm_embeddings.parquet", spark.createDataset(lmRows).toDF("doc_id", "pos", "emb"))
 
     // --- gold_lm_mentions: sequential LM-variant detection over the slice
     val vw = graft.core.VariantWeights.build(Mentions.ModelSeed, ModelConfig(),
@@ -193,15 +181,10 @@ object KgStage {
         vi.detectLm(toks, flat, model.codec)
       })
     }
-    spark.createDataset(goldLm).toDF()
-      .coalesce(1).write.mode("overwrite")
-      .parquet(dir.resolve("gold_lm_mentions.parquet").toString)
+    writeMentions("gold_lm_mentions.parquet", goldLm)
 
     // --- gold variant mentions (N6 bidirectional, N18 multi-label) over the
     //     slice — sequential runs of the same seeded variant nets
-    def writeMentions(name: String, ms: Seq[Mention]): Unit =
-      spark.createDataset(ms).toDF().coalesce(1).write.mode("overwrite")
-        .parquet(dir.resolve(name).toString)
     writeMentions("gold_bidir_mentions.parquet", slice.flatMap(d =>
       Mentions.detectDocWith(d, toks => vi.detectBidirectional(toks, model.codec))))
     writeMentions("gold_ml_mentions.parquet", slice.flatMap(d =>
@@ -228,9 +211,7 @@ object KgStage {
     //     the sequential detection using it
     val stDim = vw.ctxDim
     val stRows = slice.map(d => (d.doc_id, Mentions.stVec(d.doc_id, stDim)))
-    spark.createDataset(stRows).toDF("doc_id", "emb")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(dir.resolve("st_embeddings.parquet").toString)
+    write("st_embeddings.parquet", spark.createDataset(stRows).toDF("doc_id", "emb"))
     writeMentions("gold_st_mentions.parquet", slice.flatMap(d =>
       Mentions.detectDocWith(d,
         toks => vi.detectWithContext(toks, Mentions.stVec(d.doc_id, stDim), model.codec))))
@@ -241,26 +222,23 @@ object KgStage {
     val modelG = Mentions.buildModel(spark.createDataset(slice), ModelConfig.genia)
     writeMentions("gold_genia_mentions.parquet", GoldRef.mentions(slice, modelG))
 
-    // --- gold linked mentions: GoldRef best-candidate link over the slice
-    val dictRows = GoldRef.dict(slice)
-    val best = GoldRef.bestCandidates(dictRows)
-    val goldLinked = gold.flatMap { m =>
-      best.get(GoldRef.lower(m.text)).map(b =>
-        (m.doc_id, m.mention_id, m.kind, m.text, m.media_ref, m.start_tok, m.len,
-          m.order, b.entityId, b.kind, b.prior))
+    // --- gold linked mentions: GoldRef best-candidate link of `ms` over the
+    //     dictionary of `over` (the slice here, the full corpus below)
+    def writeLinked(name: String, ms: Seq[Mention], over: Seq[PyramidDoc]): Unit = {
+      val best = GoldRef.bestCandidates(GoldRef.dict(over))
+      write(name, spark.createDataset(ms.flatMap { m =>
+        best.get(GoldRef.lower(m.text)).map(b =>
+          (m.doc_id, m.mention_id, m.kind, m.text, m.media_ref, m.start_tok, m.len,
+            m.order, b.entityId, b.kind, b.prior))
+      }).toDF("doc_id", "mention_id", "kind", "text", "media_ref", "start_tok", "len",
+        "order", "entity_id", "dict_kind", "prior"))
     }
-    spark.createDataset(goldLinked)
-      .toDF("doc_id", "mention_id", "kind", "text", "media_ref", "start_tok", "len",
-        "order", "entity_id", "dict_kind", "prior")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(dir.resolve("gold_linked.parquet").toString)
+    writeLinked("gold_linked.parquet", gold, slice)
 
     // --- gold triples: the full sequential pipeline over the slice — makes
     //     the FLAGSHIP distributed pipeline driver-value-checked end-to-end
     val goldTriples = GoldRef.triples(slice, model).toSeq.sortBy(t => (t.subj, t.pred, t.obj))
-    spark.createDataset(goldTriples).toDF()
-      .coalesce(1).write.mode("overwrite")
-      .parquet(dir.resolve("gold_triples.parquet").toString)
+    write("gold_triples.parquet", spark.createDataset(goldTriples).toDF())
 
     // --- FULL-corpus golds (small SF only): the sequential re-derivation of
     //     the five full-corpus queries, with the FULL-corpus model (lexicon
@@ -280,21 +258,9 @@ object KgStage {
         Mentions.detectDocWith(d, toks => fullVi.detectBidirectional(toks, fullModel.codec))))
       writeMentions("gold_full_ml.parquet", all.flatMap(d =>
         Mentions.detectDocWith(d, toks => fullVi.detectMultiLabel(toks, fullModel.codec))))
-      val fullBest = GoldRef.bestCandidates(GoldRef.dict(all))
-      val fullLinked = fullMentions.flatMap { m =>
-        fullBest.get(GoldRef.lower(m.text)).map(b =>
-          (m.doc_id, m.mention_id, m.kind, m.text, m.media_ref, m.start_tok, m.len,
-            m.order, b.entityId, b.kind, b.prior))
-      }
-      spark.createDataset(fullLinked)
-        .toDF("doc_id", "mention_id", "kind", "text", "media_ref", "start_tok", "len",
-          "order", "entity_id", "dict_kind", "prior")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(dir.resolve("gold_full_linked.parquet").toString)
+      writeLinked("gold_full_linked.parquet", fullMentions, all)
       val fullTriples = GoldRef.triples(all, fullModel).toSeq.sortBy(t => (t.subj, t.pred, t.obj))
-      spark.createDataset(fullTriples).toDF()
-        .coalesce(1).write.mode("overwrite")
-        .parquet(dir.resolve("gold_full_triples.parquet").toString)
+      write("gold_full_triples.parquet", spark.createDataset(fullTriples).toDF())
     }
   }
 }

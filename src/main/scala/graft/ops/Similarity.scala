@@ -28,18 +28,16 @@ object Similarity {
   def embDf(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/embeddings.parquet")
 
-  private def queries(spark: SparkSession, sfDir: String,
-                      queryMod: Long = QueryMod): DataFrame =
-    embDf(spark, sfDir).where(col("vec_id") % queryMod === 0)
+  private def queries(spark: SparkSession, sfDir: String): DataFrame =
+    embDf(spark, sfDir).where(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("q"))
 
   /** Exact top-k neighbors per query (cosine rounded to 6dp for
     * deterministic cross-engine ranking; ties broken by vec_id).
     */
-  def cosineTopK(spark: SparkSession, sfDir: String,
-                 queryMod: Long = QueryMod): DataFrame = {
+  def cosineTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val e = embDf(spark, sfDir)
-    val scored = e.crossJoin(broadcast(queries(spark, sfDir, queryMod)))
+    val scored = e.crossJoin(broadcast(queries(spark, sfDir)))
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(Fns.cosine_sim(col("q"), col("embedding")), 6).as("cosine"))
@@ -169,7 +167,7 @@ object Similarity {
     cand.toArray.sortBy(k => (-round6(raw(k)), -k)).take(rep)
   }
 
-  /** Seeded spherical k-means centroids. Assignment runs as a broadcast +
+  /** Seeded spherical k-means centroids, k = [[IvfClusters]]. Assignment runs as a broadcast +
     * mapPartitions scan ([[topClustersLoop]] — bit-identical to the literal
     * expression), and the update step aggregates per-partition partial
     * (cluster, dim) sums — k×(dim+1) values per task instead of a
@@ -178,7 +176,7 @@ object Similarity {
     * averages are rounded to 6dp so partition/merge-order float noise
     * (~1e-13) can't flip an assignment, and argmax ties break on cluster id.
     * Index-build cost amortizes across queries — one live entry per
-    * (sfDir, k), replaced when the corpus signature changes.
+    * sfDir, replaced when the corpus signature changes.
     */
   private val centroidCache = new graft.core.Derived.Memo[Seq[Array[Float]]](_ => ())
 
@@ -197,12 +195,11 @@ object Similarity {
     */
   private val IvfIndexVersion = "ivfidx-v1"
 
-  def kmeansCentroids(spark: SparkSession, sfDir: String,
-                      k: Int = IvfClusters): Seq[Array[Float]] =
-    centroidCache.get(s"$sfDir|k=$k", corpusSig(sfDir)) {
+  def kmeansCentroids(spark: SparkSession, sfDir: String): Seq[Array[Float]] =
+    centroidCache.get(sfDir, corpusSig(sfDir)) {
       import spark.implicits._
       val e = embDf(spark, sfDir).select("vec_id", "embedding").cache()
-      var cents = e.orderBy(md5(col("vec_id").cast("string"))).limit(k)
+      var cents = e.orderBy(md5(col("vec_id").cast("string"))).limit(IvfClusters)
         .select("embedding").collect().map(_.getSeq[Float](0).toArray).toSeq
       val typed = e.as[(Long, Array[Float])]
       for (_ <- 1 to KmeansIters) {
@@ -242,16 +239,11 @@ object Similarity {
       // float iteration is not SQL-expressible, but given fixed centroids the
       // assignment → probe → exact-cosine re-rank IS — the DuckDB gate
       // re-derives the full candidate set from this table (32 rows).
-      // DEFAULT k only: the staged path is k-independent, so a bench-scale
-      // run with a custom k must not overwrite the table the default-k
-      // sim_ann_ivf* oracles read.
-      if (k == IvfClusters) {
-        spark.createDataset(cents.zipWithIndex.map { case (c, i) => (i, c) })
-          .toDF("cluster", "centroid")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(graft.sources.ReaderStage.stageDir(sfDir)
-            .resolve("ivf_centroids.parquet").toString)
-      }
+      spark.createDataset(cents.zipWithIndex.map { case (c, i) => (i, c) })
+        .toDF("cluster", "centroid")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(graft.sources.ReaderStage.stageDir(sfDir)
+          .resolve("ivf_centroids.parquet").toString)
       cents
     }
 
@@ -296,10 +288,9 @@ object Similarity {
     * corpus scale the index is built once per centroid epoch and queries
     * are pure pruned reads.
     */
-  def buildIvfIndex(spark: SparkSession, sfDir: String, indexDir: String,
-                    k: Int = IvfClusters, rep: Int = IvfAssignRep): Unit = {
+  def buildIvfIndex(spark: SparkSession, sfDir: String, indexDir: String): Unit = {
     import spark.implicits._
-    val cents = kmeansCentroids(spark, sfDir, k).toArray
+    val cents = kmeansCentroids(spark, sfDir).toArray
     val bcC = spark.sparkContext.broadcast(cents)
     // assignment is the corpus-sized scan — broadcast + loop (bit-identical
     // to the literal-expression scoring; OpsSpec pins it), not a k-struct
@@ -308,7 +299,7 @@ object Similarity {
       .mapPartitions { it =>
         val cs = bcC.value
         it.flatMap { case (id, emb) =>
-          topClustersLoop(emb, cs, rep).iterator.map(c => (id, emb, c))
+          topClustersLoop(emb, cs, IvfAssignRep).iterator.map(c => (id, emb, c))
         }
       }
       .toDF("vec_id", "embedding", "cluster")
@@ -321,11 +312,10 @@ object Similarity {
     * index already matches the corpus, and concurrent callers on one
     * indexDir never interleave overwrite writes.
     */
-  def ensureIvfIndex(spark: SparkSession, sfDir: String, indexDir: String,
-                     k: Int = IvfClusters, rep: Int = IvfAssignRep): Unit =
+  def ensureIvfIndex(spark: SparkSession, sfDir: String, indexDir: String): Unit =
     graft.core.Derived.ensure(java.nio.file.Paths.get(indexDir, "_CORPUS_SIG"),
-      s"$IvfIndexVersion:k=$k:rep=$rep:${corpusSig(sfDir)}")(
-      buildIvfIndex(spark, sfDir, indexDir, k, rep))
+      s"$IvfIndexVersion:k=$IvfClusters:rep=$IvfAssignRep:${corpusSig(sfDir)}")(
+      buildIvfIndex(spark, sfDir, indexDir))
 
   /** Query path over the materialized index: probe clusters are resolved
     * first (a driver-sized set — the router step of any ANN service), the
@@ -337,27 +327,24 @@ object Similarity {
   /** the router step alone: (query_id, q, probed cluster) rows,
     * driver-collected — |queries| × probes rows by construction
     */
-  private[graft] def probeRows(spark: SparkSession, sfDir: String, k: Int,
-                               probes: Int, queryMod: Long): Array[(Long, Array[Float], Int)] = {
+  private def probeRows(spark: SparkSession, sfDir: String): Array[(Long, Array[Float], Int)] = {
     import spark.implicits._
-    val cents = kmeansCentroids(spark, sfDir, k)
-    embDf(spark, sfDir).where(col("vec_id") % queryMod === 0)
+    val cents = kmeansCentroids(spark, sfDir)
+    embDf(spark, sfDir).where(col("vec_id") % QueryMod === 0)
       .withColumn("scores", centroidScores(col("embedding"), cents))
       .select(col("vec_id").as("query_id"), col("embedding").as("q"),
-        explode(expr(s"slice(reverse(array_sort(scores)), 1, $probes)")).as("p"))
+        explode(expr(s"slice(reverse(array_sort(scores)), 1, $IvfProbes)")).as("p"))
       .select(col("query_id"), col("q"), col("p.k").as("cluster"))
       .as[(Long, Array[Float], Int)].collect()
   }
 
-  def annIvfIndexed(spark: SparkSession, sfDir: String, indexDir: String,
-                    k: Int = IvfClusters, probes: Int = IvfProbes,
-                    queryMod: Long = QueryMod): DataFrame = {
+  def annIvfIndexed(spark: SparkSession, sfDir: String, indexDir: String): DataFrame = {
     import spark.implicits._
     // the probe table is driver-sized by construction (|queries| × probes
     // rows — the router step of an ANN service), so compute it ONCE, collect
     // it, and serve both the partition filter and the broadcast join from
     // the collected rows instead of scanning/scoring the query side twice
-    val routed = probeRows(spark, sfDir, k, probes, queryMod)
+    val routed = probeRows(spark, sfDir)
     val probeDf = spark.createDataset(routed.toIndexedSeq)
       .toDF("query_id", "q", "cluster")
     val probed = routed.map(_._3).distinct
