@@ -91,8 +91,8 @@ object Canonical {
     * fits comfortably on the driver, and a local loop over the collected rows
     * beats the chain of small Spark jobs the distributed path costs (about 6
     * per star round). The rows are edges for CC here, `GraphOps.labelProp`
-    * and `GraphOps.kcore`, and alias-dictionary rows for the pipeline's
-    * dictionary side (`Triples.pipelineHandleBc`). It sits below the crossover
+    * and `GraphOps.kcore`, and alias-dictionary rows for the dictionary side
+    * of every linker ([[DictSide.of]]). It sits below the crossover
     * CcBench measured (BENCH/CC_BENCH.md). The distributed loops and the
     * relational dictionary side remain the path for KB-scale inputs.
     */
@@ -227,7 +227,7 @@ object Canonical {
   /** apply the canonical map to linked mentions; map is usually ≪ corpus →
     * broadcast, but caller can disable for huge KBs.
     */
-  def canonicalize(linked: DataFrame, canonMap: DataFrame, useBroadcast: Boolean = true): DataFrame = {
+  def canonicalize(linked: DataFrame, canonMap: DataFrame, useBroadcast: Boolean): DataFrame = {
     val m = if (useBroadcast) broadcast(canonMap) else canonMap
     linked.join(m, Seq("entity_id"), "left")
       .withColumn("canonical_id", coalesce(col("canonical_id"), col("entity_id")))

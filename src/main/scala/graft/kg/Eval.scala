@@ -318,7 +318,7 @@ object Eval {
   def sliceLinked(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = sliceDocs(spark, sfDir)
     val mentions = Mentions.detect(docs, modelBc(spark, sfDir, ModelConfig())).toDF()
-    Link.link(mentions, AliasDict.build(docs))
+    DictSide.of(AliasDict.build(docs)).link(mentions)
   }
 
   /** Full pipeline over the eval slice — the flagship, driver-value-checked

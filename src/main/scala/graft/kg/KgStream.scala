@@ -12,7 +12,7 @@ import graft.core.ModelConfig
   * Split follows the classic ingest/compact design:
   *   - STREAMING (this file, stateless, append-mode): per-doc span assembly,
   *     Pyramid mention detection (`Mentions.detect`, broadcast model), entity
-  *     linking (stream-static broadcast join against the alias dictionary).
+  *     linking (stream-static broadcast join, [[DictSide.link]]).
   *     Every stage is per-row/per-partition, so the stream needs no state
   *     store and scales like the batch mention stage.
   *   - BATCH COMPACTION (KgRunner): alias-dict refresh and CC
@@ -53,11 +53,8 @@ object KgStream {
     // session instead of one per stream invocation, same model either way
     val sliceDocs = Eval.sliceDocs(spark, sfDir)
     val bc = Eval.modelBc(spark, sfDir, ModelConfig())
-    // cache: a stream-static join re-evaluates the static side per
-    // micro-batch; the dict subtree (ngram HOFs + distinct agg) is the
-    // expensive part
-    val dict = AliasDict.build(sliceDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // built once: a stream-static join re-evaluates its static side per batch
+    val side = DictSide.of(AliasDict.build(sliceDocs))
     val sliceIds = spark.read.parquet(s"$sfDir/documents.parquet")
       .select($"doc_id".cast("long").as[Long]).orderBy("doc_id")
       .limit(Eval.EvalSliceDocs).collect()
@@ -72,14 +69,14 @@ object KgStream {
 
     val mentions = Mentions.detect(docsStream, bc).toDF()
 
-    val q = Link.link(mentions, dict)
+    val q = side.link(mentions)
       .writeStream.outputMode("append")
       .format("memory").queryName(name)
       .trigger(Trigger.AvailableNow())
       .start()
     q.processAllAvailable()
     q.stop()
-    dict.unpersist()
+    side.release()
     // sliceDocs / bc are the session-shared Eval slots — NOT destroyed here
     // (BcRegistry bounds them to one live instance per corpus signature)
     spark.table(name)
@@ -99,7 +96,7 @@ object KgStream {
     * `srcDir`: a directory of parquet files with (doc_id long, text string) —
     * at `maxFilesPerTrigger = 1` each file is its own micro-batch, giving the
     * kill a batch boundary to land on. Returns the running query plus a
-    * cleanup thunk (static-side unpersist) for the caller.
+    * cleanup thunk (static-side release) for the caller.
     */
   def linkedCheckpointed(spark: SparkSession, sfDir: String, srcDir: String,
                          sinkDir: String, checkpointDir: String,
@@ -113,8 +110,7 @@ object KgStream {
       .orderBy("doc_id").limit(Eval.EvalSliceDocs).cache()
     val model = Mentions.buildModel(sliceDocs, ModelConfig())
     val bc = spark.sparkContext.broadcast(model)
-    val dict = AliasDict.build(sliceDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val side = DictSide.of(AliasDict.build(sliceDocs))
 
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", org.apache.spark.sql.types.LongType)
@@ -127,7 +123,7 @@ object KgStream {
 
     val mentions = Mentions.detect(docsStream, bc).toDF()
 
-    val writer = Link.link(mentions, dict)
+    val writer = side.link(mentions)
       .writeStream.outputMode("append")
       .format("parquet").option("path", sinkDir)
       .option("checkpointLocation", checkpointDir)
@@ -135,6 +131,6 @@ object KgStream {
     // bc.destroy (not just unpersist) releases the broadcast blocks on driver
     // AND executors — repeated checkpointed runs in one session would
     // otherwise accumulate them; the thunk contract is "call after stop()"
-    (q, () => { dict.unpersist(); sliceDocs.unpersist(); bc.destroy() })
+    (q, () => { side.release(); sliceDocs.unpersist(); bc.destroy() })
   }
 }

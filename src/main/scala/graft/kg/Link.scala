@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.core.SparkUtil.{SparkDoubleOrdering, SparkStringOrdering}
 
 /** Stage 2 — entity linking: mentions ⋈ broadcast(alias dictionary).
@@ -53,19 +54,13 @@ object Link {
     */
   def linkAuto(mentions: DataFrame, dict: DataFrame,
                maxBroadcastRows: Long = BroadcastMaxAliases): DataFrame =
-    link(mentions, dict, useBroadcast = dict.count() <= maxBroadcastRows)
+    linkBest(mentions, bestCandidates(dict), useBroadcast = dict.count() <= maxBroadcastRows)
 
-  /** mentions (stage-1 output) → linked mentions. Inner join: unlinkable
-    * mentions drop out here (NIL in KB terms).
-    *
-    * `useBroadcast = false` switches to a shuffle hash/sort-merge join for
-    * KB-scale dictionaries (10⁸ aliases would OOM the driver broadcast) —
-    * same escape hatch as Canonical.canonicalize.
+  /** mentions (stage-1 output) ⋈ a best-candidate table → linked mentions.
+    * Inner join: unlinkable mentions drop out here (NIL in KB terms).
+    * `useBroadcast = false` is the shuffle join for KB-scale dictionaries
+    * (10⁸ aliases would OOM the driver broadcast).
     */
-  def link(mentions: DataFrame, dict: DataFrame, useBroadcast: Boolean = true): DataFrame =
-    linkBest(mentions, bestCandidates(dict), useBroadcast)
-
-  /** [[link]] against an already reduced best-candidate table. */
   def linkBest(mentions: DataFrame, best0: DataFrame, useBroadcast: Boolean): DataFrame = {
     val best = if (useBroadcast) broadcast(best0) else best0
     mentions
@@ -76,5 +71,46 @@ object Link {
         mentions("text"), mentions("media_ref"), mentions("start_tok"),
         mentions("len"), mentions("order"),
         col("entity_id"), col("dict_kind"), col("prior"))
+  }
+}
+
+/** Stages 2 and 3's dictionary side (best candidates, canonical map), behind
+  * the one size guard [[Canonical.collectIfSmall]]. A dict of at most
+  * `DriverCcThreshold` rows gives two local frames, broadcast unprobed (under
+  * both broadcast limits) and not persisted. A larger dict is persisted and
+  * each table's row count, probed once, picks broadcast vs shuffle; its map
+  * (CC) is built on the first [[canonicalize]], so linking alone never runs CC.
+  */
+final class DictSide private (dict: DataFrame, rows: Option[Array[AliasRow]]) {
+  private val spark = dict.sparkSession
+  private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  private def hold(df: DataFrame) = { held += df; df.persist(StorageLevel.MEMORY_AND_DISK) }
+  private val (best, bestBroadcast) = rows match {
+    case Some(r) => (Link.bestCandidatesLocal(spark, r), true)
+    case None => (Link.bestCandidates(hold(dict)), dict.count() <= Link.BroadcastMaxAliases)
+  }
+  private lazy val (canonMap, mapBroadcast) = rows match {
+    case Some(r) => (Canonical.driverUnionFind(spark, Canonical.edgesFromRows(r)), true)
+    case None =>
+      val m = hold(Canonical.connectedComponents(Canonical.edgesFromDict(dict)))
+      (m, m.count() <= Canonical.BroadcastMaxMapRows)
+  }
+
+  def link(mentions: DataFrame): DataFrame = Link.linkBest(mentions, best, bestBroadcast)
+
+  /** [[link]], then `canonical_id` from the canonical map */
+  def canonicalize(mentions: DataFrame): DataFrame =
+    Canonical.canonicalize(link(mentions), canonMap, mapBroadcast)
+
+  /** the frames persisted so far: none below the guard */
+  private[kg] def cached: Seq[DataFrame] = held.toSeq
+
+  def release(): Unit = held.foreach(_.unpersist())
+}
+
+object DictSide {
+  def of(dict: DataFrame): DictSide = {
+    import dict.sparkSession.implicits._
+    new DictSide(dict, Canonical.collectIfSmall(dict.as[AliasRow], Canonical.DriverCcThreshold))
   }
 }

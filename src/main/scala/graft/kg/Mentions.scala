@@ -34,19 +34,19 @@ object Mentions {
     */
   val MediaWindow = 5
 
-  /** Corpus word lexicon (M2, `data/dataset.py:70-71`): top-K distinct tokens
-    * by frequency, deterministic tie-break on the token itself. Two-phase
-    * hash agg (partial map-side combine) + TakeOrderedAndProject — no full
-    * sort at scale.
+  /** Corpus word lexicon (M2, `data/dataset.py:70-71`): top-50k distinct
+    * tokens by frequency, deterministic tie-break on the token itself.
+    * Two-phase hash agg (partial map-side combine) + TakeOrderedAndProject —
+    * no full sort at scale.
     */
-  def buildLexicon(docs: Dataset[PyramidDoc], topK: Int = 50000): Array[String] = {
+  def buildLexicon(docs: Dataset[PyramidDoc]): Array[String] = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(explode($"spans").as("s"))
       .where($"s.kind" === "text")
       .groupBy($"s.text".as("token")).agg(count(lit(1)).as("n"))
       .orderBy($"n".desc, $"token".asc)
-      .limit(topK)
+      .limit(50000)
       .select($"token").as[String]
       .collect()
   }
@@ -293,11 +293,10 @@ object Mentions {
     * ([[detectContextualBucketed]] — KgRunner's docs materialization is the
     * production hook for this write).
     */
-  def writeArticleBucketed(docs: Dataset[PyramidDoc], path: String,
-                           buckets: Int = CtxBuckets): Unit =
+  def writeArticleBucketed(docs: Dataset[PyramidDoc], path: String): Unit =
     docs.toDF()
       .withColumn("article_id", articleIdCol)
-      .repartition(buckets, col("article_id"))
+      .repartition(CtxBuckets, col("article_id"))
       .sortWithinPartitions("article_id", "doc_id")
       .drop("article_id")
       .write.mode("overwrite")

@@ -3,6 +3,7 @@ package graft.kg
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.core.ModelConfig
 
 /** Stage 6 — ops layer (SURVEY.md §7 stage 6): checkpointed, resumable
@@ -11,7 +12,7 @@ import graft.core.ModelConfig
   * SURVEY.md env facts):
   *
   *   outDir/docs/bucket=<b>/        bucketed input materialization (pruned scans)
-  *   outDir/dict/, outDir/canon/    dimension state, computed once, reused on resume
+  *   outDir/dict/                   alias dictionary, computed once, reused on resume
   *   outDir/triples/bucket=<b>/     idempotent per-bucket output (overwrite)
   *   outDir/manifest/bucket-<b>.json  atomic (tmp+rename) commit record per bucket,
   *                                    carrying status, counts, wall time, and
@@ -20,6 +21,11 @@ import graft.core.ModelConfig
   * Resume = skip buckets with a committed manifest (the anti-join of the
   * north_rule); a mid-job kill leaves at most one bucket's parquet dir
   * without its manifest, which the rerun overwrites idempotently.
+  *
+  * The dictionary side ([[DictSide]]) is not a table: each invocation builds
+  * it from `dict/`. Above the guard a resume therefore recomputes CC over the
+  * persisted dict table, dictionary-sized work; the corpus-sized dict build
+  * is still reused.
   */
 object KgRunner {
 
@@ -31,7 +37,7 @@ object KgRunner {
   final class InjectedKill(bucket: Int) extends RuntimeException(s"injected kill after bucket $bucket")
 
   def run(spark: SparkSession, sfDir: String, outDir: String, buckets: Int = 8,
-          cfg: ModelConfig = ModelConfig(), failAfter: Option[Int] = None,
+          failAfter: Option[Int] = None,
           tableIO: Option[TableIO] = None, amplify: Int = 1): RunReport = {
     import spark.implicits._
     // table layout behind the TableIO seam (Parquet emulation by default;
@@ -77,39 +83,26 @@ object KgRunner {
     }
     val allDocs = io.read(spark, "docs")
 
-    // ---- dimension state: model lexicon, dict, canonical map (deterministic;
-    //      persisted so a resume run reuses instead of recomputing)
+    // ---- dimension state: the dict (deterministic; persisted so a resume
+    //      run reuses instead of recomputing) and the model
     if (!io.exists("dict"))
       io.write(AliasDict.build(allDocs.drop("bucket").as[PyramidDoc]), "dict")
-    val dict = io.read(spark, "dict")
-
-    if (!io.exists("canon"))
-      io.write(Canonical.connectedComponents(Canonical.edgesFromDict(dict)), "canon")
-    val canonMap = io.read(spark, "canon")
-
-    val model = Mentions.buildModel(allDocs.drop("bucket").as[PyramidDoc], cfg)
+    val model = Mentions.buildModel(allDocs.drop("bucket").as[PyramidDoc], ModelConfig())
     val bc = spark.sparkContext.broadcast(model)
-
-    // size-guarded join strategy, decided ONCE per run (parquet counts are
-    // metadata-cheap) instead of per bucket — a KB-scale dict/canon table
-    // flips every bucket's plan to the shuffle join automatically
-    val dictBroadcastOk = dict.count() <= Link.BroadcastMaxAliases
-    val canonBroadcastOk = canonMap.count() <= Canonical.BroadcastMaxMapRows
+    val side = DictSide.of(io.read(spark, "dict"))
 
     // ---- per-bucket processing with manifest commits
     val done = committedBuckets(out)
     val processed = scala.collection.mutable.ArrayBuffer.empty[BucketResult]
     var i = 0
-    (0 until effBuckets).foreach { b =>
+    try (0 until effBuckets).foreach { b =>
       if (!done.contains(b)) {
         failAfter.foreach(k => if (i >= k) throw new InjectedKill(b))
         val t0 = System.nanoTime()
         val docsB = io.readBucket(spark, "docs", b).as[PyramidDoc]
         val mentions = Mentions.detect(docsB, bc).toDF().cache()
         try {
-          val linked = Link.link(mentions, dict, useBroadcast = dictBroadcastOk)
-          val canon = Canonical.canonicalize(linked, canonMap, useBroadcast = canonBroadcastOk)
-          val triples = Triples.fromCanonical(canon)
+          val triples = Triples.fromCanonical(side.canonicalize(mentions))
           io.writeBucket(triples, "triples", b)
           // per-task lineage: mentions live in the same stage as the pruned
           // scan, so spark_partition_id() is the real task id of stage 1
@@ -124,7 +117,7 @@ object KgRunner {
           i += 1
         } finally mentions.unpersist()
       }
-    }
+    } finally { bc.destroy(); side.release() }
     val total = io.read(spark, "triples").count()
 
     // ---- global compaction (first-class stage): the per-bucket triple
@@ -171,44 +164,27 @@ object KgRunner {
     * documents.parquet — an in-place regeneration invalidates it) and leaves
     * the compacted table for `kg_triples_compacted` to read.
     */
-  def ensureRun(spark: SparkSession, sfDir: String, outDir: String,
-                buckets: Int = 4): Unit =
+  def ensureRun(spark: SparkSession, sfDir: String, outDir: String): Unit =
     graft.core.Derived.ensure(Paths.get(outDir, "_RUNSIG"),
-        s"$RunVersion:${KgStage.Version}:${corpusSig(sfDir)}") {
+        s"$RunVersion:${KgStage.Version}:" + graft.core.FileSig.of(s"$sfDir/documents.parquet")) {
       // stale or absent: rebuild from scratch (a resume against a CHANGED
       // corpus would silently mix old and new buckets)
       if (Files.exists(Paths.get(outDir))) {
         val s = Files.walk(Paths.get(outDir))
-        try {
-          val it = s.sorted(java.util.Comparator.reverseOrder[Path]()).iterator()
-          while (it.hasNext) Files.deleteIfExists(it.next())
-        } finally s.close()
+        try s.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+        finally s.close()
       }
-      run(spark, sfDir, outDir, buckets)
+      run(spark, sfDir, outDir, buckets = 4)
     }
-
-  /** file-level corpus signature (names + sizes + mtimes, no scan) */
-  private def corpusSig(sfDir: String): String = {
-    graft.core.FileSig.of(s"$sfDir/documents.parquet")
-  }
 
   /** buckets with a committed manifest record */
   def committedBuckets(out: Path): Set[Int] = {
     val dir = out.resolve("manifest")
     if (!Files.exists(dir)) return Set.empty
+    val re = "bucket-(\\d+)\\.json".r
     val stream = Files.list(dir)
-    try {
-      val it = stream.iterator()
-      val re = "bucket-(\\d+)\\.json".r
-      var s = Set.empty[Int]
-      while (it.hasNext) {
-        it.next().getFileName.toString match {
-          case re(b) => s += b.toInt
-          case _     => ()
-        }
-      }
-      s
-    } finally stream.close()
+    try stream.iterator().asScala.map(_.getFileName.toString).collect { case re(b) => b.toInt }.toSet
+    finally stream.close()
   }
 
   /** atomic manifest commit: write tmp file, rename into place */

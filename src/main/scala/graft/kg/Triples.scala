@@ -74,37 +74,8 @@ object Triples {
     val ownDocs = docs0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val docs = if (ownDocs) docs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
                else docs0
-    val mentions = Mentions.detect(docs, bc).toDF()
-    val dict0 = AliasDict.build(docs)
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // the dictionary guard: one bounded collect. A dictionary that fits the
-    // driver gets its best candidates and canonical map computed locally; a
-    // KB-scale one keeps the relational side, where the row-count probes
-    // pick broadcast vs shuffle without a config change
-    val (canon0, dictCached) =
-      Canonical.collectIfSmall(dict0.as[AliasRow], Canonical.DriverCcThreshold) match {
-        case Some(rows) =>
-          // both local frames broadcast without a probe and are not
-          // persisted: the best table has at most as many rows as the dict
-          // (≤ DriverCcThreshold = 500k < Link.BroadcastMaxAliases), the map
-          // at most as many as there are distinct entity ids (≤ 500k <
-          // Canonical.BroadcastMaxMapRows)
-          val best = Link.bestCandidatesLocal(spark, rows)
-          val canonMap = Canonical.driverUnionFind(spark, Canonical.edgesFromRows(rows))
-          (Canonical.canonicalize(Link.linkBest(mentions, best, useBroadcast = true),
-            canonMap, useBroadcast = true), Nil)
-        case None =>
-          // the dict subtree (scan + ngram HOFs + distinct agg) feeds BOTH
-          // the link join and the CC edge derivation — persist or compute 2×.
-          // The guard's collect does not fill this cache, so above the guard
-          // the dict is computed once more than below it
-          val dict = dict0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val canonMap = Canonical.connectedComponents(Canonical.edgesFromDict(dict))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          (Canonical.canonicalizeAuto(Link.linkAuto(mentions, dict), canonMap),
-            Seq(dict, canonMap))
-      }
+    val side = DictSide.of(AliasDict.build(docs))
+    val canon0 = side.canonicalize(Mentions.detect(docs, bc).toDF())
     // fromCanonical's union reads canon once PER FAMILY (four different
     // projections, so Catalyst cannot reuse one scan); without a persist the
     // pyramid-inference subtree would be recomputed four times. At cluster scale this
@@ -112,7 +83,7 @@ object Triples {
     // does exactly that per bucket).
     val canon = canon0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     PipelineHandle(fromCanonical(canon),
-      dictCached ++ Seq(canon) ++ (if (ownDocs) Seq(docs.toDF()) else Nil))
+      side.cached ++ Seq(canon) ++ (if (ownDocs) Seq(docs.toDF()) else Nil))
   }
 
   def pipelineFrom(docs: org.apache.spark.sql.Dataset[PyramidDoc],
@@ -120,9 +91,8 @@ object Triples {
     pipelineHandle(docs, model).triples
 
   /** Full pipeline: docs → mentions → link → canonicalize → triples. */
-  def pipeline(spark: SparkSession, sfDir: String,
-               cfg: graft.core.ModelConfig = graft.core.ModelConfig()): DataFrame = {
+  def pipeline(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = DocGen.docs(spark, sfDir)
-    pipelineFrom(docs, Mentions.buildModel(docs, cfg))
+    pipelineFrom(docs, Mentions.buildModel(docs, graft.core.ModelConfig()))
   }
 }

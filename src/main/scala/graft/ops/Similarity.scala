@@ -235,15 +235,6 @@ object Similarity {
         cents = next.toSeq
       }
       e.unpersist()
-      // stage the CONVERGED index to the oracle-visible dir: the k-means
-      // float iteration is not SQL-expressible, but given fixed centroids the
-      // assignment → probe → exact-cosine re-rank IS — the DuckDB gate
-      // re-derives the full candidate set from this table (32 rows).
-      spark.createDataset(cents.zipWithIndex.map { case (c, i) => (i, c) })
-        .toDF("cluster", "centroid")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(graft.sources.ReaderStage.stageDir(sfDir)
-          .resolve("ivf_centroids.parquet").toString)
       cents
     }
 
@@ -306,24 +297,27 @@ object Similarity {
       .write.mode("overwrite").partitionBy("cluster").parquet(indexDir)
   }
 
-  /** Corpus-signature marker next to the index ([[graft.core.Derived.ensure]]):
-    * an in-place corpus regeneration can never serve stale inverted lists
-    * (even within one JVM), a fresh JVM skips the rebuild when the on-disk
-    * index already matches the corpus, and concurrent callers on one
-    * indexDir never interleave overwrite writes.
+  /** Builds the index, then stages the converged centroids to the
+    * oracle-visible `ivf_centroids.parquet` (32 rows: the k-means float
+    * iteration is not SQL-expressible, but given fixed centroids the DuckDB
+    * gate re-derives the assignment → probe → exact-cosine re-rank), both
+    * under one corpus-signature marker ([[graft.core.Derived.ensure]]): an
+    * in-place corpus regeneration can never serve stale inverted lists (even
+    * within one JVM), a fresh JVM skips the rebuild when the on-disk index
+    * already matches the corpus, and concurrent callers on one indexDir
+    * never interleave overwrite writes.
     */
   def ensureIvfIndex(spark: SparkSession, sfDir: String, indexDir: String): Unit =
     graft.core.Derived.ensure(java.nio.file.Paths.get(indexDir, "_CORPUS_SIG"),
-      s"$IvfIndexVersion:k=$IvfClusters:rep=$IvfAssignRep:${corpusSig(sfDir)}")(
-      buildIvfIndex(spark, sfDir, indexDir))
+      s"$IvfIndexVersion:k=$IvfClusters:rep=$IvfAssignRep:${corpusSig(sfDir)}") {
+      buildIvfIndex(spark, sfDir, indexDir)
+      import spark.implicits._
+      spark.createDataset(kmeansCentroids(spark, sfDir).zipWithIndex.map { case (c, i) => (i, c) })
+        .toDF("cluster", "centroid")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(graft.sources.ReaderStage.stageDir(sfDir).resolve("ivf_centroids.parquet").toString)
+    }
 
-  /** Query path over the materialized index: probe clusters are resolved
-    * first (a driver-sized set — the router step of any ANN service), the
-    * index scan is filtered to exactly those partitions, then the same
-    * candidate join + exact re-rank as `annIvf`. Output is row-identical to
-    * `annIvf` (spec-pinned), so the staged-centroid DuckDB oracle covers
-    * this path too.
-    */
   /** the router step alone: (query_id, q, probed cluster) rows,
     * driver-collected — |queries| × probes rows by construction
     */
@@ -338,6 +332,13 @@ object Similarity {
       .as[(Long, Array[Float], Int)].collect()
   }
 
+  /** Query path over the materialized index: probe clusters are resolved
+    * first (a driver-sized set — the router step of any ANN service), the
+    * index scan is filtered to exactly those partitions, then the same
+    * candidate join + exact re-rank as `annIvf`. Output is row-identical to
+    * `annIvf` (spec-pinned), so the staged-centroid DuckDB oracle covers
+    * this path too.
+    */
   def annIvfIndexed(spark: SparkSession, sfDir: String, indexDir: String): DataFrame = {
     import spark.implicits._
     // the probe table is driver-sized by construction (|queries| × probes

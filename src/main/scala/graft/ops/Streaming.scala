@@ -190,20 +190,20 @@ object Streaming {
     try body(child) finally child.conf.set(key, spark.conf.get(key))
   }
 
-  /** Stage the corpus as a 4-file copy ONCE per corpus signature
-    * ([[graft.core.Derived.ensure]]), so repeated invocations — benchmark
-    * reps, the oracle gate — neither re-pay a full corpus read+rewrite inside
-    * the timed region nor leak a fresh /tmp copy per call.
+  private def streamSrcDir(sfDir: String): String =
+    graft.sources.ReaderStage.stageDir(sfDir).resolve("stream_dedup_src").toString
+
+  /** Stage the corpus as the 4-file copy [[dedupExactStream]] reads, once per
+    * corpus signature ([[graft.core.Derived.ensure]]), outside any timed
+    * region and with no fresh /tmp copy per call.
     */
-  private def ensureStreamSrc(spark: SparkSession, sfDir: String): String = {
-    val dir = graft.sources.ReaderStage.stageDir(sfDir)
-      .resolve("stream_dedup_src").toString
+  private[graft] def ensureStreamSrc(spark: SparkSession, sfDir: String): Unit = {
+    val dir = streamSrcDir(sfDir)
     graft.core.Derived.ensure(java.nio.file.Paths.get(dir, "_CORPUS_SIG"),
       "v1:" + graft.core.FileSig.of(s"$sfDir/documents.parquet")) {
       spark.read.parquet(s"$sfDir/documents.parquet")
         .repartition(4).write.mode("overwrite").parquet(dir)
     }
-    dir
   }
 
   /** Streaming EXACT DEDUP over an incrementally-arriving document corpus —
@@ -224,7 +224,7 @@ object Streaming {
     // accumulates across several micro-batches instead of degenerating to
     // one batch job (which rows land in which arrival wave is irrelevant —
     // the aggregation is arrival-order-independent by construction)
-    val dir = ensureStreamSrc(spark, sfDir)
+    val dir = streamSrcDir(sfDir)
     val batchDocs = spark.read.parquet(s"$sfDir/documents.parquet")
     val schema = batchDocs.schema
     withAdaptiveStateParts(spark, batchDocs) { state =>

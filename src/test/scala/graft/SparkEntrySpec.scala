@@ -46,7 +46,8 @@ class SparkEntrySpec extends AnyFunSuite {
   test("stage leaves every marker the queries read, and a second call starts no job") {
     SparkEntry.stage(spark, sfDir)
     val dir = ReaderStage.stageDir(sfDir)
-    Seq(dir.resolve("_STAGED"), dir.resolve("kg/_STAGED"), dir.resolve("kgrun/_RUNSIG"))
+    Seq(dir.resolve("_STAGED"), dir.resolve("kg/_STAGED"), dir.resolve("kgrun/_RUNSIG"),
+      dir.resolve("ivf_index.parquet/_CORPUS_SIG"), dir.resolve("stream_dedup_src/_CORPUS_SIG"))
       .foreach(m => assert(Files.exists(m), s"missing $m"))
     val (_, jobs) = JobCount.during(spark.sparkContext)(SparkEntry.stage(spark, sfDir))
     assert(jobs.isEmpty, jobs.mkString("\n"))
@@ -67,13 +68,17 @@ class SparkEntrySpec extends AnyFunSuite {
       val part = Files.list(five).iterator().asScala
         .find(_.getFileName.toString.endsWith(".parquet")).get
       Files.copy(part, tmpSf.resolve("documents.parquet"))
-      // kg_mentions reads no staged path; the other four read one each and
-      // fail on it instead of staging it
+      Files.copy(java.nio.file.Paths.get(s"$sfDir/embeddings.parquet"),
+        tmpSf.resolve("embeddings.parquet"))
+      // kg_mentions and sim_ann_ivf read no staged path; the others read one
+      // each and fail on it instead of staging it
       Seq("kg_mentions" -> true, "kg_pagerank" -> false, "mm_decode_png" -> false,
-        "src_rasa" -> false, "eval_span_prf" -> false).foreach { case (q, builds) =>
+        "src_rasa" -> false, "eval_span_prf" -> false, "sim_ann_ivf" -> true,
+        "sim_ann_ivf_indexed" -> false, "dedup_exact_stream" -> false).foreach { case (q, builds) =>
         val built = Try(SparkEntry.queries(q)(spark, tmpSf.toString))
         assert(markersUnder(stageDir).isEmpty,
           s"$q staged: ${markersUnder(stageDir).mkString(", ")}")
+        assert(!Files.exists(stageDir.resolve("ivf_centroids.parquet")), s"$q wrote the centroids")
         assert(built.isSuccess == builds, s"$q: $built")
       }
     } finally {

@@ -214,7 +214,7 @@ class KgPipelineSpec extends AnyFunSuite {
   }
 
   test("triples: pipeline output == sequential gold (P = R = 1.0)") {
-    val got = Triples.pipeline(spark, sfDir, ModelConfig())
+    val got = Triples.pipeline(spark, sfDir)
       .collect().map(r => Triple(r.getString(0), r.getString(1), r.getString(2))).toSet
     val gold = GoldRef.triples(goldDocs, model)
     val tp = (got intersect gold).size.toDouble
@@ -296,8 +296,8 @@ class KgPipelineSpec extends AnyFunSuite {
     val dict = AliasDict.build(docs)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
-    assert(rows(Link.link(mentions, dict, useBroadcast = true)) ==
-      rows(Link.link(mentions, dict, useBroadcast = false)))
+    assert(rows(Link.linkBest(mentions, Link.bestCandidates(dict), useBroadcast = true)) ==
+      rows(Link.linkBest(mentions, Link.bestCandidates(dict), useBroadcast = false)))
   }
 
   test("size-guarded joins pick broadcast below the threshold, shuffle above (crossover)") {
@@ -326,6 +326,35 @@ class KgPipelineSpec extends AnyFunSuite {
     assert(hinted(cBelow) && !hinted(cAbove))
     assert(rows(cBelow) == rows(cAbove))
     dict.unpersist(); canonMap.unpersist()
+  }
+
+  test("dictionary side above the guard: the rows of the driver side, and link builds no CC") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val docs = DocGen.docs(spark, sfDir)
+    val mentions = Mentions.detect(docs, spark.sparkContext.broadcast(model)).toDF().cache()
+    val small = AliasDict.build(docs).cache()
+    // single-candidate aliases that no mention text matches: they add no CC
+    // edge and no link, only enough rows to put the dict above the guard
+    val filler = spark.range(Canonical.DriverCcThreshold)
+      .select(concat(lit("~filler "), col("id")).as("alias"),
+        concat(lit("F"), col("id")).as("entity_id"), lit("misc").as("kind"), lit(0.5).as("prior"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+    val below = DictSide.of(small)
+    val above = DictSide.of(small.unionByName(filler))
+    try {
+      assert(below.cached.isEmpty, "below the guard nothing is cached")
+      // above it the dict is cached at once, the canonical map only when the
+      // first canonicalize runs CC: its jobs start there, not in link
+      assert(above.cached.size == 1)
+      val linked = rows(above.link(mentions))
+      assert(above.cached.size == 1, "link alone ran CC")
+      assert(linked.nonEmpty && linked == rows(below.link(mentions)))
+      val (canonicalized, ccJobs) =
+        graft.JobCount.during(spark.sparkContext)(above.canonicalize(mentions))
+      assert(ccJobs.nonEmpty && above.cached.size == 2)
+      assert(rows(canonicalized) == rows(below.canonicalize(mentions)))
+    } finally { above.release(); small.unpersist(); mentions.unpersist() }
   }
 
   test("simhash64 production variant: identical docs collide, bits are stable") {

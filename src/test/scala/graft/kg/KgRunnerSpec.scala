@@ -74,6 +74,31 @@ class KgRunnerSpec extends AnyFunSuite {
       "no-op resume must skip re-compaction")
   }
 
+  test("a bucket written but not committed is reprocessed alone on resume") {
+    val out = Files.createTempDirectory("graft_runner_uncommitted").toString
+    KgRunner.run(spark, sfDir, out, buckets = 4)
+    // a kill after bucket 1's triples were written but before its manifest
+    // commit, and so before compaction
+    val manifest = java.nio.file.Paths.get(out, "manifest")
+    Files.delete(manifest.resolve("bucket-1.json"))
+    Files.delete(manifest.resolve("compact.json"))
+    val resumed = KgRunner.run(spark, sfDir, out, buckets = 4)
+    assert(resumed.processed.map(_.bucket) == Seq(1) && resumed.skipped == Seq(0, 2, 3))
+    val want = tripleSet(Triples.pipeline(spark, sfDir).select("subj", "pred", "obj").distinct())
+    assert(tripleSet(spark.read.parquet(s"$out/triples_compacted")) == want)
+  }
+
+  test("run leaves no model broadcast behind") {
+    import org.apache.spark.BroadcastBlocks
+    val out = Files.createTempDirectory("graft_runner_broadcast").toString
+    def models(ids: Set[Long]) = ids.count(BroadcastBlocks.holds[Mentions.Model])
+    val before = BroadcastBlocks.live()
+    KgRunner.run(spark, sfDir, out, buckets = 4)
+    // no garbage collection in between: the ContextCleaner would free an
+    // unreachable broadcast too, so only an explicit destroy passes reliably
+    assert(models(BroadcastBlocks.live() -- before) == 0)
+  }
+
   test("ensureRun stages once per corpus signature and serves the compacted table") {
     val out = Files.createTempDirectory("graft_runner_ensure").toString
     KgRunner.ensureRun(spark, sfDir, out)

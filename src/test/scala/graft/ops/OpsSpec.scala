@@ -611,6 +611,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("streaming exact dedup == batch dedup (arrival-order-independent aggregation)") {
+    Streaming.ensureStreamSrc(spark, sfDir)
     val stream = Streaming.dedupExactStream(spark, sfDir, name = "dedup_stream_spec").collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val batch = Dedup.exact(spark, sfDir).collect()
