@@ -17,12 +17,18 @@ import graft.core.SparkUtil.{adaptiveParts, materialize, SparkStringOrdering}
   *    deduplicated edge list — no re-distinct here.
   *  - degree profiles are pure two-phase hash aggregations (map-side partial
   *    combine bounds what a hot entity ships across the exchange).
-  *  - PageRank is the classic edge-list contribution loop: edges are
-  *    persisted and joined by `src` each iteration; the per-destination sum
-  *    is a partial-aggregated groupBy, so hub in-degree skew combines
-  *    map-side. Hot-`src` join skew (one hub's million edges in one task) is
-  *    inherent to edge-list PR; at cluster scale the rank side is one row
-  *    per key, so AQE skew-join splitting applies cleanly.
+  *  - PageRank and HITS collect the edge list through the one size guard
+  *    ([[Canonical.collectIfSmall]]) and, at or below
+  *    [[Canonical.DriverCcThreshold]] edges, run their fixed iterations as a
+  *    driver loop over the collected array: one bounded collect instead of a
+  *    join+aggregate job pair per iteration, and no broadcast relation left
+  *    behind in the cached result. Above the guard they run the classic
+  *    edge-list loop: edges are persisted and joined by `src` each
+  *    iteration; the per-destination sum is a partial-aggregated groupBy, so
+  *    hub in-degree skew combines map-side. Hot-`src` join skew (one hub's
+  *    million edges in one task) is inherent to edge-list PR; at cluster
+  *    scale the rank side is one row per key, so AQE skew-join splitting
+  *    applies cleanly.
   *  - two-hop reach is bounded to the top-[[GraphOps.TopHubs]] hubs
   *    (deterministic tie-break), so the quadratic second hop never fans out
   *    from every node; the hub list is driver-sized and broadcast.
@@ -72,9 +78,15 @@ object GraphOps {
     * Output is rank normalized to mean 1 (`rank * N`) rounded to 4 dp —
     * O(1)-magnitude values keep the float rounding far above the ~1e-12
     * summation-order noise between Spark and the oracle engine.
+    *
+    * At or below `driverThreshold` edges the iterations run on the driver
+    * ([[pagerankDriver]]); above it, as the distributed loop below.
     */
-  def pagerank(triples: DataFrame): DataFrame = {
+  def pagerank(triples: DataFrame,
+               driverThreshold: Long = Canonical.DriverCcThreshold): DataFrame = {
     val e = coEdges(triples)
+    val small = Canonical.collectIfSmall(Canonical.edgePairs(e), driverThreshold)
+    if (small.isDefined) return materialize(pagerankDriver(e.sparkSession, small.get))
     val parts = adaptiveParts(e)
     // both loop-invariant tables are persisted ALREADY PARTITIONED on their
     // join keys (partition count scale-adaptive, see adaptiveParts): every
@@ -96,18 +108,39 @@ object GraphOps {
         .select(col("id"),
           (lit((1 - Damping) / n) + lit(Damping) * coalesce(col("m"), lit(0.0))).as("rank"))
     }
-    val out = ranks
-      .select(col("id").as("entity_id"), round(col("rank") * n, 4).as("rank_norm"))
-    materialize(out, nodes, edges)
+    materialize(rankNorm(ranks, n), nodes, edges)
   }
 
-  /** Distinct two-hop out-neighbor count for the top-[[TopHubs]] hubs by
-    * co-occurrence out-degree (ties broken by entity id, so the hub set is
-    * deterministic). The second hop LEFT-joins so a hub whose neighbors are
-    * all sinks still reports `n_two_hop = 0`; `count(col)` skips the null
-    * rows such a hub contributes. Distinct-pairs-then-count keeps the
-    * dedup two-phase instead of a per-group distinct aggregate.
+  /** `(id, rank)` rows as the output rows: rank normalized to mean 1 and
+    * rounded by Spark, on either path. */
+  private def rankNorm(ranks: DataFrame, n: Double): DataFrame =
+    ranks.select(col("id").as("entity_id"), round(col("rank") * n, 4).as("rank_norm"))
+
+  /** the same [[PrIters]] iterations as a driver loop over the collected
+    * edge list. Duplicate edges count in `outdeg` and in the contributions,
+    * as in the distributed join; `N` is the number of distinct endpoints,
+    * and a node no edge reaches keeps `(1-d)/N`. Each iteration evaluates
+    * the distributed loop's expressions; only the order in which a node's
+    * contributions are summed may differ, far below the 4-dp rounding.
     */
+  private def pagerankDriver(spark: SparkSession, edges: Array[(String, String)]): DataFrame = {
+    import spark.implicits._
+    val nodes = endpoints(edges)
+    val n = nodes.length.toDouble
+    val outdeg = edges.groupMapReduce(_._1)(_ => 1L)(_ + _)
+    var rank = nodes.map(_ -> 1.0 / n).toMap
+    for (_ <- 1 to PrIters) {
+      val m = scala.collection.mutable.HashMap.empty[String, Double]
+      edges.foreach { case (u, v) => m(v) = m.getOrElse(v, 0.0) + rank(u) / outdeg(u) }
+      rank = nodes.map(v => v -> ((1 - Damping) / n + Damping * m.getOrElse(v, 0.0))).toMap
+    }
+    rankNorm(nodes.map(v => (v, rank(v))).toSeq.toDF("id", "rank"), n)
+  }
+
+  /** the distinct endpoints of a collected edge list, sorted. */
+  private def endpoints(edges: Array[(String, String)]): Array[String] =
+    edges.flatMap { case (u, v) => Array(u, v) }.distinct.sorted
+
   /** Per-entity triangle participation count over the UNDIRECTED
     * co-occurrence graph (a standard cohesion signal; the denominator of
     * local clustering coefficients).
@@ -196,6 +229,13 @@ object GraphOps {
     e.groupBy(col("src").as("entity_id")).agg(count(lit(1)).as("out_degree"))
       .orderBy(col("out_degree").desc, col("entity_id")).limit(k)
 
+  /** Distinct two-hop out-neighbor count for the top-[[TopHubs]] hubs by
+    * co-occurrence out-degree (ties broken by entity id, so the hub set is
+    * deterministic). The second hop LEFT-joins so a hub whose neighbors are
+    * all sinks still reports `n_two_hop = 0`; `count(col)` skips the null
+    * rows such a hub contributes. Distinct-pairs-then-count keeps the
+    * dedup two-phase instead of a per-group distinct aggregate.
+    */
   def twoHop(triples: DataFrame): DataFrame = {
     val e = coEdges(triples)
     val hubs = topHubs(e, TopHubs)
@@ -221,6 +261,15 @@ object GraphOps {
   /** minimum joint-doc count for a pair to appear in [[coocPmi]]. */
   val PmiMinJoint = 2
 
+  /** undirected (symmetric, self-loop-free, distinct) view of an edge list —
+    * shared by the neighborhood/community ops; mirrored by the oracles'
+    * `sym` CTE. */
+  private def symEdges(e: DataFrame): DataFrame =
+    e.where(col("src") =!= col("dst"))
+      .unionAll(e.where(col("src") =!= col("dst"))
+        .select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+
   /** Entity relatedness by neighborhood overlap: for every entity pair
     * sharing at least one (low-degree) common neighbor in the UNDIRECTED
     * co-occurrence graph, the Jaccard similarity of their neighbor sets —
@@ -237,15 +286,6 @@ object GraphOps {
     * keyed by the shared neighbor, whose fan-out the cap bounds, so no AQE
     * skew handling is even needed.
     */
-  /** undirected (symmetric, self-loop-free, distinct) view of an edge list —
-    * shared by the neighborhood/community ops; mirrored by the oracles'
-    * `sym` CTE. */
-  private def symEdges(e: DataFrame): DataFrame =
-    e.where(col("src") =!= col("dst"))
-      .unionAll(e.where(col("src") =!= col("dst"))
-        .select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-
   def neighborsJaccard(triples: DataFrame): DataFrame = {
     val sym = symEdges(coEdges(triples))
     val deg = sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
@@ -286,12 +326,17 @@ object GraphOps {
     * you'd flip to the standard normalized-double variant — same plan
     * shape, per-iteration scalar norm — and an approximate oracle.
     *
-    * Scale: each half-iteration is one equi-join edge⋈score + one
-    * map-side-combined groupBy sum — identical shuffle profile to
-    * [[pagerank]], with the same persisted pre-partitioned edge table.
+    * Scale: at or below `driverThreshold` edges the iterations run on the
+    * driver ([[hitsDriver]]). Above it, each half-iteration is one
+    * equi-join edge⋈score + one map-side-combined groupBy sum — identical
+    * shuffle profile to [[pagerank]], with the same persisted
+    * pre-partitioned edge table.
     */
-  def hits(triples: DataFrame): DataFrame = {
+  def hits(triples: DataFrame,
+           driverThreshold: Long = Canonical.DriverCcThreshold): DataFrame = {
     val e = coEdges(triples)
+    val small = Canonical.collectIfSmall(Canonical.edgePairs(e), driverThreshold)
+    if (small.isDefined) return materialize(hitsDriver(e.sparkSession, small.get))
     val parts = adaptiveParts(e)
     val nodes = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id"))).distinct()
@@ -312,6 +357,29 @@ object GraphOps {
         coalesce(col("a"), lit(0L)).as("auth"),
         coalesce(col("h"), lit(0L)).as("hub"))
     materialize(out, nodes, bySrc)
+  }
+
+  /** the same [[HitsIters]] iterations as a driver loop over the collected
+    * edge list, duplicate edges counted as in the distributed join. The sums
+    * are exact `Long` additions that throw on overflow, as Spark's ANSI
+    * `sum` does.
+    */
+  private def hitsDriver(spark: SparkSession, edges: Array[(String, String)]): DataFrame = {
+    import spark.implicits._
+    def sums(key: ((String, String)) => String, score: ((String, String)) => Long) = {
+      val acc = scala.collection.mutable.HashMap.empty[String, Long]
+      edges.foreach(e => acc(key(e)) = Math.addExact(acc.getOrElse(key(e), 0L), score(e)))
+      acc
+    }
+    val nodes = endpoints(edges)
+    var hub: collection.Map[String, Long] = nodes.map(_ -> 1L).toMap
+    var auth: collection.Map[String, Long] = Map.empty
+    for (_ <- 1 to HitsIters) {
+      auth = sums(_._2, e => hub(e._1))
+      hub = sums(_._1, e => auth(e._2))
+    }
+    nodes.map(v => (v, auth.getOrElse(v, 0L), hub.getOrElse(v, 0L))).toSeq
+      .toDF("entity_id", "auth", "hub")
   }
 
   /** BFS roots (top hubs) and depth bound for [[bfsDistances]]. */

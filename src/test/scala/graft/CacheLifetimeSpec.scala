@@ -52,10 +52,12 @@ class CacheLifetimeSpec extends AnyFunSuite {
 
   test("graph operators release their intermediates") {
     released(GraphOps.pagerank(triples))
+    released(GraphOps.pagerank(triples, driverThreshold = -1L))
     released(GraphOps.triangles(triples))
     released(GraphOps.components(triples))
     released(GraphOps.neighborsJaccard(triples))
     released(GraphOps.hits(triples))
+    released(GraphOps.hits(triples, driverThreshold = -1L))
     released(GraphOps.labelProp(triples))
     released(GraphOps.labelProp(triples, driverThreshold = -1L))
     released(GraphOps.coocPmi(triples))

@@ -1,6 +1,8 @@
 package graft.kg
 
-import org.apache.spark.sql.SparkSession
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.config.Configurator
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Graph-analytics semantics vs a dependency-free driver-side re-derivation
@@ -28,6 +30,28 @@ class GraphOpsSpec extends AnyFunSuite {
     val kinds = Seq(("a", "instance_of", "k1")) // must be ignored by the graph ops
     (co ++ docs ++ kinds).toDF("subj", "pred", "obj")
   }
+
+  private def co(es: Seq[(String, String)]) = {
+    import spark.implicits._
+    es.map { case (s, o) => (s, "co_occurs_with", o) }.toDF("subj", "pred", "obj")
+  }
+  // ring + a +7 chord: in- and out-degree 2 everywhere, 4 distinct
+  // symmetric neighbors (±1, ±7) per node
+  private val ringN = 64
+  private def ring = co((0 until ringN).flatMap(i => Seq(i -> (i + 1) % ringN, i -> (i + 7) % ringN))
+    .map { case (a, b) => (f"n$a%03d", f"n$b%03d") })
+  // hub ↔ each of m spokes: by symmetry every spoke scores alike, so each
+  // op reduces to two scalars; the hub's m in-edges are the partial-agg
+  // skew, its m out-edges the join skew
+  private val starM = 32
+  private def star = co((1 to starM).flatMap(i => Seq((f"s$i%03d", "hub"), ("hub", f"s$i%03d"))))
+  /** both sides of every driver fast path: below the size guard, and the
+    * distributed loop (a negative threshold skips the guard's collect). */
+  private val paths = Seq(Canonical.DriverCcThreshold, -1L)
+  /** an operator's cached result, collected and released, so a later call
+    * on the same graph plans afresh instead of hitting the cache. */
+  private def collected(df: DataFrame): Array[Row] =
+    try df.collect() finally df.unpersist()
 
   test("degrees: out/in/doc counts with zero-fill for edgeless entities") {
     val got = GraphOps.degrees(triplesDf).collect()
@@ -273,25 +297,8 @@ class GraphOpsSpec extends AnyFunSuite {
   }
 
   test("closed forms on a ring+chord and a hub star: pagerank, hits, kcore") {
-    import spark.implicits._
-    def co(es: Seq[(String, String)]) =
-      es.map { case (s, o) => (s, "co_occurs_with", o) }.toDF("subj", "pred", "obj")
-    // ring + a +7 chord: in- and out-degree 2 everywhere, 4 distinct
-    // symmetric neighbors (±1, ±7) per node
-    val n = 64
-    val ring = co((0 until n).flatMap(i => Seq(i -> (i + 1) % n, i -> (i + 7) % n))
-      .map { case (a, b) => (f"n$a%03d", f"n$b%03d") })
-    // hub ↔ each of m spokes: by symmetry every spoke scores alike, so each
-    // op reduces to two scalars; the hub's m in-edges are the partial-agg
-    // skew, its m out-edges the join skew
-    val m = 32
-    val star = co((1 to m).flatMap(i => Seq((f"s$i%03d", "hub"), ("hub", f"s$i%03d"))))
-    def byEntity(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => r.getString(0) -> r).toMap
-
-    // pagerank: uniform on the ring, exactly 1.0 after rank·N rounding
-    val ringPr = byEntity(GraphOps.pagerank(ring))
-    assert(ringPr.size == n && ringPr.values.forall(_.getDouble(1) == 1.0), ringPr.values.mkString(","))
-    // pagerank on the star: the two-variable recurrence (hub, spoke)
+    val (n, m) = (ringN, starM)
+    def byEntity(df: DataFrame) = collected(df).map(r => r.getString(0) -> r).toMap
     val nd = (m + 1).toDouble
     var (h, sp) = (1.0 / nd, 1.0 / nd)
     for (_ <- 1 to GraphOps.PrIters) {
@@ -299,20 +306,27 @@ class GraphOpsSpec extends AnyFunSuite {
       sp = (1 - GraphOps.Damping) / nd + GraphOps.Damping * h / m
       h = h2
     }
-    val starPr = byEntity(GraphOps.pagerank(star)).view.mapValues(_.getDouble(1)).toMap
-    assert(starPr.size == m + 1)
-    assert(math.abs(starPr("hub") - h * nd) <= 1.01e-4, s"hub ${starPr("hub")} vs ${h * nd}")
-    starPr.removed("hub").values.foreach(r => assert(math.abs(r - sp * nd) <= 1.01e-4, s"spoke $r vs ${sp * nd}"))
-
-    // hits: 2-regular ring gives auth = 2^(2T-1), hub = 2^(2T) everywhere;
-    // the star gives powers of m: hub (m^T, m^T), spokes (m^(T-1), m^T)
     val t = GraphOps.HitsIters
-    val ringHits = byEntity(GraphOps.hits(ring)).values.map(r => (r.getLong(1), r.getLong(2))).toSet
-    assert(ringHits == Set((1L << (2 * t - 1), 1L << (2 * t))))
     val mT = BigInt(m).pow(t).toLong
-    val starHits = byEntity(GraphOps.hits(star)).view.mapValues(r => (r.getLong(1), r.getLong(2))).toMap
-    assert(starHits("hub") == ((mT, mT)))
-    assert(starHits.removed("hub").values.toSet == Set((BigInt(m).pow(t - 1).toLong, mT)))
+
+    for (th <- paths) withClue(s"driverThreshold $th: ") {
+      // pagerank: uniform on the ring, exactly 1.0 after rank·N rounding
+      val ringPr = byEntity(GraphOps.pagerank(ring, th))
+      assert(ringPr.size == n && ringPr.values.forall(_.getDouble(1) == 1.0), ringPr.values.mkString(","))
+      // pagerank on the star: the two-variable recurrence (hub, spoke)
+      val starPr = byEntity(GraphOps.pagerank(star, th)).view.mapValues(_.getDouble(1)).toMap
+      assert(starPr.size == m + 1)
+      assert(math.abs(starPr("hub") - h * nd) <= 1.01e-4, s"hub ${starPr("hub")} vs ${h * nd}")
+      starPr.removed("hub").values.foreach(r => assert(math.abs(r - sp * nd) <= 1.01e-4, s"spoke $r vs ${sp * nd}"))
+
+      // hits: 2-regular ring gives auth = 2^(2T-1), hub = 2^(2T) everywhere;
+      // the star gives powers of m: hub (m^T, m^T), spokes (m^(T-1), m^T)
+      val ringHits = byEntity(GraphOps.hits(ring, th)).values.map(r => (r.getLong(1), r.getLong(2))).toSet
+      assert(ringHits == Set((1L << (2 * t - 1), 1L << (2 * t))))
+      val starHits = byEntity(GraphOps.hits(star, th)).view.mapValues(r => (r.getLong(1), r.getLong(2))).toMap
+      assert(starHits("hub") == ((mT, mT)))
+      assert(starHits.removed("hub").values.toSet == Set((BigInt(m).pow(t - 1).toLong, mT)))
+    }
 
     // kcore on the distributed loop: the ring's symmetric degree 4 >= k, so
     // no node peels; on the star every spoke (degree 1) peels in round 1,
@@ -324,6 +338,41 @@ class GraphOpsSpec extends AnyFunSuite {
       .mapValues(r => (r.getLong(1), r.getInt(2), r.getInt(3))).toMap
     assert(starCore("hub") == ((m.toLong, 2, 0)))
     assert(starCore.size == m + 1 && starCore.removed("hub").values.toSet == Set((1L, 1, 0)))
+  }
+
+  test("pagerank/hits: driver fast path == distributed loop row-for-row") {
+    // the spec graph, the spec graph with a doubled edge (duplicates count
+    // in outdeg and in the sums on both paths), the ring+chord, the hub star
+    val doubled = co(edges :+ ("a" -> "b"))
+    def rows(df: DataFrame) = collected(df).map(_.toSeq).toSet
+    for ((name, g) <- Seq("spec" -> triplesDf, "doubled" -> doubled, "ring" -> ring, "star" -> star))
+      withClue(s"$name: ") {
+        val pr = rows(GraphOps.pagerank(g))
+        assert(pr.nonEmpty && pr == rows(GraphOps.pagerank(g, driverThreshold = -1L)))
+        val hits = rows(GraphOps.hits(g))
+        assert(hits.nonEmpty && hits == rows(GraphOps.hits(g, driverThreshold = -1L)))
+      }
+    // the doubled edge moves the scores: the duplicate is not dropped
+    assert(rows(GraphOps.pagerank(doubled)) != rows(GraphOps.pagerank(triplesDf)))
+    assert(rows(GraphOps.hits(doubled)) != rows(GraphOps.hits(triplesDf)))
+  }
+
+  test("hits: a Long overflow fails loudly on both paths") {
+    // a ↔ b, each direction k times: scores grow as k^(2T), past Long.MaxValue
+    val k = 1500
+    val g = co(Seq.fill(k)(Seq("a" -> "b", "b" -> "a")).flatten)
+    assert(BigInt(k).pow(2 * GraphOps.HitsIters) > Long.MaxValue)
+    def arithmetic(t: Throwable): Boolean =
+      t != null && (t.isInstanceOf[ArithmeticException] || arithmetic(t.getCause))
+    // the distributed path's failing task is expected: keep its stack
+    // traces out of the test log
+    val quiet = Seq("org.apache.spark.executor.Executor", "org.apache.spark.scheduler.TaskSetManager")
+    val levels = quiet.map(l => l -> LogManager.getLogger(l).getLevel)
+    quiet.foreach(Configurator.setLevel(_, Level.OFF))
+    try for (th <- paths) withClue(s"driverThreshold $th: ") {
+      val err = intercept[Exception](GraphOps.hits(g, th))
+      assert(arithmetic(err), err.toString)
+    } finally levels.foreach { case (l, lv) => Configurator.setLevel(l, lv) }
   }
 
   test("coocPmi: ln(n_ab·N / (n_a·n_b)) at 4 dp, min-joint filter") {
