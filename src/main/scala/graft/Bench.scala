@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import graft.core.{Fmt, ModelConfig}
-import graft.kg.{DocGen, Mentions, PyramidDoc, Triples}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.{Fmt, LoadProbe, ModelConfig}
 
 /** Driver benchmark main: runs every SparkEntry query (forced to full
   * materialization via the noop sink) plus the amplified KG-pipeline
@@ -20,10 +19,8 @@ import graft.kg.{DocGen, Mentions, PyramidDoc, Triples}
   */
 object Bench {
 
-  def force(df: DataFrame): Long = {
+  def force(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
-    -1L
-  }
 
   def time[T](body: => T): (T, Double) = {
     val t0 = System.nanoTime()
@@ -31,23 +28,17 @@ object Bench {
     (r, (System.nanoTime() - t0) / 1e9)
   }
 
-  // external-contention instrumentation lives in graft.core.LoadProbe
-  // (shared with ScalingBench) + graft.core.StealProbe
-  private def externalLoad(selfCpus: Double): Double =
-    graft.core.LoadProbe.externalLoad(selfCpus)
-  private type LoadSampler = graft.core.LoadProbe.Sampler
-
   /** "12.30" -> "12.3", "1.00" -> "1" — JSON numbers, minimum bytes. */
   private def trim(s: String): String =
     if (s.contains('.')) s.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse else s
   private def t2(d: Double): String = trim(Fmt.f2(d))
   private def t1(d: Double): String = trim(Fmt.f1(d))
 
-  /** One amplified KG-pipeline headline, rep-protected: input prep (docs
-    * materialization, model/lexicon build, token count) runs ONCE outside the
-    * timed region; the timed pipeline then runs once per interleaved pass and
-    * the MIN across passes is recorded (same noise defense as the battery —
-    * back-to-back reps share a contention window, interleaved ones don't).
+  /** One amplified KG-pipeline headline ([[KgHeadline]]), rep-protected:
+    * input prep runs ONCE outside the timed region; the timed pipeline then
+    * runs once per interleaved pass and the MIN across passes is recorded
+    * (same noise defense as the battery — back-to-back reps share a
+    * contention window, interleaved ones don't).
     */
   private final class Headline(val tag: String, cfg: ModelConfig, val amp: Int,
                                spark: SparkSession, sfDir: String, selfCpus: Double) {
@@ -59,49 +50,33 @@ object Bench {
     var tokens: Long = -1L
     var failed = false
     val repSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
-    private var docs: Dataset[PyramidDoc] = _
-    private var model: Mentions.Model = _
+    private var kg: KgHeadline = _
 
     def prepare(): Unit =
       try {
-        docs = DocGen.amplifiedDocs(spark, sfDir, amp).cache()
-        docsN = docs.count()
-        model = Mentions.buildModel(docs, cfg)
-        tokens = docs.toDF()
-          .selectExpr("sum(size(filter(spans, s -> s.kind = 'text')))")
-          .head().getLong(0)
+        kg = new KgHeadline(spark, sfDir, amp, cfg, selfCpus)
+        docsN = kg.docsN
+        tokens = kg.tokens
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $tag headline prep FAILED: ${e.getMessage}")
           failed = true
-      } finally if (docs != null) docs.unpersist() // each rep re-caches its own
+      }
 
+    // each rep caches its own corpus and releases everything it cached, so
+    // only one headline's docs occupy storage memory during any timed region
+    // and the battery queries run cache-clean
     def rep(): Unit = if (!failed)
       try {
-        // each rep caches + materializes ITS OWN corpus outside the timed
-        // region (the battery's clearCache() between queries unregisters any
-        // earlier registration anyway), and drops it again afterwards — so
-        // only one headline's docs occupy storage memory during any timed
-        // region, and the other headline/battery queries run cache-clean
-        docs.cache()
-        docs.count()
-        val sampler = new LoadSampler(selfCpus)
-        val st0 = graft.core.StealProbe.snapshot()
-        val h = Triples.pipelineHandle(docs, model)
-        val (_, s) = time(force(h.triples))
-        val l = sampler.stop()
-        val st = graft.core.StealProbe.pct(st0, graft.core.StealProbe.snapshot())
-        val t = h.triples.count() // cached subtrees — count is cheap
-        h.unpersistAll()
-        repSecs += s
-        if (s < sec) { sec = s; load = l; steal = st; triples = t }
+        val r = kg.rep()
+        repSecs += r.sec
+        if (r.sec < sec) { sec = r.sec; load = r.load; steal = r.steal; triples = r.triples }
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $tag headline rep FAILED: ${e.getMessage}")
           failed = true
-      } finally docs.unpersist()
+      }
 
-    def cleanup(): Unit = if (docs != null) docs.unpersist()
     def secOrSentinel: Double = if (failed || sec == Double.MaxValue) -1.0 else sec
     private def perSec(n: Long): String =
       t1(if (secOrSentinel > 0) n / secOrSentinel else -1.0)
@@ -167,7 +142,7 @@ object Bench {
     require(reps >= 1, s"GRAFT_BENCH_REPS must be >= 1, got $reps")
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
-    // the full battery, always (QueryBench times a subset)
+    // the full battery, always (`Perf query` times a subset)
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
     // per query: (best sec, ext_load of the best rep)
     // name -> (best sec, ext load at best, steal% at best)
@@ -183,7 +158,7 @@ object Bench {
     for (pass <- 1 to reps) {
       names.foreach { case (name, fn) =>
         if (!failed.contains(name)) {
-          val load0 = externalLoad(selfCpus)
+          val load0 = LoadProbe.externalLoad(selfCpus)
           val st0 = graft.core.StealProbe.snapshot()
           val group = s"bench-$name"
           val (ok, sec) = time {
@@ -215,7 +190,7 @@ object Bench {
                 false
             }
           }
-          val extLoad = (load0 + externalLoad(selfCpus)) / 2
+          val extLoad = (load0 + LoadProbe.externalLoad(selfCpus)) / 2
           val steal = graft.core.StealProbe.pct(st0, graft.core.StealProbe.snapshot())
           // materialized operators return their result cached, and the eval
           // slice docs are session-cached; drop them between queries so
@@ -225,15 +200,12 @@ object Bench {
         }
       }
       // headline rep at the tail of each battery pass — prep once (before
-      // rep 1), timed region per pass, min across passes. clearCache() above
-      // runs BETWEEN queries only, so the prepared docs caches survive the
-      // whole interleaving; pipeline intermediates are dropped per rep.
+      // rep 1), timed region per pass, min across passes; each rep leaves
+      // the cache as it found it, as clearCache() does between queries
       if (pass == 1) { primary.prepare(); secondary.prepare() }
       primary.rep()
       secondary.rep()
     }
-    primary.cleanup()
-    secondary.cleanup()
     spark.catalog.clearCache()
     // a later-pass failure (a contention-window timeout, say) must not throw
     // away a valid earlier-pass measurement — report the best successful rep

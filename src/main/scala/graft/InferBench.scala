@@ -2,15 +2,12 @@ package graft
 
 import graft.core._
 
-/** Dev utility: single-threaded Pyramid-inference microbenchmark
-  * (usage: runMain graft.InferBench [reps] [sentences] [cfg: default|genia]).
-  *
-  * Prints tokens/s per rep plus a decode checksum — the checksum must be
-  * invariant across kernel-level optimizations (the kernels block over
-  * output rows and tokens, never inside one row's sum, which preserves each
-  * row's FP accumulation order bit-exactly). InferBenchSpec pins it at 192
-  * sentences. Compare the median of the later reps: the blocked SIMD
-  * kernels need about 10 reps to reach steady state.
+/** The seeded single-threaded Pyramid-inference workload behind `Perf
+  * kernel` and the scaling mode's machine ceiling, and its decode checksum,
+  * which must be invariant across kernel-level optimizations (the kernels
+  * block over output rows and tokens, never inside one row's sum, which
+  * preserves each row's FP accumulation order bit-exactly). InferBenchSpec
+  * pins it at 192 sentences.
   */
 object InferBench {
   /** The seeded weights (seed 42, 8 kinds), a `vocabSize`-word lexicon and
@@ -51,21 +48,5 @@ object InferBench {
       i += 1
     }
     checksum
-  }
-
-  def main(args: Array[String]): Unit = {
-    val reps = args.lift(0).map(_.toInt).getOrElse(5)
-    val nSent = args.lift(1).map(_.toInt).getOrElse(192)
-    val cfg = if (args.lift(2).contains("genia")) ModelConfig.genia else ModelConfig()
-    val (inf, sents) = setup(cfg, nSent)
-    val nTok = sents.map(_.length.toLong).sum
-    var sum = 0L
-    for (r <- 0 until reps) {
-      val t0 = System.nanoTime()
-      sum = checksum(inf, sents)
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[inferbench] rep $r: ${nTok / sec}%.0f tokens/s ($sec%.3f s, $nTok tokens)")
-    }
-    println(s"[inferbench] checksum=$sum")
   }
 }

@@ -133,8 +133,7 @@ object SparkEntry {
       val mentions = Mentions.detect(docs, modelBc(s, dir)).toDF()
       DictSide.of(AliasDict.build(docs)).link(mentions)
     }),
-    "kg_canonical_map" -> ((s, dir) =>
-      Canonical.connectedComponents(Canonical.edgesFromDict(AliasDict.build(DocGen.docs(s, dir))))),
+    "kg_canonical_map" -> ((s, dir) => DictSide.of(AliasDict.build(DocGen.docs(s, dir))).canonicalMap),
     "kg_triples" -> ((s, dir) => {
       // shared session model broadcast (same BcRegistry slot as kg_mentions/
       // kg_linked) instead of Triples.pipeline's fresh buildModel: skips a

@@ -1,7 +1,7 @@
 package graft.core
 
-/** Shared external-contention instrumentation (Bench and ScalingBench —
-  * one implementation, one fix point).
+/** External-contention instrumentation for Bench, `graft.KgHeadline` and
+  * perfbench — one implementation, one fix point.
   *
   * [[externalLoad]] is the 1-min host load average minus this JVM's own
   * requested cores: nonzero means other PROCESSES on this host compete.

@@ -93,7 +93,7 @@ object Canonical {
     * per star round). The rows are edges for CC here, `GraphOps.labelProp`
     * and `GraphOps.kcore`, and alias-dictionary rows for the dictionary side
     * of every linker ([[DictSide.of]]). It sits below the crossover
-    * CcBench measured (BENCH/CC_BENCH.md). The distributed loops and the
+    * `graft.Perf cc` measured (BENCH/CC_BENCH.md). The distributed loops and the
     * relational dictionary side remain the path for KB-scale inputs.
     */
   val DriverCcThreshold = 500000L

@@ -30,7 +30,7 @@ import graft.core.ModelConfig
   */
 object KgStream {
 
-  // memory-sink query names must be unique within a JVM (QueryBench and
+  // memory-sink query names must be unique within a JVM (`Perf query` and
   // Bench's passes repeat queries in one session; a finished query's name
   // stays registered)
   private val runSeq = new java.util.concurrent.atomic.AtomicInteger

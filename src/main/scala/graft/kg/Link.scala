@@ -98,6 +98,10 @@ final class DictSide private (dict: DataFrame, rows: Option[Array[AliasRow]]) {
 
   def link(mentions: DataFrame): DataFrame = Link.linkBest(mentions, best, bestBroadcast)
 
+  /** (entity_id, canonical_id) for every entity on a candidate edge: a local
+    * frame below the guard, else CC's map, persisted until [[release]] */
+  def canonicalMap: DataFrame = canonMap
+
   /** [[link]], then `canonical_id` from the canonical map */
   def canonicalize(mentions: DataFrame): DataFrame =
     Canonical.canonicalize(link(mentions), canonMap, mapBroadcast)

@@ -7,9 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Connected components: the driver union-find and the distributed star loop
   * agree on ids that Spark's string order and `String.compareTo` order
   * differently, the star loop fails loudly when it runs out of rounds, the
-  * driver size guard collects only the inputs that fit, and the driver
+  * driver size guard collects only the inputs that fit, the driver
   * dictionary side (best candidates, edges, union-find) equals the relational
-  * one.
+  * one, and both paths give the closed form on `Perf cc`'s synthetic graph.
   */
 class CanonicalSpec extends AnyFunSuite {
   private lazy val spark: SparkSession = SparkSession.builder()
@@ -98,6 +98,16 @@ class CanonicalSpec extends AnyFunSuite {
     assert(canon.count(_._1.startsWith("X")) == Canonical.MaxCandidatesPerAlias)
     assert(canon.keySet.count(_.startsWith(s"X$bmp")) == 10)
     assert(canon(s"U$astral") == "E1" && canon(s"U$bmp") == "E1" && !canon.contains("E9"))
+  }
+
+  test("both paths give the closed-form components on the cc mode's chain+star graph") {
+    val edges = graft.Perf.Cc.syntheticEdges(spark, 2000L, 64)
+    def map(threshold: Long) = Canonical.connectedComponents(edges, driverThreshold = threshold)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val star = map(0L)
+    val driver = map(Canonical.DriverCcThreshold)
+    assert(star.size == 2000 && star.values.toSet.size == 32)
+    assert(driver == star)
   }
 
   test("star loop throws when it has not converged after maxIter rounds") {
